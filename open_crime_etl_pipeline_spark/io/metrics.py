@@ -8,7 +8,9 @@ Observation API collects named aggregates DURING the action that
 writes the data: the metrics ride the same pass over the rows, so at
 100 TB the accounting costs zero additional scans, and the numbers are
 guaranteed to describe exactly the rows the action processed (no
-read-back race with concurrent writers).
+read-back race with concurrent writers). ``unique`` cannot ride an
+Observation (distinct aggregates would need a shuffle), so uniqueness
+stays a dedicated groupBy query (`dup_key_check`).
 """
 
 from __future__ import annotations
@@ -41,3 +43,11 @@ def observe_batch(
         )
         metrics.append(F.approx_count_distinct(key).alias("approx_distinct_keys"))
     return df.observe(obs, *metrics), obs
+
+
+def assert_not_null(metrics: dict) -> dict:
+    """Raise if ``observe_batch``'s ``null_keys`` metric is non-zero;
+    return the metrics otherwise. Call after the action."""
+    if metrics.get("null_keys"):
+        raise ValueError(f"not-null violation in observed write: {metrics}")
+    return metrics

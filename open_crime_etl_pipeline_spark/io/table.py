@@ -10,7 +10,7 @@ lakehouse recipe (the Delta Lake / Iceberg protocol, public knowledge):
 
     table_root/
       _txn_log/00000000000000000001.json   one entry per committed version
-      data/v00000000000000000001/          immutable snapshot directories
+      data/snap-<uuid>/                    immutable snapshot directories
 
 * Writers never touch existing data: each commit writes a NEW snapshot
   directory, then publishes it with an atomic exclusive create of the
@@ -20,8 +20,8 @@ lakehouse recipe (the Delta Lake / Iceberg protocol, public knowledge):
   they can never observe a partial write; an interrupted commit leaves
   only an orphaned uncommitted directory (cleaned by ``vacuum``).
 * Optimistic concurrency: if the log entry already exists, another
-  writer won the version; the snapshot directory is renamed forward and
-  the commit retries against the next version.
+  writer won the version; the commit re-publishes the same ``snap_id``
+  under the next version number (nothing is renamed).
 * Time travel: ``read(version=n)`` while the snapshot is retained.
 
 At 100 TB the snapshot write is still proportional to the MERGED OUTPUT

@@ -580,7 +580,7 @@ def semdedup(
     is the O(N·k) term — with the paper's k ∝ N it is the asymptotic
     bottleneck, and the Catalyst crossJoin form pays ~64 array-lambda
     ops per (vector, centroid): measured 15.8x wall at 10x corpus
-    (tools/scale_check_llm2.py) vs near-linear with the matmul.
+    (``git show a3c7b0a:tools/scale_check_llm2.py``) vs near-linear.
     ``assign="sql"`` keeps the ivf_assign crossJoin for cross-checks.
     """
     from .dedup import cluster_representatives

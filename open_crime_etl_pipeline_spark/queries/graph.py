@@ -250,7 +250,7 @@ def connected_components_converged(spark: SparkSession, sf_dir: str) -> DataFram
         "O(d). On the short-diameter co-purchase graph both variants "
         "cost similar wall-clock; on a planted diameter-2000 path "
         "graph star converges in 12 rounds where min-propagation "
-        "needs 2000 (tools/scale_check_r5.py measures the gap). At "
+        "needs 2000 (git show a3c7b0a:tools/scale_check_r5.py). At "
         "the fixpoint labels are the per-component minima — a pure "
         "function of the graph — so the SAME unrolled min-propagation "
         "oracle as connected_components_converged states the result "

@@ -794,9 +794,9 @@ def bm25_retrieval_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def bm25_over(docs: DataFrame, k: int = 10) -> DataFrame:
     """bm25_retrieval_topk's full pipeline over an arbitrary
-    (doc_id, text) frame — shared with tools/scale_check_r5.py so the
-    scale proof measures exactly what the registered query runs, and
-    with hybrid_rrf_retrieval (k=50 lexical leg)."""
+    (doc_id, text) frame — shared with hybrid_rrf_retrieval (k=50
+    lexical leg) and with the scale proof, which measured exactly what
+    the query runs (``git show a3c7b0a:tools/scale_check_r5.py``)."""
     from pyspark.sql import Window
 
     from ...checkpointing import pin

@@ -84,9 +84,9 @@ def pca_top_component_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def pca_projection_over(emb: DataFrame) -> DataFrame:
     """pca_top_component_projection's full pipeline over an arbitrary
-    (vec_id, embedding, label) frame — shared with
-    tools/scale_check_r5b.py so the scale proof measures exactly what
-    the registered query runs."""
+    (vec_id, embedding, label) frame — shared with the scale proof
+    (``git show a3c7b0a:tools/scale_check_r5b.py``) so it measured
+    exactly what the registered query runs."""
     from ...operators import linalg as LA
 
     cov = LA.covariance_pairs(emb, "embedding", d=64)
@@ -596,9 +596,9 @@ def _gd_features(docs: DataFrame) -> DataFrame:
 
 def logistic_gd_over(docs: DataFrame) -> DataFrame:
     """logistic_regression_gd_steps' full two-step training loop over
-    an arbitrary (doc_id, n_chars, text) frame — shared with
-    tools/scale_check_r5.py so the scale proof measures exactly what
-    the registered query runs."""
+    an arbitrary (doc_id, n_chars, text) frame — shared with the
+    scale proof (``git show a3c7b0a:tools/scale_check_r5.py``) so it
+    measured exactly what the registered query runs."""
     spark = docs.sparkSession
     w2, b2 = _gd_train_params(docs)
     names = ["bias", "w_spark", "w_data", "w_slow"]

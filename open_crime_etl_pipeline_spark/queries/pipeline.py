@@ -1591,7 +1591,7 @@ def manifest_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
         "expression, so a hash match proves the update touched exactly "
         "the matching rows, applied exactly the SET, and no others. "
         "Pre-update-row SET semantics, NULL-predicate survival, and "
-        "conflict refusal are pinned in test_manifest_round11.py.",
+        "conflict refusal are pinned in test_manifest_cdf.py.",
     tags=("sink", "datasource", "pipeline", "dml"),
 )
 def manifest_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1693,7 +1693,7 @@ def manifest_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         "values, so their min/max are reportable; LONG string stats "
         "are truncated prefix BOUNDS (round-11 stats_trunc_len), "
         "which table_stats OMITS rather than report a bound as a "
-        "value (pinned in test_manifest_round11.py on a documents "
+        "value (pinned in test_manifest_sink.py on a documents "
         "table). The oracle computes the same aggregates relationally "
         "in DuckDB, so a hash match proves the metadata path equals "
         "the scan path.",
@@ -1787,7 +1787,7 @@ def manifest_count_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dates are emitted as yyyy-MM-dd strings on both sides "
         "(pandas DATE-dtype divergence). The no-schema path for "
         "read_manifest/table_changes/DML defaults is pinned in "
-        "test_manifest_round11.py.",
+        "test_manifest_sink.py.",
     tags=("sink", "datasource", "pipeline", "schema"),
 )
 def manifest_recorded_schema_read(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -210,7 +210,7 @@ def ewma_smoothing_per_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(~1e-12) rather than bit-for-bit; outputs round at 6dp with six "
     "orders of magnitude of margin, making the differential a proof "
     "that chunking the recurrence across tasks preserves its values "
-    "(tools/scale_check_r6.py measures the fold-infeasible regime).",
+    "(git show a3c7b0a:tools/scale_check_r6.py times the slow fold).",
     tags=("timeseries", "scan"),
 )
 def ewma_affine_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -77,7 +77,7 @@ its evolution path — the Delta transaction-log shape:
   can never both own a sequence number: the loser re-reads the table
   state, rebases its delta, and retries. Commit cost is O(delta), not
   O(live shards), and stays flat as the table grows (receipt:
-  ``tools/scale_check_r10.py``).
+  ``git show a3c7b0a:tools/scale_check_r10.py``).
 - **Periodic checkpoints**: every ``checkpoint_every`` commits
   (default 10) the winner also materializes the full state as
   ``manifests/checkpoint-<seq>.json``; readers reconstruct any

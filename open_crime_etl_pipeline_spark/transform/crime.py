@@ -11,8 +11,8 @@ Semantics preserved:
 - typed casts to the silver schema (the reference delegated coercion
   to the warehouse at INSERT; at 100 TB casts happen once, here)
 
-Invalid numerics become NULL (Spark non-ANSI cast), matching the
-pandas→DB behavior of coercing unparseable values to NULL.
+Unparseable numerics and timestamps become NULL, as pandas→DB coercion
+does: ``try_cast``/``try_to_timestamp`` never raise under ANSI mode.
 """
 
 from __future__ import annotations
@@ -42,17 +42,17 @@ def transform_crime_page(raw: DataFrame) -> DataFrame:
         df = df.withColumn(
             col,
             F.coalesce(
-                F.to_timestamp(F.col(col), SOCRATA_TS_FORMAT),
-                F.col(col).cast("timestamp"),
+                F.try_to_timestamp(F.col(col), F.lit(SOCRATA_TS_FORMAT)),
+                F.col(col).try_cast("timestamp"),
             ),
         )
     for col in CRIME_INT_COLUMNS:
         # Socrata integers sometimes arrive as "123.0" — double-then-int
         # matches pandas' lenient coercion.
-        df = df.withColumn(col, F.col(col).cast("double").cast("int"))
+        df = df.withColumn(col, F.col(col).try_cast("double").try_cast("int"))
     for col in CRIME_DOUBLE_COLUMNS:
         # NaN → NULL (P3): silver never carries NaN.
-        cast = F.col(col).cast("double")
+        cast = F.col(col).try_cast("double")
         df = df.withColumn(col, F.when(F.isnan(cast), F.lit(None)).otherwise(cast))
 
     ordered = [f.name for f in CRIME_SILVER_SCHEMA.fields]

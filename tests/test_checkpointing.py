@@ -2,7 +2,9 @@
 item 4): by default every lineage cut is a fast non-fault-tolerant
 ``localCheckpoint``; with ``spark.openCrimeEtl.reliableCheckpointDir``
 set, the same cuts go through reliable ``DataFrame.checkpoint()`` so a
-lost executor on a real cluster does not kill a multi-hour job."""
+lost executor on a real cluster does not kill a multi-hour job. Also
+pins ``fan_out``, the guard that widens narrow frames before wide
+stages."""
 
 from __future__ import annotations
 
@@ -13,6 +15,7 @@ from pyspark.sql import functions as F
 from open_crime_etl_pipeline_spark.checkpointing import CONF_KEY, pin
 from open_crime_etl_pipeline_spark.operators.graph import pagerank
 from open_crime_etl_pipeline_spark.operators.scan import ewma_affine_scan
+from open_crime_etl_pipeline_spark.partitioning import fan_out
 
 
 def _edges(spark):
@@ -91,3 +94,24 @@ def test_pin_resets_runaway_inherited_stats(spark):
     # 12 rounds of v doubling: v = id * 2 * 2^12
     rows = {r["id"]: r["v"] for r in cur.collect()}
     assert rows[3] == 3 * 2 * 2**12 and len(rows) == 64
+
+
+class TestFanOut:
+    def test_widens_narrow_frame(self, spark):
+        df = spark.range(100).coalesce(1)
+        out = fan_out(df)
+        assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+        # same rows, only placement changed
+        assert sorted(r.id for r in out.collect()) == list(range(100))
+
+    def test_noop_on_wide_frame(self, spark):
+        n = spark.sparkContext.defaultParallelism
+        df = spark.range(100).repartition(n + 2)
+        out = fan_out(df)
+        # never repartitions DOWN — existing parallelism is preserved
+        assert out.rdd.getNumPartitions() == n + 2
+        assert out is df  # the guard is a true no-op, not a new plan
+
+    def test_explicit_floor(self, spark):
+        df = spark.range(10).coalesce(1)
+        assert fan_out(df, min_parts=4).rdd.getNumPartitions() == 4

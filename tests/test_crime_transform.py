@@ -112,3 +112,29 @@ def test_corrupt_records_quarantined_not_dropped(spark, tmp_path):
     assert "truncated-garbage" in bad_rows[0]._corrupt_record
     # default (non-capturing) scan keeps its exact historical schema
     assert "_corrupt_record" not in read_crime_pages(spark, str(tmp_path)).columns
+
+
+def test_unparseable_values_become_null_under_ansi(spark, tmp_path):
+    """Spark 4 runs with ANSI mode on by default. Garbage in an int,
+    double or timestamp column must land as NULL instead of raising,
+    and the µs-fraction and no-fraction ISO forms must still parse."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    page = [
+        {"id": "13000010", "beat": "N/A", "latitude": "abc",
+         "date": "not-a-date", ":updated_at": "2025-03-09T10:00:00.000"},
+        {"id": "13000011", "date": "2025-03-01T12:34:56.789123"},
+        {"id": "13000012", "date": "2025-03-01T12:34:56"},
+    ]
+    with gzip.open(tmp_path / "part-0000.json.gz", "wt") as f:
+        json.dump(page, f)
+    silver = transform_crime_page(read_crime_pages(spark, str(tmp_path)))
+    rows = {r.crime_id: r for r in silver.collect()}
+    garbage = rows["13000010"]
+    assert garbage.beat is None
+    assert garbage.latitude is None
+    assert garbage.date_of_occurrence is None
+    assert garbage.source_updated_on.isoformat() == "2025-03-09T10:00:00"
+    micros = rows["13000011"].date_of_occurrence
+    assert micros.isoformat() == "2025-03-01T12:34:56.789123"
+    plain = rows["13000012"].date_of_occurrence
+    assert plain.isoformat() == "2025-03-01T12:34:56"

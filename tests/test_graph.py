@@ -1,4 +1,5 @@
-"""Iterative PageRank + triangle counting (SURVEY §2 [EXT] graph)."""
+"""Iterative PageRank + triangle counting (SURVEY §2 [EXT] graph), and
+star contraction's canonical-input hint."""
 
 from __future__ import annotations
 
@@ -259,3 +260,42 @@ def test_star_cc_handles_duplicates_selfloops_orientation(spark):
     assert sorted((r.node, r.label) for r in labels.collect()) == [
         (2, 2), (3, 2), (4, 2), (5, 5), (9, 5)
     ]
+
+
+class TestTriangleOrientedPin:
+    def test_counts_unchanged(self, spark):
+        """oriented is pinned (localCheckpoint), no longer cached: the
+        count must match the direct closed form on a known graph."""
+        from open_crime_etl_pipeline_spark.operators.graph import triangle_count
+
+        # K4 (4 triangles... actually C(4,3)=4) plus a pendant edge
+        edges = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5)]
+        df = spark.createDataFrame(edges, "a long, b long")
+        spark.catalog.clearCache()  # shared session: isolate the check
+        row = triangle_count(df).collect()[0]
+        assert row.n_edges == 7
+        assert row.n_triangles == 4
+        jsc = spark._jsparkSession.sharedState().cacheManager()
+        assert jsc.isEmpty()
+
+
+class TestStarAssumeCanonical:
+    def test_canonical_hint_matches_default(self, spark):
+        """Wave 5: on an already-canonical (a < b, deduplicated,
+        self-loop-free, materialized) edge set, assume_canonical=True
+        must return the identical fixpoint labels and round count as
+        the default canonicalizing path."""
+        from open_crime_etl_pipeline_spark.checkpointing import pin
+        from open_crime_etl_pipeline_spark.operators.graph import (
+            connected_components_star,
+        )
+
+        rows = [(1, 2), (2, 3), (5, 6), (8, 9), (3, 9)]
+        edges = pin(spark.createDataFrame(rows, "a long, b long"))
+        ref_labels, ref_rounds = connected_components_star(edges)
+        got_labels, got_rounds = connected_components_star(
+            edges, assume_canonical=True
+        )
+        ref = sorted(map(tuple, ref_labels.collect()))
+        got = sorted(map(tuple, got_labels.collect()))
+        assert got == ref and got_rounds == ref_rounds

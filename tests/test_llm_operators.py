@@ -1,9 +1,12 @@
 """LLM-data operator tests: LSH recall vs exact ground truth,
-multimodal stub plumbing, hash determinism (SURVEY §2.11)."""
+multimodal stub plumbing, hash determinism (SURVEY §2.11). The Test*
+classes at the end pin rewritten operators (dedup, CDC, BM25, language
+ID, GD, PQ) against their earlier formulations."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from open_crime_etl_pipeline_spark.io.readers import load_table
@@ -11,6 +14,11 @@ from open_crime_etl_pipeline_spark.operators import dedup as D
 from open_crime_etl_pipeline_spark.operators import multimodal as M
 from open_crime_etl_pipeline_spark.operators import similarity as S
 from open_crime_etl_pipeline_spark.operators import textstats as TS
+from open_crime_etl_pipeline_spark.operators.dedup import (
+    duplicate_ngram_fraction,
+    hashed_shingles,
+    tokens,
+)
 
 
 @pytest.fixture(scope="module")
@@ -2026,3 +2034,345 @@ def test_prefix_filter_core_shared_pair_sets(spark, near_corpus):
         ).collect()
     }
     assert ng == pf and len(ng) > 0
+
+
+@pytest.fixture(scope="module")
+def small_docs(spark):
+    rows = [
+        (1, "a b c d e f"),
+        (2, "a b c x y z"),
+        (3, "unique words only here now"),
+        (4, "a b c d e f"),  # exact dup of 1
+        (5, ""),  # sub-shingle doc: excluded by the operator
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+class TestDuplicateNgramWindowRewrite:
+    def test_matches_join_formulation(self, spark, small_docs):
+        """The window-count rewrite must equal the original
+        groupBy+join-back formulation row for row."""
+        out = duplicate_ngram_fraction(small_docs, "doc_id", "text").collect()
+        # reference: the pre-r12 join formulation, stated inline
+        src = small_docs.filter(F.size(tokens("text")) >= 3)
+        sh = src.select(
+            F.col("doc_id"),
+            F.explode(hashed_shingles("text", 3)).alias("__sh"),
+        )
+        dfreq = sh.groupBy("__sh").agg(F.count("*").alias("__dfreq"))
+        ref = (
+            sh.join(dfreq, "__sh")
+            .groupBy("doc_id")
+            .agg(
+                F.count("*").alias("n_shingles"),
+                F.sum((F.col("__dfreq") > 1).cast("long")).alias("n_dup"),
+            )
+            .select(
+                "doc_id", "n_shingles", "n_dup",
+                F.round(
+                    F.col("n_dup").cast("double")
+                    / F.col("n_shingles").cast("double"), 6
+                ).alias("dup_frac"),
+            )
+            .collect()
+        )
+        assert sorted(map(tuple, out)) == sorted(map(tuple, ref))
+
+    def test_hot_shingle_no_quadratic_rows(self, spark):
+        """A shingle shared by k docs contributes k posting rows (one
+        window partition of size k), never k² — the inverted-index
+        contract the rewrite must preserve."""
+        rows = [(i, "common one two") for i in range(50)]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        out = duplicate_ngram_fraction(df, "doc_id", "text")
+        got = out.collect()
+        assert len(got) == 50
+        assert all(r.n_shingles == 1 and r.n_dup == 1 for r in got)
+
+
+class TestMinhashCheckpointNotPersist:
+    """Wave 2: minhash_near_dup_pairs materializes per_doc via pin
+    (localCheckpoint), not .persist() — values must be unchanged and
+    the pair graph complete."""
+
+    def test_pairs_unchanged_by_materialization(self, spark, small_docs):
+        from open_crime_etl_pipeline_spark.operators.dedup import (
+            minhash_near_dup_pairs,
+        )
+
+        got = minhash_near_dup_pairs(
+            small_docs, "doc_id", "text",
+            num_hashes=32, bands=16, threshold=0.7, verify_exact=True,
+        ).collect()
+        # docs 1 and 4 are exact duplicates: Jaccard 1.0, always a pair
+        pairs = {(r.id_a, r.id_b): r.jaccard for r in got}
+        assert pairs[(1, 4)] == 1.0
+        # doc 3 shares no shingle with anything: never appears
+        assert not any(3 in p for p in pairs)
+
+    def test_no_lingering_cached_tables(self, spark, small_docs):
+        """The persist was replaced, not merely dropped: no SQL-cache
+        entry may survive the call (checkpoint blocks are RDD-level
+        and GC-managed, not catalog-level)."""
+        from open_crime_etl_pipeline_spark.operators.dedup import (
+            minhash_near_dup_pairs,
+        )
+
+        spark.catalog.clearCache()  # shared session: isolate the check
+        minhash_near_dup_pairs(
+            small_docs, "doc_id", "text", num_hashes=8, bands=4, threshold=0.5
+        ).count()
+        jsc = spark._jsparkSession.sharedState().cacheManager()
+        assert jsc.isEmpty()
+
+
+class TestCdcWindowRewrite:
+    def test_matches_join_formulation(self, spark):
+        """The window df-count must equal the original groupBy +
+        join-back formulation row for row."""
+        from open_crime_etl_pipeline_spark.operators.dedup import cdc_chunks
+
+        rows = [
+            (1, "a", "one two three four five six seven eight nine ten"),
+            (2, "a", "one two three four five six seven eight nine ten"),
+            (3, "b", "totally different words in this document body here"),
+            (4, "b", "one two three four nothing alike after that point"),
+        ]
+        docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
+        chunks = cdc_chunks(docs)
+        cdf = chunks.groupBy("chunk").agg(
+            F.count_distinct("doc_id").alias("df")
+        )
+        ref = (
+            chunks.join(cdf, "chunk")
+            .groupBy("source")
+            .agg(
+                F.count("*").alias("n_chunks"),
+                F.count_distinct("chunk").alias("n_distinct_chunks"),
+                F.sum((F.col("df") >= 2).cast("long")).alias("n_in_shared"),
+            )
+            .collect()
+        )
+        w = Window.partitionBy("chunk")
+        got = (
+            chunks.withColumn("df", F.size(F.collect_set("doc_id").over(w)))
+            .groupBy("source")
+            .agg(
+                F.count("*").alias("n_chunks"),
+                F.count_distinct("chunk").alias("n_distinct_chunks"),
+                F.sum((F.col("df") >= 2).cast("long")).alias("n_in_shared"),
+            )
+            .collect()
+        )
+        assert sorted(map(tuple, got)) == sorted(map(tuple, ref))
+
+
+class TestBm25ScanSideRewrite:
+    def test_matches_explode_formulation(self, spark):
+        """Wave 3: bm25_over's scan-side conditional-count tf + literal
+        idf must reproduce the old explode + groupBy + join formulation
+        row for row, score doubles INCLUDED (same IEEE ops in the same
+        order; idf constant-folds through the same JVM Math.log)."""
+        from open_crime_etl_pipeline_spark.queries.llm.retrieval import (
+            _BM25_B,
+            _BM25_K1,
+            _BM25_TERMS,
+            bm25_over,
+        )
+
+        rows = [
+            (1, "spark join filter spark spark pad pad"),
+            (2, "join join filter other words here"),
+            (3, "nothing matching at all whatsoever"),
+            (4, "spark alone"),
+            (5, "filter filter filter join spark mix"),
+            (6, ""),
+        ]
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        got = bm25_over(docs, k=4).collect()
+
+        # reference: the pre-r12 explode formulation, verbatim
+        from pyspark.sql import Window
+
+        from open_crime_etl_pipeline_spark.operators import textstats as TS
+
+        toks = docs.select("doc_id", TS.tokens("text").alias("toks"))
+        dl = toks.select("doc_id", F.size("toks").cast("long").alias("dl"))
+        agg = dl.agg(F.count("*").alias("n"), F.sum("dl").alias("s")).collect()[0]
+        n_docs, avgdl = float(agg["n"]), agg["s"] / agg["n"]
+        tf = (
+            toks.select("doc_id", F.explode("toks").alias("term"))
+            .filter(F.col("term").isin(*_BM25_TERMS))
+            .groupBy("doc_id", "term")
+            .agg(F.count("*").alias("tf"))
+        )
+        idf = tf.groupBy("term").agg(
+            F.count("*").cast("double").alias("df")
+        ).select(
+            "term",
+            F.log(
+                F.lit(1.0)
+                + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)
+            ).alias("idf"),
+        )
+        contrib = (
+            tf.join(F.broadcast(idf), "term")
+            .join(dl, "doc_id")
+            .select(
+                "doc_id", "term",
+                (
+                    F.col("idf") * F.col("tf") * F.lit(_BM25_K1 + 1.0)
+                    / (
+                        F.col("tf")
+                        + F.lit(_BM25_K1)
+                        * (F.lit(1.0 - _BM25_B)
+                           + F.lit(_BM25_B) * F.col("dl") / F.lit(avgdl))
+                    )
+                ).alias("c"),
+            )
+        )
+        per_term = [
+            F.coalesce(F.sum(F.when(F.col("term") == t, F.col("c"))), F.lit(0.0))
+            for t in _BM25_TERMS
+        ]
+        score = per_term[0] + per_term[1] + per_term[2]
+        scored = contrib.groupBy("doc_id").agg(
+            score.alias("score"), F.count("*").alias("n_terms_matched")
+        )
+        top = scored.orderBy(F.col("score").desc(), "doc_id").limit(4)
+        w = Window.orderBy(F.col("score").desc(), "doc_id")
+        ref = top.withColumn("rank", F.row_number().over(w)).select(
+            "doc_id", F.round("score", 6).alias("score"), "n_terms_matched", "rank"
+        ).collect()
+
+        assert sorted(map(tuple, got)) == sorted(map(tuple, ref))
+
+
+class TestLanguageIdArgmaxRewrite:
+    def test_struct_min_matches_window_argmax(self, spark):
+        """Wave 3: min(struct(-hits, lang)) + min-lang fallback must
+        elect exactly the row_number() over (hits desc, lang) winner,
+        including docs with zero profile hits in SOME languages (tie
+        among present langs) and in ALL languages (fallback row)."""
+        hits = spark.createDataFrame(
+            # doc 1: clear winner; doc 2: tie broken by lang asc;
+            # doc 3 absent entirely (zero hits everywhere)
+            [(1, "de", 5), (1, "en", 3), (2, "en", 4), (2, "de", 4)],
+            "doc_id long, lang string, hits long",
+        )
+        test = spark.createDataFrame(
+            [(1, "en"), (2, "de"), (3, "fr")],
+            "doc_id long, true_lang string",
+        )
+        langs = spark.createDataFrame([("de",), ("en",)], "lang string")
+
+        # reference: the pre-r12 crossJoin + left join + window form
+        scored = (
+            test.crossJoin(langs)
+            .join(hits, ["doc_id", "lang"], "left")
+            .na.fill({"hits": 0})
+        )
+        wd = Window.partitionBy("doc_id").orderBy(F.col("hits").desc(), "lang")
+        ref = {
+            (r["doc_id"], r["lang"])
+            for r in scored.withColumn("rn", F.row_number().over(wd))
+            .filter(F.col("rn") == 1).collect()
+        }
+
+        perdoc = hits.groupBy("doc_id").agg(
+            F.min(F.struct((-F.col("hits")).alias("neg"),
+                           F.col("lang").alias("lang"))).alias("m")
+        )
+        first_lang = langs.agg(F.min("lang").alias("__ml"))
+        got = {
+            (r["doc_id"], r["pred"])
+            for r in test.join(perdoc, "doc_id", "left")
+            .crossJoin(F.broadcast(first_lang))
+            .select("doc_id",
+                    F.coalesce(F.col("m.lang"), F.col("__ml")).alias("pred"))
+            .collect()
+        }
+        assert got == ref == {(1, "de"), (2, "de"), (3, "de")}
+
+
+class TestGdSharedFeaturization:
+    def test_trained_params_identical_with_prepared_feat(self, spark):
+        """Wave 3: passing a pre-pinned feature frame into
+        _gd_train_params must yield bit-identical weights to the
+        self-materializing path (same frame, same aggregates)."""
+        from open_crime_etl_pipeline_spark.checkpointing import pin
+        from open_crime_etl_pipeline_spark.queries.llm.training import (
+            _gd_features,
+            _gd_train_params,
+        )
+
+        rows = [
+            (1, 300, "spark data slow spark"),
+            (2, 100, "slow data"),
+            (3, 500, "spark spark spark data slow data"),
+            (4, 120, "plain words"),
+        ]
+        docs = spark.createDataFrame(rows, "doc_id long, n_chars int, text string")
+        w_ref, b_ref = _gd_train_params(docs)
+        feat = pin(_gd_features(docs))
+        w_got, b_got = _gd_train_params(docs, feat=feat)
+        assert w_got == w_ref and b_got == b_ref
+
+
+class TestPqCodebookFixedWidthMeans:
+    def test_dsub_path_equals_long_form(self, spark):
+        """Wave 5: pq_train_codebook's fixed-width mean aggregate (one
+        groupBy of dsub avg columns) must yield the identical codebook
+        to the long-form posexplode + two-groupBy path — same argmin,
+        same avg over the same elements, same 6dp round."""
+        from open_crime_etl_pipeline_spark.operators.similarity import (
+            pq_subvectors,
+            pq_train_codebook,
+        )
+
+        emb = spark.range(60).select(
+            F.col("id").alias("vec_id"),
+            F.transform(
+                F.sequence(F.lit(0), F.lit(15)),
+                lambda i: ((F.col("id") * 13 + i * 7) % 29).cast("double") / 29.0,
+            ).alias("embedding"),
+        )
+        subs = pq_subvectors(emb, "vec_id", "embedding", m=4, dsub=4)
+        init = subs.filter(F.col("vec_id") < 5).select(
+            "s", F.col("vec_id").alias("cid"), F.col("sub").alias("cvec")
+        )
+        ref = {
+            (r["s"], r["cid"]): tuple(r["cvec"])
+            for r in pq_train_codebook(subs, init, rounds=1).collect()
+        }
+        got = {
+            (r["s"], r["cid"]): tuple(r["cvec"])
+            for r in pq_train_codebook(subs, init, rounds=1, dsub=4).collect()
+        }
+        assert got == ref and len(got) > 0
+
+
+class TestPairsMaterializeHint:
+    def test_unmaterialized_pairs_identical(self, spark, small_docs):
+        """Wave 5: materialize=False (single-consumer hint) must return
+        the same verified pair set as the default materialized path."""
+        from open_crime_etl_pipeline_spark.operators.dedup import (
+            minhash_near_dup_pairs,
+        )
+
+        kw = dict(num_hashes=16, bands=8, threshold=0.5, verify_exact=True)
+        ref = sorted(
+            map(
+                tuple,
+                minhash_near_dup_pairs(small_docs, "doc_id", "text", **kw).collect(),
+            )
+        )
+        got = sorted(
+            map(
+                tuple,
+                minhash_near_dup_pairs(
+                    small_docs, "doc_id", "text", materialize=False, **kw
+                ).collect(),
+            )
+        )
+        assert got == ref and len(got) > 0

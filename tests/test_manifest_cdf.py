@@ -5,7 +5,9 @@ change-type classes each DML verb emits, the replica-reconvergence
 contract (a tailing replica applying the feed verbatim ends equal to
 the table after DELETE+UPDATE+MERGE), snapshot-read isolation of
 CDF-only shards, vacuum/retention coupling, the protocol stamp on
-cdf-carrying actions, and the change_data=False opt-out."""
+cdf-carrying actions, and the change_data=False opt-out; UPDATE WHERE
+SET, the merge target-duplicate guard and the ``_commit_version``
+column."""
 
 from __future__ import annotations
 
@@ -19,7 +21,7 @@ from pyspark.sql import functions as F
 
 from open_crime_etl_pipeline_spark.sources import manifest_sink as MS
 
-from tests.test_manifest_sink import _df
+from tests.test_manifest_sink import _df, _write
 
 
 @pytest.fixture(scope="module")
@@ -303,3 +305,163 @@ def test_stream_change_feed_rejects_bad_schema(registered, tmp_path):
             .start()
             .awaitTermination(60)
         )
+
+
+# -- UPDATE WHERE SET ------------------------------------------------------
+
+def test_update_where_basic_and_cdf(registered, tmp_path):
+    spark, p = registered, str(tmp_path / "up1")
+    schema = "id long, s string"
+    (
+        _df(spark, 400).repartitionByRange(4, "id")
+        .write.format(MS.FORMAT_NAME).option("path", p)
+        .mode("append").save()
+    )
+    before = {s["file"] for s in MS.read_manifest_dict(p)["shards"]}
+    man2, n_up = MS.update_where(
+        spark, p, schema,
+        F.col("id").between(100, 199),
+        {"s": F.concat(F.lit("UPD"), F.col("id").cast("string"))},
+        prune={"id": (100, 199)},
+    )
+    assert n_up == 100
+    assert man2["n_rows"] == 400                    # row conservation
+    assert man2["commit_kind"] == "update"
+    untouched = before & {s["file"] for s in man2["shards"]}
+    assert len(untouched) >= len(before) // 2       # scoped rewrite
+    back = MS.read_manifest(spark, p, schema)
+    got = {r["id"]: r["s"] for r in back.collect()}
+    assert len(got) == 400
+    for i in range(400):
+        assert got[i] == (f"UPD{i}" if 100 <= i <= 199 else f"a{i}")
+    # CDF: the update delta is exactly the post-image of updated rows
+    delta = sorted(
+        tuple(r) for r in MS.table_changes(
+            spark, p, schema, man2["commit_seq"] - 1, man2["commit_seq"]
+        ).collect()
+    )
+    assert delta == [(i, f"UPD{i}") for i in range(100, 200)]
+
+
+def test_update_where_set_sees_pre_update_row(registered, tmp_path):
+    """Assignments evaluate against the PRE-update row: swapping two
+    columns through each other must not chain."""
+    spark, p = registered, str(tmp_path / "up2")
+    schema = "a long, b long"
+    df = spark.createDataFrame([(1, 10), (2, 20)], schema)
+    df.coalesce(1).write.format(MS.FORMAT_NAME).option("path", p) \
+        .mode("append").save()
+    MS.update_where(
+        spark, p, schema, F.lit(True), {"a": F.col("b"), "b": F.col("a")}
+    )
+    got = sorted(
+        tuple(r) for r in MS.read_manifest(spark, p, schema).collect()
+    )
+    assert got == [(10, 1), (20, 2)]
+
+
+def test_update_where_null_predicate_rows_survive(registered, tmp_path):
+    spark, p = registered, str(tmp_path / "up3")
+    schema = "id long, v long"
+    df = spark.createDataFrame([(1, None), (2, 5), (3, 50)], schema)
+    df.coalesce(1).write.format(MS.FORMAT_NAME).option("path", p) \
+        .mode("append").save()
+    _man, n_up = MS.update_where(
+        spark, p, schema, F.col("v") > 10, {"v": F.lit(0)}
+    )
+    assert n_up == 1  # NULL > 10 is NULL, not TRUE: row 1 survives
+    got = sorted(
+        tuple(r) for r in MS.read_manifest(spark, p, schema).collect()
+    )
+    assert got == [(1, None), (2, 5), (3, 0)]
+
+
+def test_update_where_noop_guards_and_conflict(registered, tmp_path):
+    spark, p = registered, str(tmp_path / "up4")
+    schema = "id long, s string"
+    # two shards: the racing compact below collapses them into ONE, so
+    # the update's snapshot-read shard set is genuinely no longer live
+    # (a single-shard table compacted to 1 is content-addressed to the
+    # SAME file and would not conflict)
+    _write(_df(spark, 20).repartitionByRange(2, "id"), p, mode="append")
+    man0 = MS.read_manifest_dict(p)
+    # zero matches: publish nothing
+    man1, n = MS.update_where(
+        spark, p, schema, F.col("id") > 10_000, {"s": F.lit("x")}
+    )
+    assert n == 0 and man1["commit_seq"] == man0["commit_seq"]
+    # bad SET target
+    with pytest.raises(ValueError, match="not in schema"):
+        MS.update_where(spark, p, schema, F.lit(True), {"nope": F.lit(1)})
+    with pytest.raises(ValueError, match="non-empty"):
+        MS.update_where(spark, p, schema, F.lit(True), {})
+    # write-conflict: a compact between snapshot read and publish
+    orig = MS._commit_replace
+
+    def racing(path, **kw):
+        MS.compact(spark, path, schema=schema, target_shards=1)
+        return orig(path, **kw)
+
+    MS._commit_replace = racing
+    try:
+        with pytest.raises(ValueError, match="no longer live"):
+            MS.update_where(
+                spark, p, schema, F.col("id") < 5, {"s": F.lit("x")}
+            )
+    finally:
+        MS._commit_replace = orig
+
+
+# -- merge target-duplicate guard ------------------------------------------
+
+def test_merge_into_refuses_duplicate_key_target(registered, tmp_path):
+    spark, p = registered, str(tmp_path / "mdup")
+    schema = "id long, s string"
+    dup = spark.createDataFrame([(7, "x"), (7, "y"), (8, "z")], schema)
+    dup.coalesce(1).write.format(MS.FORMAT_NAME).option("path", p) \
+        .mode("append").save()
+    src = spark.createDataFrame([(7, "UP")], schema)
+    with pytest.raises(ValueError, match="duplicate keys among matched"):
+        MS.merge_into(spark, p, schema, src, ["id"])
+    # the table is untouched and nothing was published
+    assert MS.read_manifest_dict(p)["commit_seq"] == 1
+    # a merge NOT touching the duplicated key still works
+    man2, n_up, n_ins = MS.merge_into(
+        spark, p, schema,
+        spark.createDataFrame([(8, "UP8"), (9, "NEW")], schema), ["id"],
+    )
+    assert (n_up, n_ins) == (1, 1)
+
+
+# -- CDF _commit_version column --------------------------------------------
+
+def test_table_changes_with_commit_version(registered, tmp_path):
+    spark, p = registered, str(tmp_path / "cv1")
+    schema = "id long, s string"
+    _write(_df(spark, 2, tag="a").coalesce(1), p, mode="append")   # v1
+    _write(
+        spark.createDataFrame([(100, "b")], schema).coalesce(1),
+        p, mode="append",
+    )                                                               # v2
+    MS.compact(spark, p, schema=schema, target_shards=1)            # v3
+    src = spark.createDataFrame([(100, "UP"), (7, "NEW")], schema)
+    man4, *_ = MS.merge_into(spark, p, schema, src, ["id"])         # v4
+    got = sorted(
+        tuple(r)
+        for r in MS.table_changes(
+            spark, p, None, 0, with_version=True
+        ).collect()
+    )
+    assert got == [
+        (0, "a0", 1), (1, "a1", 1), (7, "NEW", 4), (100, "UP", 4),
+        (100, "b", 2),
+    ]
+    # compaction contributed no versions; the column is typed long
+    df = MS.table_changes(spark, p, None, 2, 3, with_version=True)
+    assert df.schema["_commit_version"].dataType.typeName() == "long"
+    assert df.count() == 0
+    # the version-free path is unchanged
+    plain = sorted(
+        tuple(r) for r in MS.table_changes(spark, p, None, 0).collect()
+    )
+    assert plain == [(t[0], t[1]) for t in got]

@@ -1,10 +1,13 @@
 """Time travel, versioned-manifest history, and compaction for the
 content-addressed shard sink (sources/manifest_sink.py): as-of reads,
 history replay in the stream reader (overwrite boundaries,
-data_change=false compaction rewrites), vacuum/expire retention."""
+data_change=false compaction rewrites), vacuum/expire retention; the
+protocol min_reader guard, filtered stream tails, small-file OPTIMIZE,
+idempotent writer transactions and timestamp time travel."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -1435,3 +1438,269 @@ def test_merge_into_bloom_scoped_on_hash_partitioned_table(
         spark, p, schema="id long, s string"
     ).collect()}
     assert got[777] == "UP777" and got[5000] == "NEW" and len(got) == 4001
+
+
+# -- protocol guard --------------------------------------------------------
+
+def test_protocol_min_reader_guard(registered, tmp_path):
+    spark, p = registered, str(tmp_path / "proto1")
+    _write(_df(spark, 5).coalesce(1), p, mode="append")
+    act = os.path.join(p, MS.HISTORY_DIR, MS._history_name(1))
+    doc = json.load(open(act))
+    # writers stamp the floor the ACTION needs: 2 for JSON-only
+    # commits (protocol 3 is reserved for parquet-shard actions)
+    assert doc["min_reader"] == MS._BASE_MIN_READER
+    doc["min_reader"] = MS._READER_VERSION + 97
+    json.dump(doc, open(act, "w"))
+    with pytest.raises(MS.ManifestProtocolError, match="protocol"):
+        MS.read_manifest_dict(p)
+    with pytest.raises(MS.ManifestProtocolError):
+        MS.read_manifest_dict(p, version=1)
+    # pre-round-11 documents (no field) keep reading: default 0
+    doc.pop("min_reader")
+    json.dump(doc, open(act, "w"))
+    assert MS.read_manifest_dict(p)["n_rows"] == 5
+
+
+# -- legacy full-snapshot replay dedup -------------------------------------
+
+def test_legacy_snapshot_tail_not_redelivered_across_batches(
+    registered, tmp_path
+):
+    """Two legacy full-snapshot log entries both listing the same shard
+    WITHOUT added_seq: a tail replaying them across separate batches
+    must deliver the shard once (default 1 = the documented
+    pre-added_seq rule), not once per window."""
+    spark, p = registered, str(tmp_path / "leg1")
+    _write(_df(spark, 3).coalesce(1), p, mode="append")
+    man = MS.read_manifest_dict(p)
+    strip = [
+        {k: v for k, v in s.items() if k != "added_seq"}
+        for s in man["shards"]
+    ]
+    hdir = os.path.join(p, MS.HISTORY_DIR)
+    for v in (1, 2):
+        json.dump(
+            {"version": 1, "commit_seq": v, "commit_kind": "append",
+             "shards": strip, "n_rows": man["n_rows"]},
+            open(os.path.join(hdir, MS._history_name(v)), "w"),
+        )
+    json.dump({"version": 2, "commit_seq": 2, "checkpoint_seq": 0},
+              open(os.path.join(p, MS.MANIFEST), "w"))
+    r = MS.ManifestShardStreamReader(None, {"path": p})
+    batch1 = [x.shard for x in r.partitions({"seq": 0}, {"seq": 1})
+              if x.shard]
+    batch2 = [x.shard for x in r.partitions({"seq": 1}, {"seq": 2})
+              if x.shard]
+    assert len(batch1) == 1          # delivered in the seq-1 window...
+    assert batch2 == []              # ...and never again
+
+
+# -- filtered stream tail --------------------------------------------------
+
+def test_stream_tail_prune_options(registered, tmp_path):
+    """A filtered tail over a range-clustered table plans FEWER shard
+    partitions per batch; delivered rows (plus the row-level filter)
+    are identical to an unfiltered tail."""
+    spark, p = registered, str(tmp_path / "sp1")
+    (
+        _df(spark, 800).repartitionByRange(8, "id")
+        .write.format(MS.FORMAT_NAME).option("path", p)
+        .mode("append").save()
+    )
+    man = MS.read_manifest_dict(p)
+    full = MS.ManifestShardStreamReader(None, {"path": p})
+    pruned = MS.ManifestShardStreamReader(
+        None, {"path": p, "prune": json.dumps({"id": [100, 199]})}
+    )
+    hi = {"seq": man["commit_seq"]}
+    n_full = len([x for x in full.partitions({"seq": 0}, hi) if x.shard])
+    kept = [x for x in pruned.partitions({"seq": 0}, hi) if x.shard]
+    assert n_full == 8
+    assert 1 <= len(kept) <= 2  # only the admitting tiles
+    # identical results: decode the kept shards, row-filter, compare
+    schema = "id long, s string"
+    got = sorted(
+        tuple(r)
+        for r in spark.read.schema(schema).json(
+            [os.path.join(p, "shards", x.shard) for x in kept]
+        ).filter(F.col("id").between(100, 199)).collect()
+    )
+    assert got == [(i, f"a{i}") for i in range(100, 200)]
+    # prune_eq rides the blooms the same way
+    eq = MS.ManifestShardStreamReader(
+        None, {"path": p, "prune_eq": json.dumps({"id": 150})}
+    )
+    kept_eq = [x for x in eq.partitions({"seq": 0}, hi) if x.shard]
+    assert len(kept_eq) <= 2
+
+
+# -- small-file OPTIMIZE ---------------------------------------------------
+
+def test_compact_small_bin_packs_only_the_tail(registered, tmp_path):
+    """12 tiny epoch-ish shards + 1 well-sized shard: compact_small
+    rewrites ONLY the tail (cost scales with the small files, not the
+    table), conserves rows, rides data_change=false (a tailing reader
+    sees nothing), and leaves the big shard byte-untouched."""
+    spark, p = registered, str(tmp_path / "cs1")
+    big = _df(spark, 500)
+    _write(big.coalesce(1), p, mode="append")
+    for i in range(12):
+        (
+            spark.createDataFrame(
+                [(10_000 + i * 10 + j, f"t{i}_{j}") for j in range(5)],
+                "id long, s string",
+            )
+            .coalesce(1)
+            .write.format(MS.FORMAT_NAME).option("path", p)
+            .mode("append").save()
+        )
+    man = MS.read_manifest_dict(p)
+    assert len(man["shards"]) == 13
+    big_file = next(s["file"] for s in man["shards"] if s["n_rows"] == 500)
+    man2, n_comp = MS.compact_small(
+        spark, p, min_rows=100, target_shards=2
+    )
+    assert n_comp == 12
+    assert man2["n_rows"] == 560                       # row conservation
+    assert len(man2["shards"]) == 3                    # big + 2 bins
+    files2 = {s["file"] for s in man2["shards"]}
+    assert big_file in files2                          # untouched
+    # the rewrite is invisible to CDF: empty delta across the commit
+    delta = MS.table_changes(
+        spark, p, None, man2["commit_seq"] - 1, man2["commit_seq"]
+    )
+    assert delta.count() == 0
+    # all rows intact (recorded schema drives the read)
+    assert MS.read_manifest(spark, p).count() == 560
+
+
+def test_compact_small_noop_and_conflict(registered, tmp_path):
+    spark, p = registered, str(tmp_path / "cs2")
+    _write(_df(spark, 50).coalesce(1), p, mode="append")
+    man0 = MS.read_manifest_dict(p)
+    # one qualifying shard: nothing to gain, publish nothing
+    man1, n = MS.compact_small(spark, p, min_rows=1000)
+    assert n == 0 and man1["commit_seq"] == man0["commit_seq"]
+    # no qualifying shards at min_rows=1
+    man2, n = MS.compact_small(spark, p, min_rows=1)
+    assert n == 0
+
+
+def test_vacuum_min_age_protects_young_files(registered, tmp_path):
+    """An in-flight DML's freshly staged (unpublished) shard looks like
+    garbage; the retention window keeps it."""
+    spark, p = registered, str(tmp_path / "va1")
+    _write(_df(spark, 10).coalesce(1), p, mode="append")
+    _write(_df(spark, 10, tag="b").coalesce(1), p, mode="overwrite")
+    MS.expire_history(p, keep_last=1)
+    # the overwritten v1 shard is unreferenced BUT younger than the
+    # retention window: protected
+    assert MS.vacuum_unreferenced(p, min_age_seconds=3600) == []
+    # age the files artificially and vacuum again: collected
+    import time
+    old = time.time() - 7200
+    for f in os.listdir(os.path.join(p, "shards")):
+        os.utime(os.path.join(p, "shards", f), (old, old))
+    deleted = MS.vacuum_unreferenced(p, min_age_seconds=3600)
+    assert len(deleted) == 1
+    # the live table is intact
+    assert MS.read_manifest(spark, p).count() == 10
+
+
+# -- idempotent writer transactions (Delta txn action) ---------------------
+
+def test_txn_idempotent_batch_writes(registered, tmp_path):
+    """An external batch job replaying with the SAME (app, version)
+    publishes nothing — even when the replay's CONTENT differs (the
+    case content-addressing cannot catch); a higher version lands;
+    apps are independent."""
+    spark, p = registered, str(tmp_path / "txn1")
+
+    def land(df, app, ver):
+        (
+            df.coalesce(1).write.format(MS.FORMAT_NAME)
+            .option("path", p)
+            .option("txn_app", app).option("txn_version", str(ver))
+            .mode("append").save()
+        )
+
+    land(_df(spark, 3, tag="a"), "loader", 1)
+    man1 = MS.read_manifest_dict(p)
+    assert man1["n_rows"] == 3 and man1["txns"] == {"loader": 1}
+    # replay v1 with DIFFERENT content (e.g. a recomputed batch with a
+    # new timestamp column value): must be a complete no-op
+    land(_df(spark, 5, tag="DIFFERENT"), "loader", 1)
+    man2 = MS.read_manifest_dict(p)
+    assert man2["commit_seq"] == man1["commit_seq"]
+    assert man2["n_rows"] == 3
+    # an OLDER version replay is a no-op too
+    land(_df(spark, 9, tag="older"), "loader", 0)
+    assert MS.read_manifest_dict(p)["n_rows"] == 3
+    # the next version lands, and another app is independent
+    land(_df(spark, 2, tag="b"), "loader", 2)
+    land(_df(spark, 1, tag="c"), "other", 1)
+    man3 = MS.read_manifest_dict(p)
+    assert man3["txns"] == {"loader": 2, "other": 1}
+    assert man3["n_rows"] == 3 + 2 + 1
+    # half-specified options refuse loudly
+    with pytest.raises(Exception, match="txn_app and txn_version"):
+        (
+            _df(spark, 1).write.format(MS.FORMAT_NAME)
+            .option("path", p).option("txn_app", "x")
+            .mode("append").save()
+        )
+
+
+def test_txn_survives_checkpoint_and_conflict_rebase(registered, tmp_path):
+    """The txn ledger rides the state through checkpoints, and a
+    rebase after losing the claim race re-checks it (build_action is
+    re-invoked against the winner's state)."""
+    spark, p = registered, str(tmp_path / "txn2")
+    (
+        _df(spark, 2).coalesce(1).write.format(MS.FORMAT_NAME)
+        .option("path", p).option("checkpoint_every", "2")
+        .option("txn_app", "a").option("txn_version", "7")
+        .mode("append").save()
+    )
+    _write(_df(spark, 2, tag="x").coalesce(1), p, mode="append")  # ckpt at 2
+    # reconstruct v2 from its checkpoint: the ledger must be there
+    assert MS.read_manifest_dict(p, version=2)["txns"] == {"a": 7}
+    # a replay AFTER the checkpoint (resolves via checkpoint) no-ops
+    (
+        _df(spark, 4, tag="y").coalesce(1).write.format(MS.FORMAT_NAME)
+        .option("path", p)
+        .option("txn_app", "a").option("txn_version", "7")
+        .mode("append").save()
+    )
+    assert MS.read_manifest_dict(p)["n_rows"] == 4
+
+
+# -- timestamp time travel -------------------------------------------------
+
+def test_timestamp_time_travel(registered, tmp_path):
+    import time as _time
+
+    spark, p = registered, str(tmp_path / "tsv1")
+    _write(_df(spark, 2, tag="a").coalesce(1), p, mode="append")   # v1
+    _time.sleep(0.2)
+    _write(_df(spark, 3, tag="b").coalesce(1), p, mode="append")   # v2
+    _time.sleep(0.2)
+    _write(_df(spark, 4, tag="c").coalesce(1), p, mode="overwrite")  # v3
+    hist = MS.describe_history(p)
+    assert [h["version"] for h in hist] == [1, 2, 3]
+    ts = [h["ts"] for h in hist]
+    assert ts == sorted(ts) and all(isinstance(t, float) for t in ts)
+    # between v1 and v2 -> v1; exactly v2 -> v2; after v3 -> v3
+    assert MS.version_at_timestamp(p, (ts[0] + ts[1]) / 2) == 1
+    assert MS.version_at_timestamp(p, ts[1]) == 2
+    assert MS.version_at_timestamp(p, ts[2] + 100) == 3
+    assert MS.version_at_timestamp(p, ts[0] - 100) is None
+    got = MS.read_manifest(spark, p, timestamp=(ts[0] + ts[1]) / 2)
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (0, "a0"), (1, "a1"),
+    ]
+    with pytest.raises(FileNotFoundError, match="timestamp"):
+        MS.read_manifest(spark, p, timestamp=ts[0] - 100)
+    with pytest.raises(ValueError, match="exclusive"):
+        MS.read_manifest(spark, p, version=1, timestamp=ts[1])

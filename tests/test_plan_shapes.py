@@ -382,11 +382,12 @@ def test_kmv_sketch_state_stays_bounded(spark, sf_dir):
     """Phase-1 partial sketches: one row per (group, bucket), each
     holding <= k hashes — the collect_set is bucket-scoped, never a
     whole-group set, so the partial-agg state is <= groups*buckets*k
-    hashes no matter the input size (replication-measured in
-    tools/scale_check_r5d.py). Plan side: the two collect aggregates
-    are the only shuffles of sketch state, nothing falls back to
-    Python, and the 1-row assembly sides join by broadcast, not a
-    cartesian."""
+    hashes no matter the input size (output replication invariance:
+    tests/test_profiling.py; state sizes measured by
+    ``git show a3c7b0a:tools/scale_check_r5d.py``). Plan side: the two
+    collect aggregates are the only shuffles of sketch state, nothing
+    falls back to Python, and the 1-row assembly sides join by
+    broadcast, not a cartesian."""
     plan = _plan(spark, sf_dir, "kmv_theta_intersection_estimate")
     assert "BatchEvalPython" not in plan
     assert "CartesianProduct" not in plan

@@ -1,12 +1,18 @@
 """Two-pass global row numbering: equivalence with the single-window
-form, contiguity, and the no-single-partition plan shape."""
+form, contiguity, and the no-single-partition plan shape; running-sum
+totals from the offsets pass and the percentiles built on them."""
 
 from __future__ import annotations
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from open_crime_etl_pipeline_spark.operators.ranking import global_row_number
+from open_crime_etl_pipeline_spark.operators.ranking import (
+    exact_percentiles,
+    global_row_number,
+    global_running_sums,
+    weighted_percentiles,
+)
 
 
 def _scored(spark, n=10_000):
@@ -189,3 +195,56 @@ def test_weighted_percentiles_fractional_and_null_weights_raise(spark):
         for r in weighted_percentiles(ok, "v", "w", ["id"], [0.5]).collect()
     }
     assert got == {0.5: 2.0}
+
+
+class TestRankingTotalsFromOffsetsPass:
+    def test_running_sums_with_totals(self, spark):
+        df = spark.createDataFrame(
+            [(i, i % 7 + 1) for i in range(1000)], "k long, w long"
+        )
+        out, totals = global_running_sums(
+            df, ["k"], {"cum": "w"}, with_totals=True
+        )
+        mx = out.agg(F.max("cum")).collect()[0][0]
+        # the driver-summed total must equal the window's final value
+        assert totals["cum"] == mx == sum(i % 7 + 1 for i in range(1000))
+
+    def test_running_sums_with_totals_empty(self, spark):
+        df = spark.createDataFrame([], "k long, w long")
+        out, totals = global_running_sums(
+            df, ["k"], {"cum": "w"}, with_totals=True
+        )
+        assert totals == {"cum": 0}
+        assert out.count() == 0
+
+    def test_exact_percentiles_unchanged(self, spark):
+        import random
+
+        rnd = random.Random(7)
+        vals = [float(rnd.randrange(10_000)) for _ in range(5000)]
+        df = spark.createDataFrame([(v,) for v in vals], "v double")
+        got = {
+            r.p: r.value
+            for r in exact_percentiles(df, "v", [0.01, 0.5, 0.99]).collect()
+        }
+        sv = sorted(vals)
+        import math
+
+        for p in (0.01, 0.5, 0.99):
+            rank = max(math.ceil(p * len(sv)), 1)
+            assert got[p] == sv[rank - 1]
+
+    def test_weighted_percentiles_unchanged(self, spark):
+        rows = [(1.0, 1, 1, 1), (2.0, 3, 2, 1), (3.0, 1, 3, 1)]
+        df = spark.createDataFrame(
+            rows, "v double, w long, a long, b long"
+        )
+        got = {
+            r.p: r.value
+            for r in weighted_percentiles(
+                df, "v", "w", ["a", "b"], [0.2, 0.5, 0.9]
+            ).collect()
+        }
+        # expanded multiset: [1, 2, 2, 2, 3]; W=5
+        # ceil(.2*5)=1 -> 1.0; ceil(.5*5)=3 -> 2.0; ceil(.9*5)=5 -> 3.0
+        assert got == {0.2: 1.0, 0.5: 2.0, 0.9: 3.0}

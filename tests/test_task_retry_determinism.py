@@ -13,26 +13,22 @@ SparkContext-creation-time setting (the shared test session pins the
 default maxFailures=1, under which any injected failure would kill
 the job instead of retrying)."""
 
+import os
 import subprocess
 import sys
 
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 _SCRIPT = r"""
 import sys
-sys.path.insert(0, "/root/repo")
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+sf_dir, sentinel, repo = sys.argv[1:4]
+sys.path.insert(0, repo)
+from open_crime_etl_pipeline_spark.session import get_spark
 
-spark = (
-    # local[4,3]: the second slot is maxFailures — the local scheduler
-    # ignores spark.task.maxFailures, retries must be set in the master
-    SparkSession.builder.master("local[4,3]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
+# local[4,3]: the second slot is maxFailures — the local scheduler
+# ignores spark.task.maxFailures, retries must be set in the master
+spark = get_spark(master="local[4,3]", shuffle_partitions=8)
 spark.sparkContext.setLogLevel("ERROR")
-sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-sentinel = sys.argv[2]
 
 from open_crime_etl_pipeline_spark.operators.linalg import covariance_pairs
 
@@ -84,7 +80,7 @@ spark.stop()
 def test_gram_kernel_bit_identical_under_task_retry(sf_dir, tmp_path):
     sentinel = str(tmp_path / "injection_fired")
     res = subprocess.run(
-        [sys.executable, "-c", _SCRIPT, sf_dir, sentinel],
+        [sys.executable, "-c", _SCRIPT, sf_dir, sentinel, _REPO],
         capture_output=True, text=True, timeout=600,
     )
     assert res.returncode == 0, res.stderr[-2000:]

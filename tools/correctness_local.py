@@ -156,18 +156,13 @@ def main() -> None:
 
     check_driver_window()
 
-    from pyspark.sql import SparkSession
+    from open_crime_etl_pipeline_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .appName("correctness-local")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="correctness-local",
+        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+        shuffle_partitions=32,
+        extra_conf={"spark.driver.memory": "24g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -19,20 +19,14 @@ def main() -> int:
         sfs = args[i + 1].split(",")
         args = args[:i] + args[i + 2:]
 
-    from pyspark.sql import SparkSession
-
     from open_crime_etl_pipeline_spark.queries import all_specs
+    from open_crime_etl_pipeline_spark.session import get_spark
     from open_crime_etl_pipeline_spark.testing import (
         compare_frames,
         duckdb_connection,
     )
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     specs = all_specs()
     bad = 0
