@@ -2,25 +2,55 @@
 
 Reference: `logs` table (create_logs.sql:1-11) written via
 ``init_log``/``insert``/``update`` (`db_postgres.py:38-63,113-149`).
-Here it's a small parquet table managed read-modify-write; statuses
-RUNNING→SUCCESS/FAILED, types SCHEDULED/RECOVERY, modes
-FULL/INCREMENT (`crime_etl.py:104-106,429`).
+Here it's one small parquet file, ``logs/ledger.parquet``, holding one
+row per run whose status is updated in place: RUNNING→SUCCESS/FAILED,
+types SCHEDULED/RECOVERY, modes FULL/INCREMENT
+(`crime_etl.py:104-106,429`).
 
-The ledger is metadata (thousands of rows, not billions): a driver-side
-overwrite of a tiny table per run is the right tool; the fact tables
-never take this path.
+The ledger is metadata (thousands of rows, not billions), so editing
+it starts no Spark job. ``start_run``/``finish_run`` read-modify-write
+the file on the driver with pyarrow: the new table goes to a hidden
+temp file in ``logs/``, is fsynced, and is ``os.replace``d onto the
+ledger file.
+The replace is atomic, so a reader or a crash sees the old ledger or
+the new one, never a half-written or missing file (Spark's
+``mode("overwrite")`` deletes the directory before its job writes).
+The Arrow schema comes from ``LOGS_SCHEMA``: timestamps are
+``timestamp[us, tz=UTC]`` instants and dates ``date32``, which Spark
+reads back as the declared types under any session timezone. Reads
+(``read``, ``last_successful_load_date``, ``successful_load_dates``)
+stay lazy Spark scans; the fact tables never take this path.
+
+A ``logs/`` written by Spark (``part-*.parquet``, ``_SUCCESS``,
+``.crc``) is folded into the ledger file by the next edit. Its files
+are removed only after the ledger file holds their rows, and once the
+ledger file exists it is the only one read. Single writer, as with the
+reference's transactional INSERT/UPDATE.
 """
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import os
 import uuid
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..schemas import LOGS_SCHEMA
+
+LEDGER_FILE = "ledger.parquet"
+_ARROW_SCHEMA = to_arrow_schema(LOGS_SCHEMA)
+
+
+def _is_spark_part(name: str) -> bool:
+    # names starting with "." or "_" are not data, as for Spark's reader
+    return name.endswith(".parquet") and name != LEDGER_FILE and name[0] not in "._"
 
 
 def _utcnow() -> dt.datetime:
@@ -34,24 +64,49 @@ class RunLedger:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
+        self.file = os.path.join(path, LEDGER_FILE)
 
-    def _exists(self) -> bool:
-        return os.path.exists(self.path) and any(
-            f.endswith(".parquet") for _, _, fs in os.walk(self.path) for f in fs
-        )
+    def _files(self) -> list[str]:
+        """The ledger file or, before the first edit of a ``logs/``
+        written by Spark, that layout's part files."""
+        if os.path.exists(self.file):
+            return [self.file]
+        if not os.path.isdir(self.path):
+            return []
+        return sorted(os.path.join(self.path, f)
+                      for f in os.listdir(self.path) if _is_spark_part(f))
 
     def read(self) -> DataFrame:
-        if not self._exists():
+        files = self._files()
+        if not files:
             return self.spark.createDataFrame([], LOGS_SCHEMA)
-        return self.spark.read.schema(LOGS_SCHEMA).parquet(self.path)
+        return self.spark.read.schema(LOGS_SCHEMA).parquet(*files)
 
-    def _write(self, df: DataFrame) -> None:
-        # Tiny metadata table: write to a temp dir then swap would be
-        # needed for concurrent readers; single-writer engine semantics
-        # match the reference's transactional INSERT/UPDATE.
-        staged = df.collect()
-        out = self.spark.createDataFrame(staged, LOGS_SCHEMA)
-        out.coalesce(1).write.mode("overwrite").parquet(self.path)
+    def _load(self) -> pa.Table:
+        # Spark writes timestamps as INT96; read them at µs like LOGS_SCHEMA
+        tables = [
+            pq.read_table(f, coerce_int96_timestamp_unit="us")
+            .select(_ARROW_SCHEMA.names).cast(_ARROW_SCHEMA)
+            for f in self._files()
+        ]
+        return pa.concat_tables(tables) if tables else _ARROW_SCHEMA.empty_table()
+
+    def _save(self, table: pa.Table) -> None:
+        os.makedirs(self.path, exist_ok=True)
+        tmp = os.path.join(self.path, f".{LEDGER_FILE}.tmp")
+        try:
+            with open(tmp, "wb") as f:
+                pq.write_table(table, f)
+                f.flush()
+                os.fsync(f.fileno())
+            os.replace(tmp, self.file)
+        finally:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(tmp)
+        # a Spark-written ledger's rows are in the ledger file now
+        for f in os.listdir(self.path):
+            if f == "_SUCCESS" or f.endswith(".crc") or _is_spark_part(f):
+                os.remove(os.path.join(self.path, f))
 
     def start_run(
         self,
@@ -63,23 +118,27 @@ class RunLedger:
     ) -> str:
         """Insert a RUNNING row (≡ init_log, db_postgres.py:86-91)."""
         run_id = run_id or uuid.uuid4().hex
-        row = [(run_id, load_date, run_type, mode, "RUNNING",
-                _utcnow(), None, config)]
-        new = self.spark.createDataFrame(row, LOGS_SCHEMA)
-        self._write(self.read().unionByName(new))
+        row = pa.Table.from_pylist([{
+            "run_id": run_id, "load_date": load_date, "type": run_type,
+            "mode": mode, "status": "RUNNING", "start_time": _utcnow(),
+            "end_time": None, "config": config,
+        }], schema=_ARROW_SCHEMA)
+        self._save(pa.concat_tables([self._load(), row]))
         return run_id
 
     def finish_run(self, run_id: str, load_date: dt.date, status: str) -> None:
         """Terminal SUCCESS/FAILED update (≡ update, db_postgres.py:128-149)."""
-        cur = self.read()
-        hit = (F.col("run_id") == run_id) & (F.col("load_date") == F.lit(load_date))
-        updated = cur.withColumn(
-            "status", F.when(hit, F.lit(status)).otherwise(F.col("status"))
-        ).withColumn(
-            "end_time",
-            F.when(hit, F.lit(_utcnow())).otherwise(F.col("end_time")),
+        cur = self._load()
+        hit = pc.and_(
+            pc.equal(cur["run_id"], run_id),
+            pc.equal(cur["load_date"], pa.scalar(load_date, pa.date32())),
         )
-        self._write(updated)
+        end = pa.scalar(_utcnow(), _ARROW_SCHEMA.field("end_time").type)
+        for name, value in (("status", status), ("end_time", end)):
+            i = _ARROW_SCHEMA.get_field_index(name)
+            cur = cur.set_column(
+                i, _ARROW_SCHEMA.field(i), pc.if_else(hit, value, cur[name]))
+        self._save(cur)
 
     def last_successful_load_date(self) -> dt.date | None:
         """≡ MAX(load_date) WHERE status IN ('SUCCESS','RUNNING')

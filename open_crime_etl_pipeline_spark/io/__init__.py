@@ -1,7 +1,7 @@
 from .bucketed import bucketed_join, write_bucketed
 from .layout import compact, file_key_ranges, write_range_clustered
 from .readers import load_table, load_tables, read_crime_pages, split_corrupt
-from .writers import write_partitioned_crime, write_table
+from .writers import write_partitioned_crime
 
 __all__ = [
     "bucketed_join",
@@ -14,5 +14,4 @@ __all__ = [
     "split_corrupt",
     "write_bucketed",
     "write_partitioned_crime",
-    "write_table",
 ]

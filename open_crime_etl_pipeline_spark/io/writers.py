@@ -52,11 +52,6 @@ def write_partitioned_crime(
         writer.parquet(path)
 
 
-def write_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Plain parquet table write (ledger, dims, silver outputs)."""
-    df.write.mode(mode).parquet(path)
-
-
 def write_dual(
     df: DataFrame,
     path_a: str,

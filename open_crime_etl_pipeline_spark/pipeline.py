@@ -8,7 +8,8 @@ API. Stage mapping:
     upload_to_s3         → partitioned gzip-JSON landing write (S3/S4)
     load_to_warehouses   → landing scan → silver transform → join-based
                            MERGE into the crime table (S5/S6/P1-P3/J1)
-    update_metadata      → run-ledger lifecycle rows (ST8)
+    update_metadata      → run-ledger lifecycle rows (ST8), edited on
+                           the driver with pyarrow (no Spark job)
     validate/sync        → replica reconciliation + recovery loads (ST9)
 
 Two independent `CrimePipeline` instances over different lake roots
@@ -16,7 +17,13 @@ reproduce the reference's dual-warehouse topology; `sync_from` is the
 RECOVERY path. Everything is deterministic offline via the fake://
 endpoint; swap `endpoint` for the real Socrata URL in production.
 
-Scale: the driver only ever collects O(1) metadata (watermark row,
+The landing scan reads with a pinned schema (``LANDING_SCHEMA``,
+derived from the raw Socrata schema and the writer's partition
+columns): no schema-inference job over the whole landing history on
+each run, and a field that is null in every landed record (the JSON
+writer drops null fields) still arrives as a NULL column.
+
+Scale: the driver only ever holds O(1) metadata (watermark row,
 ledger rows). Ingest, transform, and merge are all distributed; the
 merge broadcast-anti-joins the batch so the crime table never shuffles.
 """
@@ -28,6 +35,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .incremental.ledger import RunLedger
 from .incremental.reconcile import missing_load_dates
@@ -38,13 +46,23 @@ from .incremental.watermark import (
     read_watermark,
 )
 from .io.table import VersionedParquetTable
-from .io.writers import write_partitioned_crime
+from .io.writers import CRIME_PARTITION_COLS, write_partitioned_crime
 from .operators.merge import merge_upsert
-from .schemas import CRIME_SILVER_SCHEMA
+from .schemas import CRIME_RAW_SCHEMA, CRIME_SILVER_SCHEMA
 from .sources import register_socrata_source
 from .transform.crime import transform_crime_page
 
 SOQL_FMT = "%Y-%m-%dT%H:%M:%S.%f"
+
+# Landing-zone JSON as ``ingest_window`` writes it: the raw fields as
+# strings, minus ``year`` (the writer replaces it with the partition
+# column), plus the partitioning timestamp and the partition columns.
+LANDING_TS = "__ts"
+LANDING_SCHEMA = T.StructType(
+    [f for f in CRIME_RAW_SCHEMA.fields if f.name != "year"]
+    + [T.StructField(c, T.StringType(), True)
+       for c in (LANDING_TS, *CRIME_PARTITION_COLS)]
+)
 
 
 def _soql(d: dt.datetime) -> str:
@@ -99,19 +117,20 @@ class CrimePipeline:
             .load()
         )
         write_partitioned_crime(
-            raw.withColumn("__ts", F.to_timestamp("updated_on")),
-            self.landing, ts_col="__ts",
+            raw.withColumn(LANDING_TS, F.to_timestamp("updated_on")),
+            self.landing, ts_col=LANDING_TS,
             load_date=load_date.isoformat(), fmt="json",
         )
         return raw
 
     def load_batch(self, load_date: dt.date) -> DataFrame:
         """Partition-pruned landing scan (S5) → silver transform →
-        deduplicated batch ready to merge."""
+        deduplicated batch ready to merge. The scan's schema is pinned,
+        so building the batch runs no Spark job."""
         batch = (
-            self.spark.read.json(self.landing)
+            self.spark.read.schema(LANDING_SCHEMA).json(self.landing)
             .filter(F.col("load_date") == load_date.isoformat())
-            .drop("year", "month", "load_date", "__ts")
+            .drop(LANDING_TS, *CRIME_PARTITION_COLS)
         )
         return transform_crime_page(batch)
 

@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import time
+import uuid
+
 import pytest
 
 from open_crime_etl_pipeline_spark.session import get_spark
@@ -19,3 +22,33 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def jobs_started_by(spark):
+    """``jobs_started_by(fn)`` calls ``fn()`` under a fresh job group and
+    returns the ids of the Spark jobs it started."""
+    sc = spark.sparkContext
+
+    def in_group(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    def run(fn) -> list[int]:
+        probe, marker = (f"{k}-{uuid.uuid4().hex}" for k in ("probe", "marker"))
+        in_group(probe, fn)
+        # The status store takes job events in order: once a later
+        # marker job shows up, every job ``fn`` started has too.
+        in_group(marker, lambda: sc.parallelize([0], 1).count())
+        tracker = sc.statusTracker()
+        deadline = time.monotonic() + 60
+        while not tracker.getJobIdsForGroup(marker):
+            assert time.monotonic() < deadline, "marker job never reached the status store"
+            time.sleep(0.05)
+        return list(tracker.getJobIdsForGroup(probe))
+
+    return run
