@@ -36,11 +36,8 @@ def observe_batch(
     obs = Observation(name)
     metrics = [F.count(F.lit(1)).alias("n_rows")]
     if key is not None:
-        metrics.append(
-            F.sum(
-                F.when(F.col(key).isNull(), F.lit(1)).otherwise(F.lit(0))
-            ).alias("null_keys")
-        )
+        # count_if, not a sum: over no rows it is 0, not NULL
+        metrics.append(F.count_if(F.col(key).isNull()).alias("null_keys"))
         metrics.append(F.approx_count_distinct(key).alias("approx_distinct_keys"))
     return df.observe(obs, *metrics), obs
 

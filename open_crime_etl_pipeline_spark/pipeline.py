@@ -4,8 +4,10 @@ API. Stage mapping:
 
     check_table          → implicit (schemas declared, paths created on write)
     fetch_metadata       → watermark read + FULL/INCREMENT branch (ST1/ST2)
-    full/incremental     → custom REST DataSource scan, window pushed (S1/S2)
-    upload_to_s3         → partitioned gzip-JSON landing write (S3/S4)
+    full/incremental     → custom REST DataSource scan, window pushed (S1/S2);
+                           a one-window run pages on the driver
+    upload_to_s3         → partitioned gzip-JSON landing write (S3/S4),
+                           driver-side for a one-window run
     load_to_warehouses   → landing scan → silver transform → join-based
                            MERGE into the crime table (S5/S6/P1-P3/J1)
     update_metadata      → run-ledger lifecycle rows (ST8), edited on
@@ -23,9 +25,13 @@ columns): no schema-inference job over the whole landing history on
 each run, and a field that is null in every landed record (the JSON
 writer drops null fields) still arrives as a NULL column.
 
-Scale: the driver only ever holds O(1) metadata (watermark row,
-ledger rows). Ingest, transform, and merge are all distributed; the
-merge broadcast-anti-joins the batch so the crime table never shuffles.
+Scale: the driver holds O(1) metadata (watermark row, ledger rows)
+and, when a run's window is a single source partition (every daily
+INCREMENT), one REST page at a time: that window is paged and landed
+on the driver, since one partition gains nothing from a Spark job.
+Multi-window ingest (a FULL backfill, a RECOVERY span past a month),
+transform, and merge are distributed; the merge broadcast-anti-joins
+the batch so the crime table never shuffles.
 """
 
 from __future__ import annotations
@@ -46,10 +52,14 @@ from .incremental.watermark import (
     read_watermark,
 )
 from .io.table import VersionedParquetTable
-from .io.writers import CRIME_PARTITION_COLS, write_partitioned_crime
+from .io.writers import (
+    CRIME_PARTITION_COLS,
+    write_partitioned_crime,
+    write_partitioned_json_rows,
+)
 from .operators.merge import merge_upsert
 from .schemas import CRIME_RAW_SCHEMA, CRIME_SILVER_SCHEMA
-from .sources import register_socrata_source
+from .sources.socrata import SocrataReader, register_socrata_source
 from .transform.crime import transform_crime_page
 
 SOQL_FMT = "%Y-%m-%dT%H:%M:%S.%f"
@@ -105,23 +115,39 @@ class CrimePipeline:
 
     # -- DAG stages ---------------------------------------------------
     def ingest_window(self, start: dt.datetime, end: dt.datetime,
-                      load_date: dt.date) -> DataFrame:
-        """REST scan with the window pushed into the source (S1), landed
-        as partitioned gzip JSON (S3/S4). Returns the raw batch."""
-        raw = (
-            self.spark.read.format("socrata_crime")
-            .option("endpoint", self.endpoint)
-            .option("pagesize", str(self.pagesize))
-            .option("start_date", _soql(start))
-            .option("end_date", _soql(end))
-            .load()
-        )
+                      load_date: dt.date) -> None:
+        """REST scan of ``[start, end)`` with the window pushed into the
+        source (S1), landed as partitioned gzip JSON (S3/S4).
+
+        The source's partition count picks where this runs; there is no
+        row threshold and no option. One month window (every INCREMENT
+        run) is read on the driver by the source's own ``read`` (page
+        loop, retries, checkpoint) and streamed to the landing zone by
+        ``write_partitioned_json_rows``: no Spark job, because one
+        partition has no parallelism to buy. Several windows (a FULL
+        backfill, a RECOVERY span past a month) fan out as a distributed
+        scan and ``write_partitioned_crime``. Both paths land the same
+        partition dirs and rows."""
+        options = {
+            "endpoint": self.endpoint, "pagesize": str(self.pagesize),
+            "start_date": _soql(start), "end_date": _soql(end),
+        }
+        reader = SocrataReader(CRIME_RAW_SCHEMA, options)
+        windows = reader.partitions()
+        if len(windows) == 1:
+            write_partitioned_json_rows(
+                reader.read(windows[0]), reader.field_names, self.landing,
+                ts_field="updated_on", ts_col=LANDING_TS,
+                load_date=load_date.isoformat(),
+                time_zone=self.spark.conf.get("spark.sql.session.timeZone"),
+            )
+            return
+        raw = self.spark.read.format("socrata_crime").options(**options).load()
         write_partitioned_crime(
             raw.withColumn(LANDING_TS, F.to_timestamp("updated_on")),
             self.landing, ts_col=LANDING_TS,
             load_date=load_date.isoformat(), fmt="json",
         )
-        return raw
 
     def load_batch(self, load_date: dt.date) -> DataFrame:
         """Partition-pruned landing scan (S5) → silver transform →

@@ -23,7 +23,14 @@ planning, and its in-query WHERE becomes Catalyst filter pushdown:
   (reference termination, extract.py:37-38) or the page cap
   (etl/main.py:57).
 
-Endpoints: ``https://…`` POSTs real SoQL (urllib, executor-side);
+One window is read on the driver: when ``partitions()`` plans a single
+month window (every daily INCREMENT), ``CrimePipeline.ingest_window``
+builds a ``SocrataReader`` itself and runs ``read()`` in-process (page
+loop, retries, fault injection, checkpoint unchanged), because one
+partition gains no parallelism from a Spark job. Backfills of several
+windows go through the DataSource as above.
+
+Endpoints: ``https://…`` POSTs real SoQL (urllib, wherever ``read`` runs);
 ``fake://<rows_per_month>`` is a deterministic offline generator with
 identical paging/termination behavior, used by tests and the query
 inventory — this container has no network.
@@ -207,7 +214,8 @@ def _http_page(
     extra_where: Sequence[str] = (),
 ) -> list[dict]:
     """Real SoQL POST — reference extract.py:9-42 (query line 11,
-    POST line 28). Executor-side; one window per task."""
+    POST line 28). One window per call, in the process running
+    ``read`` (an executor task, or the driver for a one-window ingest)."""
     import urllib.request
 
     where = f"updated_on between '{window_start}' and '{window_end}'"

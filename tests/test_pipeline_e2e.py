@@ -4,13 +4,24 @@ overlap idempotence, ledger lifecycle, dual-replica reconciliation."""
 from __future__ import annotations
 
 import datetime as dt
+import gzip
+import os
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from open_crime_etl_pipeline_spark.io.writers import write_partitioned_crime
-from open_crime_etl_pipeline_spark.pipeline import CrimePipeline
+from open_crime_etl_pipeline_spark.io.writers import (
+    write_partitioned_crime,
+    write_partitioned_json_rows,
+)
+from open_crime_etl_pipeline_spark.pipeline import (
+    LANDING_SCHEMA,
+    LANDING_TS,
+    CrimePipeline,
+)
 from open_crime_etl_pipeline_spark.schemas import CRIME_RAW_SCHEMA
+from open_crime_etl_pipeline_spark.sources.socrata import _fake_page
 
 NOW1 = dt.datetime(2025, 2, 15, 12, 0, 0)
 NOW2 = dt.datetime(2025, 3, 10, 12, 0, 0)
@@ -130,4 +141,150 @@ def test_first_run_with_an_empty_window_succeeds(spark, tmp_path):
     p = CrimePipeline(spark, str(tmp_path / "lake"), endpoint="fake://0")
     r = p.run(now=NOW1)
     assert (r["mode"], r["status"], r["table_rows"]) == ("FULL", "SUCCESS", 0)
+    assert r["null_keys"] == 0
     assert [row.status for row in p.ledger.read().collect()] == ["SUCCESS"]
+
+
+# -- landing paths ------------------------------------------------------
+# A one-window ingest lands on the driver (``write_partitioned_json_rows``),
+# a multi-window one through a Spark scan and ``write_partitioned_crime``.
+
+def _landed(root) -> dict[str, list[str]]:
+    """Visible landed JSON lines by partition dir (relative to ``root``),
+    sorted; Spark's reader skips names starting with "." or "_"."""
+    out: dict[str, list[str]] = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            if f[0] not in "._":
+                with open(os.path.join(d, f), "rb") as fh:
+                    lines = gzip.decompress(fh.read()).decode().splitlines()
+                out.setdefault(os.path.relpath(d, root), []).extend(lines)
+    return {k: sorted(v) for k, v in out.items()}
+
+
+def _land_with_spark(spark, p, start, end, load_date):
+    raw = (
+        spark.read.format("socrata_crime")
+        .option("endpoint", p.endpoint).option("pagesize", str(p.pagesize))
+        .option("start_date", start.strftime("%Y-%m-%dT%H:%M:%S.000"))
+        .option("end_date", end.strftime("%Y-%m-%dT%H:%M:%S.000"))
+        .load()
+    )
+    write_partitioned_crime(
+        raw.withColumn(LANDING_TS, F.to_timestamp("updated_on")), p.landing,
+        ts_col=LANDING_TS, load_date=load_date.isoformat(), fmt="json",
+    )
+
+
+def _assert_same_rows(a, b):
+    assert a.count() == b.count()
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_driver_landing_equals_spark_landing(spark, tmp_path):
+    # three days across the Feb/Mar boundary: one source partition, two
+    # month= dirs; paged 10 rows at a time; ``location`` is null in
+    # every fake:// record
+    start, end, d = dt.datetime(2025, 2, 27, 5), dt.datetime(2025, 3, 2, 7), dt.date(2025, 3, 2)
+    drv = CrimePipeline(spark, str(tmp_path / "drv"), endpoint="fake://300", pagesize=10)
+    ref = CrimePipeline(spark, str(tmp_path / "ref"), endpoint="fake://300", pagesize=10)
+    drv.ingest_window(start, end, d)
+    _land_with_spark(spark, ref, start, end, d)
+
+    got, want = _landed(drv.landing), _landed(ref.landing)
+    assert sorted(got) == sorted(want) == [
+        "year=2025/month=02/load_date=2025-03-02",
+        "year=2025/month=03/load_date=2025-03-02",
+    ]
+    assert got == want  # byte-equal JSON lines
+    n = len(_fake_page(300, start, end, 0, 10**6))
+    assert sum(map(len, got.values())) == n > 20
+
+    landed = [spark.read.schema(LANDING_SCHEMA).json(p.landing) for p in (drv, ref)]
+    _assert_same_rows(*landed)
+    assert landed[0].filter(F.col("location").isNotNull()).count() == 0
+    _assert_same_rows(drv.load_batch(d), ref.load_batch(d))
+    assert drv.load_batch(d).count() == n
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/Chicago"])
+def test_driver_landing_writer_matches_spark_writer(spark, tmp_path, tz):
+    """Edge rows: a NULL and an unparseable timestamp (default
+    partition), a time in Chicago's DST gap, an offset-qualified
+    timestamp, quotes, control and non-ASCII characters, a column null
+    in every record."""
+    names = CRIME_RAW_SCHEMA.fieldNames()
+    stamps = [None, "2025-03-09T02:30:00.000", "2025-03-31T23:59:59.999",
+              "2025-04-01T03:00:00.250Z", "2025-02-28T10:15:00.000"]
+    recs = []
+    for i, ts in enumerate(stamps):
+        rec = dict.fromkeys(names)
+        rec.update({"id": f"K{i}", "updated_on": ts, "year": "2025",
+                    "block": ['say "hi"', "tab\there", "ünïcødé ✓", "\u2028\x01", "a/b\\c"][i]})
+        recs.append(tuple(rec[f] for f in names))
+    d = "2025-04-02"
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        write_partitioned_json_rows(
+            iter(recs), names, str(tmp_path / "drv"), ts_field="updated_on",
+            ts_col=LANDING_TS, load_date=d, time_zone=tz)
+        write_partitioned_crime(
+            spark.createDataFrame(recs, CRIME_RAW_SCHEMA)
+            .withColumn(LANDING_TS, F.to_timestamp("updated_on")),
+            str(tmp_path / "ref"), ts_col=LANDING_TS, load_date=d, fmt="json")
+        got, want = _landed(tmp_path / "drv"), _landed(tmp_path / "ref")
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+    assert got == want
+    assert "year=__HIVE_DEFAULT_PARTITION__/month=__HIVE_DEFAULT_PARTITION__/" \
+        f"load_date={d}" in got
+
+
+def test_only_a_multi_window_ingest_starts_spark_jobs(spark, tmp_path, jobs_started_by):
+    p = CrimePipeline(spark, str(tmp_path / "lake"), endpoint="fake://120", pagesize=60)
+    one = jobs_started_by(lambda: p.ingest_window(
+        dt.datetime(2025, 2, 27), dt.datetime(2025, 3, 2), dt.date(2025, 3, 2)))
+    assert one == []
+    several = jobs_started_by(lambda: p.ingest_window(
+        dt.datetime(2025, 1, 1), dt.datetime(2025, 3, 2), dt.date(2025, 3, 3)))
+    assert len(several) >= 1
+
+
+def test_crash_mid_landing_leaves_no_visible_file(spark, tmp_path, monkeypatch):
+    p = CrimePipeline(spark, str(tmp_path / "lake"), endpoint="fake://120", pagesize=60)
+    first = p.run(now=NOW1, load_date=NOW1.date())
+    real = pa.CompressedOutputStream
+
+    class TornStream:
+        """Writes half of the third record, then fails."""
+
+        def __init__(self, raw, codec):
+            self.inner, self.writes = real(raw, codec), 0
+
+        def write(self, data):
+            self.writes += 1
+            if self.writes == 3:
+                self.inner.write(data[: len(data) // 2])
+                raise OSError("disk full")
+            self.inner.write(data)
+
+        def close(self):
+            self.inner.close()
+
+    monkeypatch.setattr(pa, "CompressedOutputStream", TornStream)
+    with pytest.raises(OSError, match="disk full"):
+        p.run(now=NOW2, load_date=NOW2.date())
+    monkeypatch.undo()
+
+    d = NOW2.date()
+    day_dirs = [dp for dp, _, _ in os.walk(p.landing) if dp.endswith(f"load_date={d}")]
+    assert day_dirs and all(os.listdir(dp) == [] for dp in day_dirs)
+    assert p.load_batch(d).count() == 0
+    assert p.crime_table().count() == first["table_rows"]
+    assert sorted(r.status for r in p.ledger.read().collect()) == ["FAILED", "SUCCESS"]
+
+    again = p.run(now=NOW2, load_date=d)
+    start, end = (dt.datetime.fromisoformat(w) for w in again["window"])
+    assert again["status"] == "SUCCESS" and again["mode"] == "INCREMENT"
+    assert p.load_batch(d).count() == len(_fake_page(120, start, end, 0, 10**6)) > 3
