@@ -13,7 +13,7 @@ as Arrow-batched ``mapInPandas`` stages. Two decode paths exist:
   (chunk walking, signed samples, channel interleave), and YUV4MPEG2
   (Y4M) video with genuine per-frame Y-plane extraction — all
   implemented here and round-trip oracle-checked
-  (queries/llm.py::multimodal_raster_roundtrip /
+  (queries/llm/curation.py::multimodal_raster_roundtrip /
   ::multimodal_wav_roundtrip / ::multimodal_video_frame_luma).
   Formats that genuinely require native libraries (JPEG/PNG/
   compressed audio/video) still raise ``NotImplementedError`` with a

@@ -2443,7 +2443,7 @@ def manifest_check_constraints(
         "live rows, vector cleared with the replaced shard). The "
         "oracle restates the surviving rows relationally; a hash "
         "match proves all three read/DML paths applied the vectors "
-        "exactly (sources/manifest_sink.py:_delete_where_dv, "
+        "exactly (sources/manifest_sink.py:_dml, _dv_scan, "
         "_spark_read_shard_entries, _apply_dv; protocol 4).",
     tags=("sink", "datasource", "pipeline", "dv"),
 )
@@ -2650,7 +2650,7 @@ def manifest_alter_add_columns(
         "final state relationally, so a hash match proves the "
         "vectored reads, the post-image appends, and the insert path "
         "all compose exactly "
-        "(sources/manifest_sink.py:_update_where_dv, _merge_into_dv).",
+        "(sources/manifest_sink.py:_dml in mode='dv').",
     tags=("sink", "datasource", "pipeline", "dv"),
 )
 def manifest_dv_update_merge(

@@ -2966,14 +2966,16 @@ def _load_dv(fs, root: str, dv: dict | None) -> list[int]:
             return json.loads(gz.read().decode("utf-8"))
 
 
+#: the hidden row-position columns a deletion-vector scan carries
+_DV_COLS = ("__dv_file", "__dv_ri")
+
+
 def _spark_read_shard_entries(spark, path: str, entries: list[dict], schema):
     """Entries-aware snapshot read: like :func:`_spark_read_shard_files`
     but applies DELETION VECTORS — shards whose entry carries ``dv``
-    are read through Spark's parquet source with the hidden
-    ``_metadata`` columns and anti-joined (broadcast) against their
-    deleted (file, row_index) pairs, so logically-deleted rows never
-    reach the caller. Every snapshot/DML read path funnels through
-    here; shards without DVs keep the plain fast path."""
+    go through :func:`_dv_scan`, so logically-deleted rows never reach
+    the caller. Every snapshot/DML read path funnels through here;
+    shards without DVs keep the plain fast path."""
     dv_entries = [e for e in entries if e.get("dv")]
     plain = [e for e in entries if not e.get("dv")]
     frames = []
@@ -2989,39 +2991,45 @@ def _spark_read_shard_entries(spark, path: str, entries: list[dict], schema):
             )
         )
     if dv_entries:
-        from pyspark.sql import functions as F
-
-        fs, root = _fs_for(path)
-        pairs = [
-            (e["file"], int(pos))
-            for e in dv_entries
-            for pos in _load_dv(fs, root, e["dv"])
-        ]
-        files = [
-            posixpath.join(path, "shards", e["file"]) for e in dv_entries
-        ]
-        r = spark.read
-        if schema is not None:
-            r = r.schema(schema)
-        df = (
-            r.parquet(*files)
-            .withColumn("__dv_file", F.col("_metadata.file_name"))
-            .withColumn("__dv_ri", F.col("_metadata.row_index"))
-        )
-        dvdf = spark.createDataFrame(
-            pairs, "__dv_file string, __dv_ri long"
-        )
         frames.append(
-            df.join(
-                F.broadcast(dvdf),
-                on=["__dv_file", "__dv_ri"],
-                how="left_anti",
-            ).drop("__dv_file", "__dv_ri")
+            _dv_scan(spark, path, schema, dv_entries).drop(*_DV_COLS)
         )
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f)
     return out
+
+
+def _dv_scan(spark, path: str, schema, touched: list[dict]):
+    """The parquet shards ``touched`` read through Spark's parquet
+    source WITH the hidden position columns (``_DV_COLS``, from the
+    ``_metadata`` file name and row index) and their existing deletion
+    vectors applied (a broadcast anti-join on the deleted positions),
+    so an already-deleted row can never be read or matched again."""
+    from pyspark.sql import functions as F
+
+    fs, root = _fs_for(path)
+    existing_pairs = [
+        (e["file"], int(pos))
+        for e in touched
+        if e.get("dv")
+        for pos in _load_dv(fs, root, e["dv"])
+    ]
+    files = [posixpath.join(path, "shards", s["file"]) for s in touched]
+    r = spark.read
+    if schema is not None:
+        r = r.schema(schema)
+    df = (
+        r.parquet(*files)
+        .withColumn("__dv_file", F.col("_metadata.file_name"))
+        .withColumn("__dv_ri", F.col("_metadata.row_index"))
+    )
+    if existing_pairs:
+        dvdf = spark.createDataFrame(
+            existing_pairs, "__dv_file string, __dv_ri long"
+        )
+        df = df.join(F.broadcast(dvdf), on=list(_DV_COLS), how="left_anti")
+    return df
 
 
 def _schema_from_state(man: dict | None) -> StructType | None:
@@ -3744,41 +3752,46 @@ def _commit_replace(
     checkpoint_every: int = _CHECKPOINT_EVERY,
     cdf_only: list[dict] | None = None,
     expect_cdf: int | None = None,
+    dv_set: dict | None = None,
+    base_dv: dict | None = None,
 ) -> dict:
-    """Publish a copy-on-write DML result as ONE action commit through
-    the optimistic claim loop: ``remove_files`` leave the live set,
-    ``unchanged`` shards ride as ``data_change=false`` (a tailing
+    """Publish a DML (or ``compact_small``) result as ONE action commit
+    through the optimistic claim loop — the one builder of every DML
+    action, rewrite or deletion-vector: ``remove_files`` leave the live
+    set, ``unchanged`` shards ride as ``data_change=false`` (a tailing
     reader already has those rows) and ``changed`` shards as new data
     stamped with this commit's seq (the tail receives EXACTLY them).
     ``changed`` entries may carry a ``cdf_class`` (update_postimage /
     insert) that CDF readers surface as ``_change_type``.
 
-    ``cdf_only`` (round 12) are CDF-ONLY shard entries — delete rows
-    and update pre-images, each tagged ``cdf_class`` — recorded under
-    the action's ``cdf_add``: snapshot reads never see them (they are
-    not in the live set), CDF readers deliver them with their class,
-    and vacuum protects them while the action is retained (Delta's
+    ``cdf_only`` are CDF-ONLY shard entries — delete rows and update
+    pre-images, each tagged ``cdf_class`` — recorded under the
+    action's ``cdf_add``: snapshot reads never see them (they are not
+    in the live set), CDF readers deliver them with their class, and
+    vacuum protects them while the action is retained (Delta's
     ``_change_data`` directory shape). An action carrying them stamps
     ``min_reader`` 3 — an older vacuum would misclassify the files as
     garbage.
 
+    ``dv_set`` (``{shard: {"file", "n"}}``, from
+    :func:`_dv_merge_vectors`) marks shards with new deletion vectors
+    instead of removing them, and stamps protocol 4; ``base_dv`` is the
+    vector each one started from, pinned by :func:`_dv_conflict_check`.
+
     Guards: per-class row counts must match exactly, and the commit
-    REFUSES to publish if any replaced shard is no longer live — a
-    concurrent rewrite won the race against the DML's snapshot read
-    (the Delta write-conflict contract); re-run against the new
-    state."""
+    REFUSES to publish if any replaced shard is no longer live or a
+    vectored shard's vector advanced — a concurrent rewrite won the
+    race against the DML's snapshot read (the Delta write-conflict
+    contract); re-run against the new state."""
     cdf_only = cdf_only or []
-    n_unchanged = sum(s["n_rows"] for s in unchanged)
-    n_changed = sum(s["n_rows"] for s in changed)
     checks = [
-        (n_unchanged, expect_unchanged, "survivor"),
-        (n_changed, expect_changed, "upserted"),
+        (unchanged, expect_unchanged, "survivor"),
+        (changed, expect_changed, "upserted"),
     ]
     if expect_cdf is not None:
-        checks.append(
-            (sum(s["n_rows"] for s in cdf_only), expect_cdf, "change-data")
-        )
-    for got, want, cls in checks:
+        checks.append((cdf_only, expect_cdf, "change-data"))
+    for shards, want, cls in checks:
+        got = sum(s["n_rows"] for s in shards)
         if got != want:
             raise ValueError(
                 f"{kind}: {cls} row count {got} != expected {want} - "
@@ -3796,10 +3809,11 @@ def _commit_replace(
                 "since this DML's snapshot was read; re-run against "
                 "the current table"
             )
+        _dv_conflict_check(prev, dv_set or {}, base_dv or {}, kind)
         add = [
             {**s, "added_seq": seq, "data_change": False} for s in unchanged
         ] + [{**s, "added_seq": seq} for s in changed]
-        return {
+        action = {
             "version": 2,
             "commit_seq": seq,
             "commit_kind": kind,
@@ -3807,138 +3821,20 @@ def _commit_replace(
             "remove": sorted(
                 set(remove_files) - {s["file"] for s in add}
             ),
-            **(
-                {
-                    "cdf_add": sorted(
-                        cdf_only, key=lambda s: (s["cdf_class"], s["file"])
-                    ),
-                    "min_reader": _CDF_MIN_READER,
-                }
-                if cdf_only
-                else {}
-            ),
         }
+        if dv_set:
+            action["dv_set"] = dv_set
+        if cdf_only:
+            action["cdf_add"] = sorted(
+                cdf_only, key=lambda s: (s["cdf_class"], s["file"])
+            )
+        if dv_set or cdf_only:
+            action["min_reader"] = (
+                _DV_MIN_READER if dv_set else _CDF_MIN_READER
+            )
+        return action
 
     return _commit_with_retries(path, build_action, checkpoint_every)
-
-
-def delete_where(
-    spark,
-    path: str,
-    schema,
-    predicate,
-    prune: dict[str, tuple] | None = None,
-    prune_eq: dict | None = None,
-    change_data: bool = True,
-    mode: str = "rewrite",
-) -> tuple[dict, int]:
-    """Row-level ``DELETE WHERE`` on the manifest table — copy-on-write
-    shard rewrites published as ONE atomic commit (the Delta DML
-    shape). ``predicate`` (a Column or SQL string) selects the rows to
-    DELETE; SQL three-valued logic applies, so NULL-evaluating rows
-    SURVIVE. ``prune``/``prune_eq`` bound the rewrite scope with the
-    same shard-stats admission reads use: only shards that MAY hold
-    matching rows are rewritten — at 100 TB a selective delete
-    rewrites a handful of files, not the table — and the row predicate
-    still runs inside the rewrite, so over-admission only costs IO.
-
-    Guards: the commit verifies the survivor row count equals
-    (touched rows − matched rows) exactly, and REFUSES to publish if
-    any replaced shard is no longer live (a concurrent
-    compact/overwrite/delete won the race — the write-conflict
-    contract; re-run against the new state). Survivor shards carry
-    ``data_change=false``: their rows were already delivered.
-
-    ``change_data=True`` (round 12 — the full Delta CDF) additionally
-    materializes the DELETED rows as a CDF-ONLY shard (the action's
-    ``cdf_add``; Delta's ``_change_data`` directory): snapshot reads
-    never see it, but ``table_changes(with_change_type=True)``
-    delivers those rows as ``_change_type='delete'`` — a downstream
-    replica tailing the CDF can now APPLY the delete instead of
-    requiring Merkle reconciliation. ``change_data=False`` skips the
-    extra staged write (the pre-r12 adds-only contract).
-
-    ``mode="dv"`` (round 12 — DELETION VECTORS, the Delta DV shape)
-    skips the copy-on-write rewrite entirely: the matched rows'
-    (shard, row position) pairs are recorded as content-addressed
-    deletion-vector files under ``dv/`` and ONE metadata commit marks
-    the touched shards (``dv_set``) — a narrow delete on a huge shard
-    costs O(matched rows), never O(shard). Every read path applies
-    the vectors (native scans anti-join the positions via the hidden
-    ``_metadata`` columns; the DataSource decode masks them), stats
-    stay conservative over-approximations, and any later rewrite of
-    the shard (compact/DML) materializes the delete and clears the
-    vector. Parquet-codec shards only (row positions need the parquet
-    reader's ``row_index``); actions/states carrying DVs stamp
-    protocol 4. Returns ``(new_manifest, n_deleted)``; a delete
-    matching zero rows publishes nothing."""
-    from pyspark.sql import functions as F
-
-    man = read_manifest_dict(path)
-    if man is None or not man["shards"]:
-        raise FileNotFoundError(f"no committed manifest at {path}")
-    if schema is None:
-        schema = _schema_from_state(man)  # the log's recorded schema
-    if prune or prune_eq:
-        touched, _total = prune_shards(man, prune, prune_eq)
-    else:
-        touched = list(man["shards"])
-    if not touched:
-        return man, 0  # stats refute the predicate everywhere: no-op
-    if mode == "dv":
-        return _delete_where_dv(
-            spark, path, schema, predicate, touched, change_data
-        )
-    if mode != "rewrite":
-        raise ValueError(
-            f"delete_where: mode must be 'rewrite' or 'dv', got {mode!r}"
-        )
-    cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-    # persist the touched-shard read: it feeds the matched/total count
-    # aggregation AND the survivor staging write — without the cache
-    # each consumer re-decodes the same shards (the same
-    # multi-consumer pattern merge_into caches; round-11 ADVICE)
-    df = _spark_read_shard_entries(spark, path, touched, schema).persist()
-    try:
-        counts = df.agg(
-            F.sum(F.when(cond, 1).otherwise(0)).alias("matched"),
-            F.count(F.lit(1)).alias("total"),
-        ).first()
-        n_deleted = int(counts["matched"] or 0)
-        if n_deleted == 0:
-            return man, 0  # nothing matched: publish nothing
-        hit = F.coalesce(cond, F.lit(False))
-        survivors = df.filter(~hit).repartition(max(1, len(touched)))
-        staged = _stage_write(survivors, path, "delete", touched)
-        staged_cdf = (
-            [
-                {**e, "cdf_class": "delete"}
-                for e in _stage_write(
-                    df.filter(hit).repartition(
-                        max(1, min(len(touched), 8))
-                    ),
-                    path,
-                    "delete-cdf",
-                    touched,
-                )
-            ]
-            if change_data
-            else []
-        )
-    finally:
-        df.unpersist()
-    man2 = _commit_replace(
-        path,
-        kind="delete",
-        remove_files=sorted(s["file"] for s in touched),
-        unchanged=staged,
-        changed=[],
-        expect_unchanged=int(counts["total"]) - n_deleted,
-        expect_changed=0,
-        cdf_only=staged_cdf,
-        expect_cdf=n_deleted if change_data else None,
-    )
-    return man2, n_deleted
 
 
 def _dv_require_parquet(touched: list[dict], verb: str) -> None:
@@ -3955,50 +3851,18 @@ def _dv_require_parquet(touched: list[dict], verb: str) -> None:
         )
 
 
-def _dv_scan(spark, path: str, schema, touched: list[dict]):
-    """The touched shards read WITH the hidden position columns
-    (``__dv_file``/``__dv_ri``) and existing deletion vectors already
-    applied — the shared scan under every dv-mode DML verb (an
-    already-deleted row can never match twice)."""
-    from pyspark.sql import functions as F
-
-    fs, root = _fs_for(path)
-    existing_pairs = [
-        (e["file"], int(pos))
-        for e in touched
-        if e.get("dv")
-        for pos in _load_dv(fs, root, e["dv"])
-    ]
-    files = [posixpath.join(path, "shards", s["file"]) for s in touched]
-    r = spark.read
-    if schema is not None:
-        r = r.schema(schema)
-    df = (
-        r.parquet(*files)
-        .withColumn("__dv_file", F.col("_metadata.file_name"))
-        .withColumn("__dv_ri", F.col("_metadata.row_index"))
-    )
-    if existing_pairs:
-        dvdf = spark.createDataFrame(
-            existing_pairs, "__dv_file string, __dv_ri long"
-        )
-        df = df.join(
-            F.broadcast(dvdf), on=["__dv_file", "__dv_ri"], how="left_anti"
-        )
-    return df
-
-
 def _dv_merge_vectors(
     path: str, touched: list[dict], hits, verb: str
 ) -> tuple[dict, dict]:
-    """Union each hit shard's existing vector with the new positions,
-    write the merged content-addressed ``dv/`` files, and return
-    ``(dv_set, base_dv)`` — the action payload plus the lineage base
-    the conflict check pins (the vector each merge STARTED from)."""
+    """Union each hit shard's existing vector with the new positions
+    (``hits``: rows carrying ``_DV_COLS``), write the merged
+    content-addressed ``dv/`` files, and return ``(dv_set, base_dv)``
+    — the action payload plus the lineage base the conflict check
+    pins (the vector each merge STARTED from)."""
     fs, root = _fs_for(path)
     new_by_shard: dict[str, set] = {}
-    for f, ri in hits:
-        new_by_shard.setdefault(f, set()).add(int(ri))
+    for r in hits:
+        new_by_shard.setdefault(r["__dv_file"], set()).add(int(r["__dv_ri"]))
     by_entry = {e["file"]: e for e in touched}
     base_dv = {
         f: (by_entry[f].get("dv") or {}).get("file") for f in new_by_shard
@@ -4042,79 +3906,277 @@ def _dv_conflict_check(
             )
 
 
+def _dml_prelude(
+    path: str,
+    schema,
+    verb: str,
+    mode: str,
+    prune: dict[str, tuple] | None = None,
+    prune_eq: dict | None = None,
+) -> tuple[dict, object, list[dict]]:
+    """The prelude every DML verb shares: validate ``mode`` FIRST (so a
+    bad mode is refused even where the verb would return early as a
+    no-op), read the committed manifest, take the schema from the log
+    when none is given, and admit the touched shards by their recorded
+    stats. Returns ``(man, schema, touched)``."""
+    if mode not in ("rewrite", "dv"):
+        raise ValueError(
+            f"{verb}: mode must be 'rewrite' or 'dv', got {mode!r}"
+        )
+    man = read_manifest_dict(path)
+    if man is None or not man["shards"]:
+        raise FileNotFoundError(f"no committed manifest at {path}")
+    if schema is None:
+        schema = _schema_from_state(man)  # the log's recorded schema
+    touched, _total = prune_shards(man, prune, prune_eq)
+    return man, schema, touched
 
-def _delete_where_dv(
-    spark, path: str, schema, predicate, touched: list[dict],
+
+def _dml(
+    spark,
+    path: str,
+    verb: str,
+    mode: str,
+    man: dict,
+    schema,
+    touched: list[dict],
     change_data: bool,
-) -> tuple[dict, int]:
-    """The deletion-vector delete (see :func:`delete_where` docs):
-    ONE scan of the touched shards (existing DVs applied, so an
-    already-deleted row can never match twice) finds the matched
-    (shard, row_index) pairs; merged per-shard vectors are written as
-    content-addressed ``dv/`` files and published by one metadata
-    commit that REFUSES if a touched shard was rewritten or its DV
-    advanced concurrently (the write-conflict contract, extended to
-    vector lineage)."""
+    cond=None,
+    sets: dict | None = None,
+    src=None,
+    key_cols: list[str] | tuple = (),
+    n_src: int = 0,
+) -> tuple[dict, int, int]:
+    """The one DML path under :func:`delete_where` (``cond``),
+    :func:`update_where` (``cond`` + ``sets``) and :func:`merge_into`
+    (``src`` keyed by ``key_cols``), in both modes, against the
+    snapshot ``man`` and its admitted ``touched`` shards:
+
+    1. **scan** the touched shards — ``mode="dv"`` through
+       :func:`_dv_scan` (row positions, existing vectors applied);
+    2. **classify** the rows: *matched* (``cond`` TRUE, or the key
+       present in ``src``); *survivors*, the rest (rewrite mode only —
+       dv mode never rewrites them); *pre-images*, the matched rows
+       (CDF ``delete`` / ``update_preimage``); *post-images*, the SET
+       projection of the pre-images, or the matched-key source rows
+       (``update_postimage``) plus the unseen-key ones (``insert``);
+    3. **stage** each class as its own shards, tagged with its class;
+    4. **publish** ONE commit through :func:`_commit_replace`, which
+       checks every class's row count — rewrite mode replaces the
+       touched shards, dv mode vectors the matched positions out.
+
+    Returns ``(new_manifest, n_matched, n_inserted)``; a delete or
+    update matching nothing publishes nothing."""
     from pyspark.sql import functions as F
 
-    _dv_require_parquet(touched, "delete_where")
-    cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-    df = _dv_scan(spark, path, schema, touched)
-    matched = df.filter(F.coalesce(cond, F.lit(False))).persist()
+    kind, dv = verb.split("_")[0], mode == "dv"
+    if src is None and not touched:
+        return man, 0, 0  # stats refute the predicate everywhere: no-op
+    base, hits = None, []
+    n_hit = n_total = n_keys = 0
     try:
-        hits = matched.select("__dv_file", "__dv_ri").collect()
-        n_deleted = len(hits)
-        if n_deleted == 0:
-            return read_manifest_dict(path), 0
-        staged_cdf = (
-            [
-                {**e, "cdf_class": "delete"}
-                for e in _stage_write(
-                    matched.drop("__dv_file", "__dv_ri").repartition(
-                        max(1, min(len(touched), 8))
-                    ),
-                    path,
-                    "delete-dv-cdf",
-                    touched,
+        if touched:
+            if dv:
+                _dv_require_parquet(touched, verb)
+                scan = _dv_scan(spark, path, schema, touched)
+            else:
+                scan = _spark_read_shard_entries(spark, path, touched, schema)
+            if src is None:
+                c = F.expr(cond) if isinstance(cond, str) else cond
+                hit = F.coalesce(c, F.lit(False))  # NULL rows survive
+            else:
+                # ONE left join flags the target rows whose key the
+                # source holds (key-unique, so no row is duplicated);
+                # the key set broadcasts only while broadcast-SIZED
+                marks = src.select(*key_cols).withColumn("__hit", F.lit(True))
+                if n_src <= 100_000:
+                    marks = F.broadcast(marks)
+                scan = scan.join(marks, on=key_cols, how="left").select(
+                    *scan.columns, F.col("__hit").isNotNull().alias("__hit")
                 )
-            ]
-            if change_data
+                hit = F.col("__hit")
+            bad = set(sets or ()) - (set(scan.columns) - set(_DV_COLS))
+            if bad:
+                raise ValueError(
+                    f"{verb}: SET targets not in schema: {sorted(bad)}"
+                )
+            if dv:
+                # cache only the matched rows: O(matched), never O(shard)
+                base = scan.filter(hit).persist()
+                hits = base.select(*_DV_COLS, *key_cols).collect()
+                n_hit = len(hits)
+                if key_cols:
+                    n_keys = len({tuple(r[k] for k in key_cols) for r in hits})
+            else:
+                # cache the touched read: it feeds the counts and every
+                # staged class, which would each re-decode the shards
+                base = scan.persist()
+                row = base.agg(
+                    F.count(F.when(hit, 1)).alias("hit"),
+                    F.count(F.lit(1)).alias("total"),
+                    *(
+                        [F.count_distinct(F.when(hit, F.struct(*key_cols)))
+                         .alias("keys")]
+                        if key_cols
+                        else []
+                    ),
+                ).first()
+                n_hit, n_total = row["hit"], row["total"]
+                n_keys = row["keys"] if key_cols else 0
+        if src is None and not n_hit:
+            return man, 0, 0  # nothing matched: publish nothing
+        if src is not None and n_hit > n_keys:
+            # more matched TARGET rows than distinct matched keys: the
+            # target holds duplicate-key rows, and replacing them all
+            # with one source row would silently SHRINK the table
+            # (Delta updates each matched row; this layer upserts by
+            # unique key). Refuse before anything is staged.
+            raise ValueError(
+                "merge_into: target has duplicate keys among matched "
+                f"rows ({n_hit} matched rows over {n_keys} distinct "
+                "keys) - this merge upserts by UNIQUE key and would "
+                "collapse the duplicates; dedup the target first "
+                "(e.g. delete_where or a dedup rewrite)"
+            )
+        matched = base.filter(hit).drop(*_DV_COLS, "__hit") if n_hit else None
+        if sets:
+            exprs = {
+                c: (F.expr(e) if isinstance(e, str) else e)
+                for c, e in sets.items()
+            }
+            # SET expressions see the PRE-update row (select, not
+            # chained withColumn — a chain would let one assignment
+            # observe another's result, which is not UPDATE
+            # semantics); casting back to the declared type keeps the
+            # rewrite schema-stable
+            updated = matched.select(
+                *[
+                    exprs[f.name].cast(f.dataType).alias(f.name)
+                    if f.name in exprs
+                    else F.col(f.name)
+                    for f in matched.schema.fields
+                ]
+            )
+            # recorded CHECK constraints judge the POST-update rows
+            # (the only rows this DML introduces), before any staging
+            _enforce_constraints(updated, man.get("constraints"), verb)
+        bloom_src = touched or man["shards"]
+
+        def stage(rows, cdf_class=None) -> list[dict]:
+            # one row class -> its own shards (a shard is never mixed);
+            # survivors keep the touched shard count, the rest <= 8
+            n_out = len(touched) if cdf_class is None else min(len(touched), 8)
+            entries = _stage_write(
+                rows.repartition(max(1, n_out)), path,
+                f"{kind}-{cdf_class or 'survivors'}", bloom_src,
+            )
+            if cdf_class is None:
+                return entries
+            return [{**e, "cdf_class": cdf_class} for e in entries]
+
+        survivors = (
+            stage(base.filter(~hit).drop("__hit"))
+            if touched and not dv
             else []
         )
-    finally:
-        matched.unpersist()
-    dv_set, base_dv = _dv_merge_vectors(
-        path, touched, hits, "delete_where"
-    )
-    if change_data and sum(
-        s["n_rows"] for s in staged_cdf
-    ) != n_deleted:
-        raise ValueError(
-            "delete_where(dv): change-data row count mismatch - "
-            "nothing was published"
+        pre = (
+            stage(matched, "delete" if kind == "delete" else "update_preimage")
+            if change_data and n_hit
+            else []
         )
+        post = stage(updated, "update_postimage") if sets else []
+        n_inserted = n_src - n_keys
+        if n_keys:
+            mk = matched.select(*key_cols)
+            post += stage(
+                src.join(mk, on=key_cols, how="left_semi"), "update_postimage"
+            )
+        if n_inserted:
+            post += stage(
+                src.join(mk, on=key_cols, how="left_anti") if n_keys else src,
+                "insert",
+            )
+    finally:
+        if base is not None:
+            base.unpersist()
+    dv_set, base_dv = (
+        _dv_merge_vectors(path, touched, hits, verb) if hits else ({}, {})
+    )
+    man2 = _commit_replace(
+        path,
+        kind=kind,
+        remove_files=[] if dv else sorted(s["file"] for s in touched),
+        unchanged=survivors,
+        changed=post,
+        expect_unchanged=0 if dv else n_total - n_hit,
+        expect_changed=(
+            n_src if src is not None else n_hit if sets else 0
+        ),
+        cdf_only=pre,
+        expect_cdf=n_hit if change_data else None,
+        dv_set=dv_set,
+        base_dv=base_dv,
+    )
+    return man2, n_hit, n_inserted
 
-    def build_action(prev: dict | None, seq: int) -> dict:
-        _dv_conflict_check(prev, dv_set, base_dv, "delete_where")
-        return {
-            "version": 2,
-            "commit_seq": seq,
-            "commit_kind": "delete",
-            "add": [],
-            "remove": [],
-            "dv_set": dv_set,
-            "min_reader": _DV_MIN_READER,
-            **(
-                {"cdf_add": sorted(
-                    staged_cdf, key=lambda s: (s["cdf_class"], s["file"])
-                )}
-                if staged_cdf
-                else {}
-            ),
-        }
 
-    man2 = _commit_with_retries(path, build_action)
+def delete_where(
+    spark,
+    path: str,
+    schema,
+    predicate,
+    prune: dict[str, tuple] | None = None,
+    prune_eq: dict | None = None,
+    change_data: bool = True,
+    mode: str = "rewrite",
+) -> tuple[dict, int]:
+    """Row-level ``DELETE WHERE`` on the manifest table, published as
+    ONE atomic commit (the Delta DML shape). ``predicate`` (a Column or
+    SQL string) selects the rows to DELETE; SQL three-valued logic
+    applies, so NULL-evaluating rows SURVIVE. ``prune``/``prune_eq``
+    bound the scope with the same shard-stats admission reads use:
+    only shards that MAY hold matching rows are touched — at 100 TB a
+    selective delete rewrites a handful of files, not the table — and
+    the row predicate still runs inside, so over-admission only costs
+    IO.
+
+    ``mode="rewrite"`` (copy-on-write): the touched shards are replaced
+    by their survivors, which ride ``data_change=false`` (their rows
+    were already delivered); the commit verifies the survivor count
+    equals (touched rows − matched rows) exactly and REFUSES to publish
+    if any replaced shard is no longer live (a concurrent
+    compact/overwrite/delete won the race — the write-conflict
+    contract; re-run against the new state).
+
+    ``mode="dv"`` (DELETION VECTORS, the Delta DV shape) skips the
+    rewrite: the matched rows' (shard, row position) pairs are recorded
+    as content-addressed deletion-vector files under ``dv/`` and ONE
+    metadata commit marks the touched shards (``dv_set``) — a narrow
+    delete on a huge shard costs O(matched rows), never O(shard). Every
+    read path applies the vectors, stats stay conservative
+    over-approximations, and any later rewrite of the shard
+    (compact/DML) materializes the delete and clears the vector. The
+    commit refuses if a vectored shard was rewritten or its vector
+    advanced concurrently. Parquet-codec shards only (row positions
+    need the parquet reader's ``row_index``); protocol 4.
+
+    ``change_data=True`` (the full Delta CDF) additionally materializes
+    the DELETED rows as a CDF-ONLY shard (the action's ``cdf_add``;
+    Delta's ``_change_data`` directory): snapshot reads never see it,
+    but ``table_changes(with_change_type=True)`` delivers those rows as
+    ``_change_type='delete'``, so a downstream replica tailing the CDF
+    can APPLY the delete. ``change_data=False`` skips that staged
+    write. Returns ``(new_manifest, n_deleted)``; a delete matching
+    zero rows publishes nothing."""
+    man, schema, touched = _dml_prelude(
+        path, schema, "delete_where", mode, prune, prune_eq
+    )
+    man2, n_deleted, _ = _dml(
+        spark, path, "delete_where", mode, man, schema, touched,
+        change_data, cond=predicate,
+    )
     return man2, n_deleted
+
 
 def update_where(
     spark,
@@ -4128,259 +4190,49 @@ def update_where(
     mode: str = "rewrite",
 ) -> tuple[dict, int]:
     """Row-level ``UPDATE WHERE ... SET`` on the manifest table — the
-    third Delta DML verb, completing the triad with
-    :func:`delete_where` and :func:`merge_into` (round-10 verdict item
-    3). Copy-on-write: ``prune``/``prune_eq`` scope the rewrite to the
-    shards whose recorded stats ADMIT the predicate (over-admission
-    only costs IO — the row predicate still runs inside the rewrite);
-    rows where ``predicate`` is TRUE get every ``assignments`` entry
-    applied (``{col: Column-or-SQL-string}``, evaluated against the
-    PRE-update row, Spark/Delta UPDATE semantics); NULL-evaluating
-    rows survive untouched (three-valued logic).
+    third Delta DML verb, with :func:`delete_where` and
+    :func:`merge_into`. ``prune``/``prune_eq`` scope the touched shards
+    exactly as for :func:`delete_where`; rows where ``predicate`` is
+    TRUE get every ``assignments`` entry applied (``{col:
+    Column-or-SQL-string}``, evaluated against the PRE-update row,
+    Spark/Delta UPDATE semantics); NULL-evaluating rows survive
+    untouched (three-valued logic). Recorded CHECK constraints judge
+    the post-update rows.
 
-    ONE atomic action commit publishes the result: survivor shards
-    ride ``data_change=false`` (a tailing reader already has those
-    rows) while the UPDATED rows land as new data stamped with this
-    commit's seq — the CDF delta is exactly the post-image of the
-    updated rows, the same contract as :func:`merge_into`'s upserts.
-    ``change_data=True`` (round 12) additionally materializes the
-    PRE-update rows as a CDF-only shard, so
-    ``table_changes(with_change_type=True)`` delivers the Delta
-    quartet exactly: these rows as ``update_preimage`` and the
-    rewritten rows as ``update_postimage``.
+    ONE atomic action commit publishes the result: the UPDATED rows
+    land as new data stamped with this commit's seq — the CDF delta is
+    exactly the post-image of the updated rows, the same contract as
+    :func:`merge_into`'s upserts. ``mode="rewrite"`` replaces the
+    touched shards, survivors riding ``data_change=false``;
+    ``mode="dv"`` (the Delta DV-update shape) deletion-vectors the
+    matched rows OUT of their shards instead — cost O(matched rows +
+    post-image bytes), survivors never rewritten (parquet-codec shards
+    only; protocol 4). ``change_data=True`` additionally materializes
+    the PRE-update rows as a CDF-only shard, so
+    ``table_changes(with_change_type=True)`` delivers the Delta quartet
+    exactly: these rows as ``update_preimage`` and the rewritten rows
+    as ``update_postimage``.
 
-    ``mode="dv"`` (round 12, wave 2 — the Delta DV-update shape):
-    instead of rewriting every touched shard, the matched rows are
-    deletion-vectored OUT of their shards and their post-images
-    appended as new data shards — ONE commit carrying ``dv_set`` +
-    ``add``, cost O(matched rows + post-image bytes) instead of
-    O(touched shard bytes). Survivor rows are never rewritten or
-    re-delivered (no ``data_change=false`` shards at all). CDF is
-    identical to the rewrite mode. Parquet-codec shards only;
-    protocol 4.
-    Both row classes are count-guarded (survivors = touched − matched,
-    updated = matched, exactly) and the commit refuses to publish if a
-    replaced shard is no longer live (concurrent-rewrite conflict —
-    re-run against the new state). Assignments must target columns in
-    ``schema``; like every rewrite here, touched rows are PROJECTED
+    Every row class is count-guarded and the commit refuses to publish
+    if a replaced shard is no longer live (concurrent-rewrite conflict
+    — re-run against the new state). Assignments must target columns
+    in ``schema``; like every rewrite here, touched rows are PROJECTED
     through ``schema``, so pass the table's full schema. Returns
     ``(new_manifest, n_updated)``; zero matches publish nothing.
 
     Reference parity: the reference's only row-level update is the
     warehouse-side ``ON CONFLICT DO UPDATE`` (`load.py`, S7/J1); this
     is the lakehouse-native predicate form of the same verb."""
-    from pyspark.sql import functions as F
-
-    man = read_manifest_dict(path)
-    if man is None or not man["shards"]:
-        raise FileNotFoundError(f"no committed manifest at {path}")
-    if schema is None:
-        schema = _schema_from_state(man)  # the log's recorded schema
+    man, schema, touched = _dml_prelude(
+        path, schema, "update_where", mode, prune, prune_eq
+    )
     if not assignments:
         raise ValueError("update_where: assignments must be non-empty")
-    if prune or prune_eq:
-        touched, _total = prune_shards(man, prune, prune_eq)
-    else:
-        touched = list(man["shards"])
-    if not touched:
-        return man, 0  # stats refute the predicate everywhere: no-op
-    if mode == "dv":
-        return _update_where_dv(
-            spark, path, schema, predicate, assignments, touched,
-            change_data, man,
-        )
-    if mode != "rewrite":
-        raise ValueError(
-            f"update_where: mode must be 'rewrite' or 'dv', got {mode!r}"
-        )
-    cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-    # persist the touched-shard read: it feeds THREE consumers — the
-    # matched/total count aggregation, the survivor staging write, and
-    # the updated-rows staging write — and without the cache each one
-    # re-decodes the same shards (the same multi-consumer pattern
-    # merge_into caches; round-11 ADVICE)
-    df = _spark_read_shard_entries(spark, path, touched, schema).persist()
-    try:
-        bad = set(assignments) - set(df.columns)
-        if bad:
-            raise ValueError(
-                f"update_where: SET targets not in schema: {sorted(bad)}"
-            )
-        counts = df.agg(
-            F.sum(F.when(cond, 1).otherwise(0)).alias("matched"),
-            F.count(F.lit(1)).alias("total"),
-        ).first()
-        n_updated = int(counts["matched"] or 0)
-        if n_updated == 0:
-            return man, 0  # nothing matched: publish nothing
-        hit = F.coalesce(cond, F.lit(False))
-        sets = {
-            c: (F.expr(e) if isinstance(e, str) else e)
-            for c, e in assignments.items()
-        }
-        survivors = df.filter(~hit).repartition(max(1, len(touched)))
-        # SET expressions see the PRE-update row (select, not chained
-        # withColumn — a chain would let one assignment observe
-        # another's result, which is not UPDATE semantics); casting
-        # back to the declared type keeps the rewrite schema-stable.
-        updated = df.filter(hit).select(
-            *[
-                sets[f.name].cast(f.dataType).alias(f.name)
-                if f.name in sets
-                else F.col(f.name)
-                for f in df.schema.fields
-            ]
-        )
-        # recorded CHECK constraints judge the POST-update rows (the
-        # only rows this DML introduces); survivors already satisfied
-        # them when they landed
-        _enforce_constraints(
-            updated, man.get("constraints"), "update_where"
-        )
-        n_shards_upd = max(1, min(len(touched), 8))
-        staged_survivors = _stage_write(
-            survivors, path, "update-surv", touched
-        )
-        staged_updated = [
-            {**e, "cdf_class": "update_postimage"}
-            for e in _stage_write(
-                updated.repartition(n_shards_upd),
-                path,
-                "update-rows",
-                touched,
-            )
-        ]
-        staged_cdf = (
-            [
-                {**e, "cdf_class": "update_preimage"}
-                for e in _stage_write(
-                    df.filter(hit).repartition(n_shards_upd),
-                    path,
-                    "update-cdf",
-                    touched,
-                )
-            ]
-            if change_data
-            else []
-        )
-    finally:
-        df.unpersist()
-    man2 = _commit_replace(
-        path,
-        kind="update",
-        remove_files=sorted(s["file"] for s in touched),
-        unchanged=staged_survivors,
-        changed=staged_updated,
-        expect_unchanged=int(counts["total"]) - n_updated,
-        expect_changed=n_updated,
-        cdf_only=staged_cdf,
-        expect_cdf=n_updated if change_data else None,
+    man2, n_updated, _ = _dml(
+        spark, path, "update_where", mode, man, schema, touched,
+        change_data, cond=predicate, sets=assignments,
     )
     return man2, n_updated
-
-
-def _update_where_dv(
-    spark, path: str, schema, predicate, assignments: dict,
-    touched: list[dict], change_data: bool, man: dict,
-) -> tuple[dict, int]:
-    """The deletion-vector UPDATE (see :func:`update_where` docs):
-    dv-delete the matched rows, append their post-images — one
-    commit, no survivor rewrite."""
-    from pyspark.sql import functions as F
-
-    _dv_require_parquet(touched, "update_where")
-    if not assignments:
-        raise ValueError("update_where: assignments must be non-empty")
-    cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-    df = _dv_scan(spark, path, schema, touched)
-    bad = set(assignments) - (set(df.columns) - {"__dv_file", "__dv_ri"})
-    if bad:
-        raise ValueError(
-            f"update_where: SET targets not in schema: {sorted(bad)}"
-        )
-    matched = df.filter(F.coalesce(cond, F.lit(False))).persist()
-    try:
-        hits = matched.select("__dv_file", "__dv_ri").collect()
-        n_updated = len(hits)
-        if n_updated == 0:
-            return man, 0  # nothing matched: publish nothing
-        pre = matched.drop("__dv_file", "__dv_ri")
-        sets = {
-            c: (F.expr(e) if isinstance(e, str) else e)
-            for c, e in assignments.items()
-        }
-        # SET expressions see the PRE-update row (select, not chained
-        # withColumn), exactly the rewrite mode's semantics
-        post = pre.select(
-            *[
-                sets[f.name].cast(f.dataType).alias(f.name)
-                if f.name in sets
-                else F.col(f.name)
-                for f in pre.schema.fields
-            ]
-        )
-        _enforce_constraints(post, man.get("constraints"), "update_where")
-        n_shards = max(1, min(len(touched), 8))
-        staged_post = [
-            {**e, "cdf_class": "update_postimage"}
-            for e in _stage_write(
-                post.repartition(n_shards), path, "update-dv-rows", touched
-            )
-        ]
-        if sum(s["n_rows"] for s in staged_post) != n_updated:
-            raise ValueError(
-                "update_where(dv): post-image row count mismatch - "
-                "nothing was published"
-            )
-        staged_cdf = (
-            [
-                {**e, "cdf_class": "update_preimage"}
-                for e in _stage_write(
-                    pre.repartition(n_shards), path, "update-dv-cdf",
-                    touched,
-                )
-            ]
-            if change_data
-            else []
-        )
-        if change_data and sum(
-            s["n_rows"] for s in staged_cdf
-        ) != n_updated:
-            raise ValueError(
-                "update_where(dv): change-data row count mismatch - "
-                "nothing was published"
-            )
-    finally:
-        matched.unpersist()
-    dv_set, base_dv = _dv_merge_vectors(
-        path, touched, hits, "update_where"
-    )
-
-    def build_action(prev: dict | None, seq: int) -> dict:
-        _dv_conflict_check(prev, dv_set, base_dv, "update_where")
-        return {
-            "version": 2,
-            "commit_seq": seq,
-            "commit_kind": "update",
-            "add": sorted(
-                ({**s, "added_seq": seq} for s in staged_post),
-                key=lambda s: s["file"],
-            ),
-            "remove": [],
-            "dv_set": dv_set,
-            "min_reader": _DV_MIN_READER,
-            **(
-                {"cdf_add": sorted(
-                    staged_cdf, key=lambda s: (s["cdf_class"], s["file"])
-                )}
-                if staged_cdf
-                else {}
-            ),
-        }
-
-    man2 = _commit_with_retries(path, build_action)
-    return man2, n_updated
-
 
 
 def merge_into(
@@ -4392,60 +4244,58 @@ def merge_into(
     change_data: bool = True,
     mode: str = "rewrite",
 ) -> tuple[dict, int, int]:
-    """``MERGE INTO`` the manifest table — upsert by key, copy-on-write,
-    ONE atomic commit (the Delta DML shape on the from-scratch format):
-    target rows whose key appears in ``source_df`` are REPLACED by the
-    source row (matched → UPDATE), source rows with unseen keys are
-    INSERTED, and everything else is untouched.
+    """``MERGE INTO`` the manifest table — upsert by key, ONE atomic
+    commit (the Delta DML shape on the from-scratch format): target
+    rows whose key appears in ``source_df`` are REPLACED by the source
+    row (matched → UPDATE), source rows with unseen keys are INSERTED,
+    and everything else is untouched.
 
-    Scope: the rewrite touches only shards whose recorded stats admit
-    the source's key RANGE (one 1-row min/max pre-scan per key column)
-    — on a key-clustered table a narrow upsert batch rewrites a
-    handful of files. CDF semantics are exact: untouched-survivor
-    shards ride the commit as ``data_change=false`` (a tailing reader
-    already has those rows) while the upserted rows land in
-    ``data_change=true`` shards stamped with this commit's seq — the
-    tail receives EXACTLY the merged batch, once. Round 12 classes
-    them: matched-source rows stage as ``update_postimage`` shards and
-    unseen-key rows as ``insert`` shards, and with ``change_data=True``
-    the replaced target rows are additionally materialized as an
-    ``update_preimage`` CDF-only shard — the Delta MERGE change-feed
-    quartet, exactly.
+    Scope: ONE aggregation over the source yields its row count, its
+    distinct-key count and each key column's min/max; only shards
+    whose recorded stats admit that key RANGE are touched (a small
+    single-column batch is further narrowed by the shards' Bloom
+    filters) — on a key-clustered table a narrow upsert batch touches
+    a handful of files. CDF semantics are exact: matched-source rows
+    stage as ``update_postimage`` shards and unseen-key rows as
+    ``insert`` shards (the tail receives EXACTLY the merged batch,
+    once), and with ``change_data=True`` the replaced target rows are
+    additionally materialized as an ``update_preimage`` CDF-only shard
+    — the Delta MERGE change-feed quartet, exactly.
 
-    ``mode="dv"`` (round 12, wave 2 — the Delta DV-merge shape):
-    matched target rows are deletion-vectored OUT of their shards
-    instead of rewriting survivors — ONE commit carrying ``dv_set`` +
-    the source's ``add`` shards, cost O(matched + source) instead of
-    O(touched shard bytes); a narrow upsert into huge shards never
-    re-encodes them. Identical CDF; parquet-codec shards only;
-    protocol 4. A merge admitting no target shards is a pure insert
-    under either mode. Both row classes are
-    count-guarded (survivors = touched − matched; upserts = |source|)
-    and the commit refuses to publish if a replaced shard is no longer
-    live (concurrent-rewrite conflict). ``source_df`` must be
-    key-unique — pre-dedup with ``operators.merge.dedup_last_writer_
-    wins`` — because "which duplicate wins" is not this layer's call;
-    symmetrically, the TARGET's matched rows must be key-unique too
-    (duplicate-key target rows would be collapsed to one source row,
-    silently shrinking the table — refused loudly instead).
-    Like :func:`compact` and :func:`delete_where`, the rewrite
-    PROJECTS touched rows through ``schema`` — pass the table's FULL
-    schema, or columns outside it are dropped from the rewritten
-    shards (schemaless JSON-lines shards make evolution a read-side
-    concern, but a rewrite re-serializes).
-    Returns ``(new_manifest, n_updated, n_inserted)``."""
+    ``mode="rewrite"`` replaces the touched shards, their survivors
+    riding ``data_change=false``; ``mode="dv"`` (the Delta DV-merge
+    shape) deletion-vectors the matched target rows OUT instead — cost
+    O(matched + source), a narrow upsert into huge shards never
+    re-encodes them (parquet-codec shards only; protocol 4). A merge
+    admitting no target shards is a pure insert under either mode.
+    Every row class is count-guarded and the commit refuses to publish
+    if a replaced shard is no longer live (concurrent-rewrite
+    conflict). ``source_df`` must be key-unique — pre-dedup with
+    ``operators.merge.dedup_last_writer_wins`` — because "which
+    duplicate wins" is not this layer's call (rows with NULL keys
+    count as one key, as ``distinct`` counts them); symmetrically, the
+    TARGET's matched rows must be key-unique too (duplicate-key target
+    rows would be collapsed to one source row, silently shrinking the
+    table — refused loudly instead). Recorded CHECK constraints judge
+    the source rows. Like :func:`compact` and :func:`delete_where`,
+    the rewrite PROJECTS touched rows through ``schema`` — pass the
+    table's FULL schema, or columns outside it are dropped from the
+    rewritten shards. Returns ``(new_manifest, n_updated,
+    n_inserted)``."""
     from pyspark.sql import functions as F
 
-    man = read_manifest_dict(path)
-    if man is None or not man["shards"]:
-        raise FileNotFoundError(f"no committed manifest at {path}")
-    if schema is None:
-        schema = _schema_from_state(man)  # the log's recorded schema
+    man, schema, _all = _dml_prelude(path, schema, "merge_into", mode)
     src = source_df
-    n_src = src.count()
+    stats = src.agg(
+        F.count(F.lit(1)).alias("__n"),
+        F.count_distinct(F.struct(*key_cols)).alias("__n_keys"),
+        *[F.min(k).alias(f"mn_{k}") for k in key_cols],
+        *[F.max(k).alias(f"mx_{k}") for k in key_cols],
+    ).first()
+    n_src = stats["__n"]
     if n_src == 0:
         return man, 0, 0
-    if src.select(*key_cols).distinct().count() != n_src:
+    if stats["__n_keys"] != n_src:
         raise ValueError(
             "merge_into: source has duplicate keys - resolve them first "
             "(operators.merge.dedup_last_writer_wins) so which row wins "
@@ -4454,13 +4304,8 @@ def merge_into(
     # recorded CHECK constraints judge the incoming source rows (both
     # the updates and the inserts this merge lands)
     _enforce_constraints(src, man.get("constraints"), "merge_into")
-    bounds = src.agg(
-        *[F.min(k).alias(f"mn_{k}") for k in key_cols],
-        *[F.max(k).alias(f"mx_{k}") for k in key_cols],
-    ).first()
-    prune = {k: (bounds[f"mn_{k}"], bounds[f"mx_{k}"]) for k in key_cols}
+    prune = {k: (stats[f"mn_{k}"], stats[f"mx_{k}"]) for k in key_cols}
     touched, _total = prune_shards(man, prune=prune)
-    keys = src.select(*key_cols)
     if len(key_cols) == 1 and n_src <= 10_000 and touched:
         # bloom refinement for SMALL single-column batches: range
         # admission is useless on hash-partitioned tables (every
@@ -4471,255 +4316,15 @@ def merge_into(
         # O(keys x shards) bit probes; larger batches keep the
         # range-only scope (collecting their keys would not be).
         k = key_cols[0]
-        vals = [r[0] for r in keys.collect()]
+        vals = [r[0] for r in src.select(k).collect()]
         touched = [
             s for s in touched
             if any(_shard_admits_eq(s, k, v) for v in vals)
         ]
-    if mode == "dv" and touched:
-        return _merge_into_dv(
-            spark, path, schema, src, key_cols, touched, change_data,
-            man, n_src,
-        )
-    if mode not in ("rewrite", "dv"):
-        raise ValueError(
-            f"merge_into: mode must be 'rewrite' or 'dv', got {mode!r}"
-        )
-    tdf = None
-    try:
-        if touched:
-            # persist the touched-shard read: it feeds FOUR consumers
-            # (n_touched, the survivor anti-join + its count, the
-            # matched-keys semi-join, and the survivor staging write) —
-            # without the cache each one re-decodes the same shards
-            # (round-10 verdict item 4)
-            tdf = _spark_read_shard_entries(
-                spark, path, touched, schema
-            ).persist()
-            # broadcast the key set only while it is broadcast-SIZED; a
-            # bulk merge's keys join shuffled (AQE picks the strategy)
-            keys_side = F.broadcast(keys) if n_src <= 100_000 else keys
-            survivors = tdf.join(keys_side, on=key_cols, how="left_anti")
-            n_touched = tdf.count()
-            n_survive = survivors.count()
-        else:
-            survivors = None
-            n_touched = n_survive = 0
-        n_updated = n_touched - n_survive
-        matched_keys = (
-            keys.join(tdf.select(*key_cols), on=key_cols, how="left_semi")
-            .distinct()
-            .count()
-            if touched
-            else 0
-        )
-        if n_updated > matched_keys:
-            # more matched TARGET rows than distinct matched keys: the
-            # target holds duplicate-key rows, and replacing them all
-            # with one source row would silently SHRINK the table
-            # (Delta updates each matched row; this layer upserts by
-            # unique key). Refuse loudly, mirroring the source-dup
-            # guard — nothing was staged or published (round-10
-            # ADVICE).
-            raise ValueError(
-                "merge_into: target has duplicate keys among matched "
-                f"rows ({n_updated} matched rows over {matched_keys} "
-                "distinct keys) - this merge upserts by UNIQUE key and "
-                "would collapse the duplicates; dedup the target first "
-                "(e.g. delete_where or a dedup rewrite)"
-            )
-        n_inserted = n_src - matched_keys
-        # stage each row class separately (a shard is all-survivor,
-        # all-updated, or all-inserted, never mixed — CDF readers
-        # surface the class as _change_type), then publish ONE atomic
-        # action commit
-        bloom_src = touched or man["shards"]
-        n_up_shards = max(1, min(len(touched) or 1, 8))
-        staged_unchanged = (
-            _stage_write(
-                survivors.repartition(max(1, len(touched))),
-                path,
-                "merge-survivors",
-                bloom_src,
-            )
-            if survivors is not None
-            else []
-        )
-        staged_changed: list[dict] = []
-        if touched and matched_keys:
-            matched_src = src.join(
-                tdf.select(*key_cols), on=key_cols, how="left_semi"
-            )
-            staged_changed += [
-                {**e, "cdf_class": "update_postimage"}
-                for e in _stage_write(
-                    matched_src.repartition(n_up_shards),
-                    path,
-                    "merge-upd",
-                    bloom_src,
-                )
-            ]
-        if n_inserted:
-            new_src = (
-                src.join(
-                    tdf.select(*key_cols), on=key_cols, how="left_anti"
-                )
-                if touched
-                else src
-            )
-            staged_changed += [
-                {**e, "cdf_class": "insert"}
-                for e in _stage_write(
-                    new_src.repartition(n_up_shards),
-                    path,
-                    "merge-ins",
-                    bloom_src,
-                )
-            ]
-        staged_cdf = (
-            [
-                {**e, "cdf_class": "update_preimage"}
-                for e in _stage_write(
-                    tdf.join(keys, on=key_cols, how="left_semi")
-                    .repartition(n_up_shards),
-                    path,
-                    "merge-cdf",
-                    bloom_src,
-                )
-            ]
-            if change_data and touched and n_updated
-            else []
-        )
-    finally:
-        if tdf is not None:
-            tdf.unpersist()
-    man2 = _commit_replace(
-        path,
-        kind="merge",
-        remove_files=sorted(s["file"] for s in touched),
-        unchanged=staged_unchanged,
-        changed=staged_changed,
-        expect_unchanged=n_survive,
-        expect_changed=n_src,
-        cdf_only=staged_cdf,
-        expect_cdf=(
-            n_updated if (change_data and touched and n_updated) else None
-        ),
+    return _dml(
+        spark, path, "merge_into", mode, man, schema, touched,
+        change_data, src=src, key_cols=key_cols, n_src=n_src,
     )
-    return man2, n_updated, n_inserted
-
-
-def _merge_into_dv(
-    spark, path: str, schema, src, key_cols: list[str],
-    touched: list[dict], change_data: bool, man: dict, n_src: int,
-) -> tuple[dict, int, int]:
-    """The deletion-vector MERGE (see :func:`merge_into` docs):
-    dv-delete the matched target rows, append the whole source batch
-    — one commit, survivors untouched."""
-    from pyspark.sql import functions as F
-
-    _dv_require_parquet(touched, "merge_into")
-    tdf = _dv_scan(spark, path, schema, touched)
-    keys = src.select(*key_cols)
-    keys_side = F.broadcast(keys) if n_src <= 100_000 else keys
-    matched = tdf.join(keys_side, on=key_cols, how="left_semi").persist()
-    try:
-        hits = matched.select("__dv_file", "__dv_ri").collect()
-        n_updated = len(hits)
-        matched_keys = (
-            matched.select(*key_cols).distinct().count()
-            if n_updated
-            else 0
-        )
-        if n_updated > matched_keys:
-            raise ValueError(
-                "merge_into: target has duplicate keys among matched "
-                f"rows ({n_updated} matched rows over {matched_keys} "
-                "distinct keys) - this merge upserts by UNIQUE key and "
-                "would collapse the duplicates; dedup the target first "
-                "(e.g. delete_where or a dedup rewrite)"
-            )
-        n_inserted = n_src - matched_keys
-        n_shards = max(1, min(len(touched), 8))
-        staged_changed: list[dict] = []
-        if matched_keys:
-            matched_src = src.join(
-                matched.select(*key_cols), on=key_cols, how="left_semi"
-            )
-            staged_changed += [
-                {**e, "cdf_class": "update_postimage"}
-                for e in _stage_write(
-                    matched_src.repartition(n_shards), path,
-                    "merge-dv-upd", touched,
-                )
-            ]
-        if n_inserted:
-            new_src = src.join(
-                matched.select(*key_cols), on=key_cols, how="left_anti"
-            )
-            staged_changed += [
-                {**e, "cdf_class": "insert"}
-                for e in _stage_write(
-                    new_src.repartition(n_shards), path,
-                    "merge-dv-ins", touched,
-                )
-            ]
-        if sum(s["n_rows"] for s in staged_changed) != n_src:
-            raise ValueError(
-                "merge_into(dv): upserted row count mismatch - "
-                "nothing was published"
-            )
-        staged_cdf = (
-            [
-                {**e, "cdf_class": "update_preimage"}
-                for e in _stage_write(
-                    matched.drop("__dv_file", "__dv_ri").repartition(
-                        n_shards
-                    ),
-                    path,
-                    "merge-dv-cdf",
-                    touched,
-                )
-            ]
-            if change_data and n_updated
-            else []
-        )
-        if staged_cdf and sum(
-            s["n_rows"] for s in staged_cdf
-        ) != n_updated:
-            raise ValueError(
-                "merge_into(dv): change-data row count mismatch - "
-                "nothing was published"
-            )
-    finally:
-        matched.unpersist()
-    dv_set, base_dv = _dv_merge_vectors(path, touched, hits, "merge_into")
-
-    def build_action(prev: dict | None, seq: int) -> dict:
-        _dv_conflict_check(prev, dv_set, base_dv, "merge_into")
-        return {
-            "version": 2,
-            "commit_seq": seq,
-            "commit_kind": "merge",
-            "add": sorted(
-                ({**s, "added_seq": seq} for s in staged_changed),
-                key=lambda s: s["file"],
-            ),
-            "remove": [],
-            **({"dv_set": dv_set} if dv_set else {}),
-            **({"min_reader": _DV_MIN_READER} if dv_set else {}),
-            **(
-                {"cdf_add": sorted(
-                    staged_cdf, key=lambda s: (s["cdf_class"], s["file"])
-                )}
-                if staged_cdf
-                else {}
-            ),
-        }
-
-    man2 = _commit_with_retries(path, build_action)
-    return man2, n_updated, n_inserted
-
 
 
 def table_changes(

@@ -433,6 +433,38 @@ def test_merge_into_refuses_duplicate_key_target(registered, tmp_path):
     assert (n_up, n_ins) == (1, 1)
 
 
+def test_merge_into_refuses_null_key_duplicate_source(registered, tmp_path):
+    """Two source rows sharing a NULL key are one key, as ``distinct``
+    counts them: the source is refused as holding duplicates."""
+    spark, p = registered, str(tmp_path / "mnull")
+    schema = "id long, s string"
+    _write(_df(spark, 5).coalesce(1), p, mode="append")
+    src = spark.createDataFrame([(None, "a"), (None, "b")], schema)
+    with pytest.raises(ValueError, match="source has duplicate keys"):
+        MS.merge_into(spark, p, schema, src, ["id"])
+    assert MS.read_manifest_dict(p)["commit_seq"] == 1
+
+
+def test_merge_into_source_checks_run_as_one_job(
+    registered, tmp_path, jobs_started_by
+):
+    """The source's row count, distinct-key count and key bounds come
+    from ONE aggregation. Adaptive execution runs each of its two
+    shuffle stages as a job of its own, so refusing a duplicate-key
+    source costs three jobs; a count plus a separate distinct count
+    cost five."""
+    spark, p = registered, str(tmp_path / "mjobs")
+    schema = "id long, s string"
+    _write(_df(spark, 5).coalesce(1), p, mode="append")
+    src = spark.createDataFrame([(1, "a"), (1, "b"), (2, "c")], schema)
+
+    def refused():
+        with pytest.raises(ValueError, match="source has duplicate keys"):
+            MS.merge_into(spark, p, schema, src, ["id"])
+
+    assert len(jobs_started_by(refused)) <= 3
+
+
 # -- CDF _commit_version column --------------------------------------------
 
 def test_table_changes_with_commit_version(registered, tmp_path):

@@ -151,8 +151,9 @@ def test_dv_lineage_conflict_refused(registered, tmp_path):
     # a second dv delete built against the stale snapshot must refuse
     # (its merged vector would drop the concurrent delete)
     with pytest.raises(ValueError, match="lineage|advanced"):
-        MS._delete_where_dv(
-            spark, p, SCH, "k = 4", stale_touched, change_data=False
+        MS._dml(
+            spark, p, "delete_where", "dv", man, SCH, stale_touched,
+            change_data=False, cond="k = 4",
         )
     # and the honest path still works
     assert t.delete("k = 4", mode="dv") == 1
@@ -182,6 +183,32 @@ def test_dv_vacuum_releases_superseded_vectors(registered, tmp_path):
     # stats: dv shards report exact n_rows but no min/max claims
     st = t.stats()
     assert st["n_rows"] == 98
+
+
+@pytest.mark.parametrize("verb", ["delete", "update", "merge"])
+def test_bad_mode_refused_on_noop_paths(registered, tmp_path, verb):
+    """An unknown mode is refused even where the verb would return
+    early without a commit: stats refute the prune (delete/update) or
+    the source is empty (merge)."""
+    spark, p = registered, str(tmp_path / f"bad_{verb}")
+    _mk(spark, p, n=50)
+    seq = MS.read_manifest_dict(p)["commit_seq"]
+    run = {
+        "delete": lambda: MS.delete_where(
+            spark, p, SCH, "k = -1", prune={"k": (-1, -1)}, mode="bogus"
+        ),
+        "update": lambda: MS.update_where(
+            spark, p, SCH, "k = -1", {"s": "'x'"}, prune={"k": (-1, -1)},
+            mode="bogus",
+        ),
+        "merge": lambda: MS.merge_into(
+            spark, p, SCH, spark.createDataFrame([], SCH), ["k"],
+            mode="bogus",
+        ),
+    }[verb]
+    with pytest.raises(ValueError, match="mode must be 'rewrite' or 'dv'"):
+        run()
+    assert MS.read_manifest_dict(p)["commit_seq"] == seq
 
 
 def test_dv_refused_on_jsonl_codec(registered, tmp_path):

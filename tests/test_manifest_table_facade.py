@@ -204,7 +204,8 @@ def test_dv_delete_rebases_over_concurrent_append(registered, tmp_path):
     spark, p = registered, str(tmp_path / "dvrace")
     _land(spark, p, codec="parquet", n=40)
     t = ManifestTable(spark, p)
-    stale_touched = list(t.manifest()["shards"])
+    stale = t.manifest()
+    stale_touched = list(stale["shards"])
     # concurrent append lands AFTER the delete's snapshot read
     (
         spark.createDataFrame([(900, "new")], "k long, s string")
@@ -214,9 +215,9 @@ def test_dv_delete_rebases_over_concurrent_append(registered, tmp_path):
         .mode("append")
         .save()
     )
-    man2, n = MS._delete_where_dv(
-        spark, p, "k long, s string", "k = 3", stale_touched,
-        change_data=False,
+    man2, n, _ = MS._dml(
+        spark, p, "delete_where", "dv", stale, "k long, s string",
+        stale_touched, change_data=False, cond="k = 3",
     )
     assert n == 1
     assert man2["commit_seq"] == 3  # append=2, dv delete rebased to 3

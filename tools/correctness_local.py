@@ -1,11 +1,12 @@
 #!/usr/bin/env python3
 """Run the full oracle differential at one or more scale factors and
-write a committed artifact (CORRECTNESS_LOCAL_r{N}.json) in the same
-shape the driver records, so coverage beyond the driver's sampling
-window is verifiable without re-deriving it.
+write a JSON artifact (like the committed CORRECTNESS_LOCAL_r{N}.json
+records) in the same shape the driver records, so coverage beyond the
+driver's sampling window is verifiable without re-deriving it.
 
-Usage: python tools/correctness_local.py [--out FILE] [SF_DIR ...]
-Defaults: sf0.01 and sf0.1.
+Usage: python tools/correctness_local.py --out FILE [SF_DIR ...]
+``--out`` is required, so a plain run never overwrites a committed
+record. Defaults: sf0.01 and sf0.1.
 """
 
 from __future__ import annotations
@@ -16,6 +17,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+USAGE = "usage: python tools/correctness_local.py --out FILE [SF_DIR ...]"
 
 
 def run_sf(spark, sf_dir: str) -> dict:
@@ -148,11 +151,10 @@ def check_driver_window() -> None:
 
 def main() -> None:
     args = sys.argv[1:]
-    out_path = "CORRECTNESS_LOCAL_r04.json"
-    if args and args[0] == "--out":
-        out_path = args[1]
-        args = args[2:]
-    sf_dirs = args or ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
+    if len(args) < 2 or args[0] != "--out":
+        sys.exit(USAGE)
+    out_path = args[1]
+    sf_dirs = args[2:] or ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
     check_driver_window()
 
