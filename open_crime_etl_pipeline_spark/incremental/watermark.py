@@ -10,9 +10,13 @@ Reference semantics preserved exactly:
   deliberate overlap re-reading the watermark day; duplicates are
   absorbed by the idempotent merge (ST4, `crime_etl.py:195-197`)
 
-The only driver-side action is a 1-row ``collect`` of the MAX — O(1)
-data to the driver regardless of table size (the scan itself is a
-distributed partial-max).
+The watermark is read from the table's commit log first
+(``logged_watermark``): a file-level commit records the table's MAX
+whenever it can state it exactly (io/table.py), so a daily run reads it
+with no Spark job. Only when the log cannot say (an entry written
+before file-level commits, or one marked unknown) does ``read_watermark``
+scan: a 1-row ``collect`` of the MAX — O(1) data to the driver
+regardless of table size (the scan itself is a distributed partial-max).
 """
 
 from __future__ import annotations
@@ -21,6 +25,7 @@ import datetime as dt
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 FULL_LOAD_EPOCH = dt.datetime(2025, 1, 1)  # reference crime_etl.py:136-138
 
@@ -32,6 +37,32 @@ def read_watermark(target: DataFrame, col: str) -> dt.datetime | None:
     """MAX(col) over the target table; None on empty table (first run)."""
     row = target.agg(F.max(F.col(col)).alias("wm")).first()
     return row["wm"]
+
+
+def logged_watermark(entry: dict | None, col: str) -> tuple[bool, dt.datetime | None]:
+    """``(known, MAX(col))`` as a table log entry records it (epoch µs,
+    converted the way a collected TimestampType value is, so it equals
+    ``read_watermark``). No entry is a table never committed: known and
+    empty, so the first run is FULL. An entry without the value is not
+    known — never FULL; the caller scans."""
+    if entry is None:
+        return True, None
+    rec = entry.get("watermark")
+    if rec is None or rec["column"] != col:
+        return False, None
+    us = rec["max_us"]
+    return True, None if us is None else TimestampType().fromInternal(us)
+
+
+def watermark_to_log(wm: dt.datetime | None, col: str) -> dict:
+    """``read_watermark``'s value as a log entry records it: the exact
+    inverse of the collect conversion (``fromtimestamp`` marks the second
+    pass through a repeated local hour with ``fold``, which
+    ``timestamp()`` honours)."""
+    us = None
+    if wm is not None:
+        us = round(wm.replace(microsecond=0).timestamp()) * 1_000_000 + wm.microsecond
+    return {"column": col, "max_us": us}
 
 
 def decide_mode(watermark: dt.datetime | None) -> str:

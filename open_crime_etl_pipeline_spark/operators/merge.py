@@ -83,9 +83,14 @@ def merge_upsert(
     SQL engines. Default False keeps the strict-schema contract: a
     mismatch raises at plan time instead of silently widening.
     """
+    # The probe takes the RAW batch keys: dedup keeps one row per key
+    # (NULL included), so the key set is the same, and a probe built
+    # under the dedup window could not reuse its exchange (the inferred
+    # IsNotNull filter differs) — the batch would be scanned and
+    # shuffled twice.
+    probe = source.select(*keys)
     if order_by:
         source = dedup_last_writer_wins(source, keys, order_by)
-    probe = source.select(*keys)
     if broadcast_source:
         probe = F.broadcast(probe)
     survivors = target.join(probe, on=keys, how="left_anti")

@@ -43,12 +43,9 @@ CRIME_RAW_SCHEMA = T.StructType(
      for f in RAW_DATA_FIELDS + RAW_SYSTEM_FIELDS + RAW_COMPUTED_REGION_FIELDS]
 )
 
-# Columns dropped / renamed by the silver transform (reference:
-# transform.py:9-34).
-CRIME_DROP_COLUMNS = RAW_COMPUTED_REGION_FIELDS + [
-    "location", ":id", ":version", ":created_at", "year", "updated_on",
-]
-
+# Columns renamed by the silver transform (reference: transform.py:27-34);
+# the raw columns it drops (transform.py:9-25) are the ones the silver
+# schema below does not select.
 CRIME_RENAME_MAP = {
     "id": "crime_id",
     "case_number": "case_num",

@@ -2903,14 +2903,18 @@ def _table_codec(man: dict | None) -> str:
     return "jsonl"
 
 
-def _spark_read_shard_files(spark, files: list[str], schema):
+def _spark_read_shard_files(spark, files: list[str], schema,
+                            with_file: bool = False):
     """ONE DataFrame over a shard file list, dispatching per-shard by
     codec: parquet shards go through Spark's NATIVE parquet source —
     columnar vectorized decode, column pruning, and predicate pushdown
     reach inside the shard — and JSON shards through the native JSON
     source; a mixed-codec list (a table mid-migration) unions by name.
     Every snapshot/DML/CDF read path funnels through here, so codec
-    dispatch can never diverge between them."""
+    dispatch can never diverge between them. ``with_file`` adds each
+    row's shard file name as ``__dv_file``."""
+    from pyspark.sql import functions as F
+
     pq_files = [f for f in files if _shard_is_parquet(f)]
     js_files = [f for f in files if not _shard_is_parquet(f)]
     frames = []
@@ -2924,6 +2928,11 @@ def _spark_read_shard_files(spark, files: list[str], schema):
         if schema is not None:
             r = r.schema(schema)
         frames.append(r.json(js_files))
+    if with_file:
+        frames = [
+            f.withColumn("__dv_file", F.col("_metadata.file_name"))
+            for f in frames
+        ]
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f)
@@ -2970,12 +2979,14 @@ def _load_dv(fs, root: str, dv: dict | None) -> list[int]:
 _DV_COLS = ("__dv_file", "__dv_ri")
 
 
-def _spark_read_shard_entries(spark, path: str, entries: list[dict], schema):
+def _spark_read_shard_entries(spark, path: str, entries: list[dict], schema,
+                              with_file: bool = False):
     """Entries-aware snapshot read: like :func:`_spark_read_shard_files`
     but applies DELETION VECTORS — shards whose entry carries ``dv``
     go through :func:`_dv_scan`, so logically-deleted rows never reach
     the caller. Every snapshot/DML read path funnels through here;
-    shards without DVs keep the plain fast path."""
+    shards without DVs keep the plain fast path. ``with_file`` keeps
+    each row's shard file name as ``__dv_file``."""
     dv_entries = [e for e in entries if e.get("dv")]
     plain = [e for e in entries if not e.get("dv")]
     frames = []
@@ -2988,11 +2999,14 @@ def _spark_read_shard_entries(spark, path: str, entries: list[dict], schema):
                     for e in plain
                 ],
                 schema,
+                with_file,
             )
         )
     if dv_entries:
         frames.append(
-            _dv_scan(spark, path, schema, dv_entries).drop(*_DV_COLS)
+            _dv_scan(spark, path, schema, dv_entries).drop(
+                *_DV_COLS[with_file:]
+            )
         )
     out = frames[0]
     for f in frames[1:]:
@@ -3962,8 +3976,10 @@ def _dml(
        (``update_postimage``) plus the unseen-key ones (``insert``);
     3. **stage** each class as its own shards, tagged with its class;
     4. **publish** ONE commit through :func:`_commit_replace`, which
-       checks every class's row count — rewrite mode replaces the
-       touched shards, dv mode vectors the matched positions out.
+       checks every class's row count — rewrite mode replaces only
+       the touched shards a row matched in (a shard the stats admitted
+       but no row matched stays live as it is), dv mode vectors the
+       matched positions out.
 
     Returns ``(new_manifest, n_matched, n_inserted)``; a delete or
     update matching nothing publishes nothing."""
@@ -3972,15 +3988,17 @@ def _dml(
     kind, dv = verb.split("_")[0], mode == "dv"
     if src is None and not touched:
         return man, 0, 0  # stats refute the predicate everywhere: no-op
-    base, hits = None, []
-    n_hit = n_total = n_keys = 0
+    base, hits, rewritten = None, [], []
+    n_hit = n_keys = 0
     try:
         if touched:
             if dv:
                 _dv_require_parquet(touched, verb)
                 scan = _dv_scan(spark, path, schema, touched)
             else:
-                scan = _spark_read_shard_entries(spark, path, touched, schema)
+                scan = _spark_read_shard_entries(
+                    spark, path, touched, schema, with_file=True
+                )
             if src is None:
                 c = F.expr(cond) if isinstance(cond, str) else cond
                 hit = F.coalesce(c, F.lit(False))  # NULL rows survive
@@ -4013,7 +4031,8 @@ def _dml(
                 base = scan.persist()
                 row = base.agg(
                     F.count(F.when(hit, 1)).alias("hit"),
-                    F.count(F.lit(1)).alias("total"),
+                    F.collect_set(F.when(hit, F.col("__dv_file")))
+                    .alias("hit_files"),
                     *(
                         [F.count_distinct(F.when(hit, F.struct(*key_cols)))
                          .alias("keys")]
@@ -4021,8 +4040,15 @@ def _dml(
                         else []
                     ),
                 ).first()
-                n_hit, n_total = row["hit"], row["total"]
+                n_hit = row["hit"]
                 n_keys = row["keys"] if key_cols else 0
+                # only the shards a row matched in are rewritten; the
+                # rest stay live as they are
+                hit_files = set(row["hit_files"])
+                rewritten = [
+                    e for e in touched
+                    if posixpath.basename(e["file"]) in hit_files
+                ]
         if src is None and not n_hit:
             return man, 0, 0  # nothing matched: publish nothing
         if src is not None and n_hit > n_keys:
@@ -4064,8 +4090,10 @@ def _dml(
 
         def stage(rows, cdf_class=None) -> list[dict]:
             # one row class -> its own shards (a shard is never mixed);
-            # survivors keep the touched shard count, the rest <= 8
-            n_out = len(touched) if cdf_class is None else min(len(touched), 8)
+            # survivors keep the rewritten shard count, the rest <= 8
+            n_out = (
+                len(rewritten) if cdf_class is None else min(len(touched), 8)
+            )
             entries = _stage_write(
                 rows.repartition(max(1, n_out)), path,
                 f"{kind}-{cdf_class or 'survivors'}", bloom_src,
@@ -4075,8 +4103,12 @@ def _dml(
             return [{**e, "cdf_class": cdf_class} for e in entries]
 
         survivors = (
-            stage(base.filter(~hit).drop("__hit"))
-            if touched and not dv
+            stage(
+                base.filter(
+                    ~hit & F.col("__dv_file").isin(sorted(hit_files))
+                ).drop("__hit", "__dv_file")
+            )
+            if rewritten
             else []
         )
         pre = (
@@ -4105,10 +4137,14 @@ def _dml(
     man2 = _commit_replace(
         path,
         kind=kind,
-        remove_files=[] if dv else sorted(s["file"] for s in touched),
+        remove_files=sorted(s["file"] for s in rewritten),
         unchanged=survivors,
         changed=post,
-        expect_unchanged=0 if dv else n_total - n_hit,
+        # live rows of the rewritten shards (a vectored shard's deleted
+        # positions are not live) less the matched ones
+        expect_unchanged=sum(
+            s["n_rows"] - (s.get("dv") or {}).get("n", 0) for s in rewritten
+        ) - n_hit if rewritten else 0,
         expect_changed=(
             n_src if src is not None else n_hit if sets else 0
         ),

@@ -138,3 +138,11 @@ def test_unparseable_values_become_null_under_ansi(spark, tmp_path):
     assert micros.isoformat() == "2025-03-01T12:34:56.789123"
     plain = rows["13000012"].date_of_occurrence
     assert plain.isoformat() == "2025-03-01T12:34:56"
+
+
+def test_transform_builds_without_a_spark_job(spark, landing_dir, jobs_started_by):
+    raw = read_crime_pages(spark, landing_dir)
+    out = []
+    assert jobs_started_by(lambda: out.append(transform_crime_page(raw))) == []
+    types = lambda schema: [(f.name, f.dataType) for f in schema.fields]
+    assert types(out[0].schema) == types(CRIME_SILVER_SCHEMA)

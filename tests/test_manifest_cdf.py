@@ -465,6 +465,33 @@ def test_merge_into_source_checks_run_as_one_job(
     assert len(jobs_started_by(refused)) <= 3
 
 
+def test_merge_into_leaves_unmatched_shards_live(registered, tmp_path):
+    """Rewrite mode replaces only the shards a source key matched in: a
+    pure-insert merge whose keys fall inside existing shards' ranges
+    (the stats admit two of four) rewrites none of them."""
+    spark, p = registered, str(tmp_path / "mhits")
+    schema = "id long, s string"
+    base = spark.range(0, 1000, 2).select(
+        "id", F.concat(F.lit("a"), F.col("id").cast("string")).alias("s")
+    )
+    _write(base.repartitionByRange(4, "id"), p, mode="append")
+    before = {s["file"] for s in MS.read_manifest_dict(p)["shards"]}
+    assert len(before) == 4
+    ids = (1, 3, 501, 999)
+    src = spark.createDataFrame([(i, f"n{i}") for i in ids], schema)
+    _man, n_upd, n_ins = MS.merge_into(spark, p, schema, src, ["id"])
+    assert (n_upd, n_ins) == (0, 4)
+    after = MS.read_manifest_dict(p)
+    assert before <= {s["file"] for s in after["shards"]}
+    assert after["n_rows"] == 504
+    got = {(r["id"], r["s"]) for r in MS.read_manifest(spark, p, schema=schema).collect()}
+    assert got == {(i, f"a{i}") for i in range(0, 1000, 2)} | {(i, f"n{i}") for i in ids}
+    ch = MS.table_changes(spark, p, schema, 1, with_change_type=True).collect()
+    assert sorted((r["id"], r["s"], r["_change_type"]) for r in ch) == [
+        (i, f"n{i}", "insert") for i in ids
+    ]
+
+
 # -- CDF _commit_version column --------------------------------------------
 
 def test_table_changes_with_commit_version(registered, tmp_path):

@@ -112,3 +112,22 @@ def test_merge_strict_schema_raises_and_evolution_widens(spark, sf_dir):
     ).collect()
     rows = {r["k"]: (r["v"], r["extra"]) for r in out}
     assert rows == {1: ("a", None), 2: ("B", "x")}
+
+
+def test_merge_probe_reuses_the_batch_scan(spark, tmp_path, jobs_started_by):
+    """The anti-join probe is built from the raw batch keys, so writing a
+    merge of a file-scanned batch runs the dedup shuffle, the probe
+    broadcast and the write: three jobs. A probe built under the dedup
+    window scans and shuffles the batch a second time (four jobs)."""
+    schema = "k int, v string, ts int"
+    spark.createDataFrame([(i, f"t{i}", i) for i in range(20)], schema) \
+        .write.parquet(str(tmp_path / "t"))
+    spark.createDataFrame([(i % 6, f"s{i}", i) for i in range(10)], schema) \
+        .write.json(str(tmp_path / "s"))
+    target = spark.read.parquet(str(tmp_path / "t"))
+    source = spark.read.schema(schema).json(str(tmp_path / "s"))
+    merged = merge_upsert(target, source, keys=["k"], order_by=["ts"])
+    out = str(tmp_path / "out")
+    assert len(jobs_started_by(lambda: merged.write.parquet(out))) <= 3
+    got = {r.k: r.v for r in spark.read.parquet(out).collect()}
+    assert got == {**{i: f"t{i}" for i in range(20)}, **{i: f"s{i + 6 if i < 4 else i}" for i in range(6)}}

@@ -5,12 +5,19 @@ from __future__ import annotations
 
 import datetime as dt
 import gzip
+import json
 import os
 
 import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from open_crime_etl_pipeline_spark import pipeline as pm
+from open_crime_etl_pipeline_spark.incremental.watermark import (
+    logged_watermark,
+    read_watermark,
+)
 from open_crime_etl_pipeline_spark.io.writers import (
     write_partitioned_crime,
     write_partitioned_json_rows,
@@ -20,7 +27,7 @@ from open_crime_etl_pipeline_spark.pipeline import (
     LANDING_TS,
     CrimePipeline,
 )
-from open_crime_etl_pipeline_spark.schemas import CRIME_RAW_SCHEMA
+from open_crime_etl_pipeline_spark.schemas import CRIME_RAW_SCHEMA, CRIME_SILVER_SCHEMA
 from open_crime_etl_pipeline_spark.sources.socrata import _fake_page
 
 NOW1 = dt.datetime(2025, 2, 15, 12, 0, 0)
@@ -288,3 +295,163 @@ def test_crash_mid_landing_leaves_no_visible_file(spark, tmp_path, monkeypatch):
     start, end = (dt.datetime.fromisoformat(w) for w in again["window"])
     assert again["status"] == "SUCCESS" and again["mode"] == "INCREMENT"
     assert p.load_batch(d).count() == len(_fake_page(120, start, end, 0, 10**6)) > 3
+
+
+# -- file-level publish -------------------------------------------------
+
+DAYS = [dt.datetime(2025, 2, 16, 12) + dt.timedelta(days=i) for i in range(3)]
+WM = "source_updated_on"
+
+
+def _strip_stats(p):
+    """Rewrite the latest log entry as a commit without per-file stats
+    or watermark writes it (the shape of entries before file-level
+    commits)."""
+    log = os.path.join(p.table_path, "_txn_log")
+    path = os.path.join(log, max(os.listdir(log)))
+    with open(path) as f:
+        entry = json.load(f)
+    for k in ("files", "key", "watermark"):
+        entry.pop(k, None)
+    with open(path, "w") as f:
+        json.dump(entry, f)
+
+
+def _snapshot_files(p, version=None):
+    snap = os.path.join(p.table_path, "data", p.table.entry(version)["snapshot"])
+    return {f: os.stat(os.path.join(snap, f)) for f in os.listdir(snap) if f[0] not in "._"}
+
+
+@pytest.fixture
+def scans(monkeypatch):
+    """Counts the pipeline's fallback watermark scans."""
+    calls = []
+
+    def spy(target, col):
+        calls.append(col)
+        return read_watermark(target, col)
+
+    monkeypatch.setattr(pm, "read_watermark", spy)
+    return calls
+
+
+def test_daily_runs_equal_full_rewrites(spark, tmp_path, scans):
+    p = CrimePipeline(spark, str(tmp_path / "p"), endpoint="fake://3000", pagesize=1000)
+    ref = CrimePipeline(spark, str(tmp_path / "ref"), endpoint="fake://3000", pagesize=1000)
+    for pipe in (p, ref):
+        pipe.run(now=NOW1)
+    _strip_stats(ref)
+    for now in DAYS:
+        r = p.run(now=now)
+        ref.run(now=now)
+        _strip_stats(ref)  # every reference run scans and rewrites everything
+        assert r["table_rows"] == p.crime_table().count()
+    assert scans == [WM] * len(DAYS)  # the reference's only
+    _assert_same_rows(p.crime_table(), ref.crime_table())
+
+
+def test_daily_run_writes_a_small_share_in_few_jobs(spark, tmp_path, jobs_started_by, scans):
+    p = CrimePipeline(spark, str(tmp_path / "p"), endpoint="fake://3000", pagesize=1000)
+    p.run(now=NOW1)
+    p.run(now=DAYS[0])  # the FULL files span every key: rewritten once
+    before = _snapshot_files(p)
+    runs = []
+    jobs = jobs_started_by(lambda: runs.append(p.run(now=DAYS[1])))
+    assert runs[0]["mode"] == "INCREMENT" and len(jobs) <= 4
+    after = _snapshot_files(p)
+    old_inodes = {s.st_ino for s in before.values()}
+    new_bytes = sum(s.st_size for s in after.values() if s.st_ino not in old_inodes)
+    assert 0 < new_bytes < 0.25 * sum(s.st_size for s in after.values())
+    assert scans == []
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/Chicago"])
+def test_logged_watermark_equals_the_scan(spark, tmp_path, tz, scans):
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        p = CrimePipeline(spark, str(tmp_path / "p"), endpoint="fake://300", pagesize=100)
+        for now in (NOW1, *DAYS[:2]):
+            p.run(now=now)
+            assert logged_watermark(p.table.entry(), WM) == (
+                True, read_watermark(p.crime_table(), WM))
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+    assert scans == []
+
+
+def test_entry_without_stats_falls_back_once(spark, tmp_path, scans):
+    p = CrimePipeline(spark, str(tmp_path / "p"), endpoint="fake://300", pagesize=100)
+    p.run(now=NOW1)
+    _strip_stats(p)
+    before = _snapshot_files(p)
+    p.run(now=DAYS[0])
+    assert scans == [WM]  # the watermark came from a scan
+    after = _snapshot_files(p)
+    # every file was rewritten, and the new entry has stats again
+    assert not {s.st_ino for s in before.values()} & {s.st_ino for s in after.values()}
+    entry = p.table.entry()
+    assert sorted(f["path"] for f in entry["files"]) == sorted(after)
+    assert logged_watermark(entry, WM) == (True, read_watermark(p.crime_table(), WM))
+    p.run(now=DAYS[1])
+    assert scans == [WM]
+
+
+def _silver_row(row, **changes):
+    d = {**row.asDict(), **changes}
+    return tuple(d[c] for c in CRIME_SILVER_SCHEMA.fieldNames())
+
+
+# a landed batch's key may be NULL (the transform's output is nullable)
+BATCH_SCHEMA = T.StructType([T.StructField(f.name, f.dataType, True)
+                             for f in CRIME_SILVER_SCHEMA.fields])
+
+
+def test_older_row_replacing_the_max_makes_the_watermark_unknown(spark, tmp_path, scans):
+    p = CrimePipeline(spark, str(tmp_path / "p"), endpoint="fake://300", pagesize=100)
+    p.run(now=NOW1)
+    p.run(now=DAYS[0])  # the max row now sits in the day's file; the rest are kept
+    top = p.crime_table().orderBy(F.desc(WM)).first()
+    older = _silver_row(top, case_num="OLDER",
+                        source_updated_on=top[WM] - dt.timedelta(days=30))
+    batch = spark.createDataFrame([older], CRIME_SILVER_SCHEMA)
+    entry = p._merge_publish(batch, p.table.entry(), action="merge:TEST")
+    assert logged_watermark(entry, WM) == (False, None)
+    assert p.crime_table().filter(F.col("case_num") == "OLDER").count() == 1
+    want = read_watermark(p.crime_table(), WM)
+    assert want < top[WM]
+    r = p.run(now=DAYS[1])
+    assert scans == [WM]
+    assert r["window"][0] == dt.datetime.combine(want.date(), dt.time.min).isoformat()
+    assert logged_watermark(p.table.entry(), WM) == (True, read_watermark(p.crime_table(), WM))
+
+
+def test_null_key_rows_from_both_sides_survive(spark, tmp_path):
+    p = CrimePipeline(spark, str(tmp_path / "p"), endpoint="fake://300", pagesize=100)
+    p.run(now=NOW1)
+    some = p.crime_table().orderBy(F.desc("crime_id")).first()
+    # T1 shares a file with a keyed row; the second batch matches that
+    # key, so the file is rewritten and T1 must survive as a survivor
+    first = [_silver_row(some, crime_id=None, case_num="T1"),
+             _silver_row(some, crime_id="K1", case_num="K1a")]
+    p._merge_publish(spark.createDataFrame(first, BATCH_SCHEMA),
+                     p.table.entry(), action="merge:TEST")
+    second = [_silver_row(some, crime_id=None, case_num="T2"),
+              _silver_row(some, crime_id="K1", case_num="K1b")]
+    entry = p._merge_publish(spark.createDataFrame(second, BATCH_SCHEMA),
+                             p.table.entry(), action="merge:TEST")
+    crime = p.crime_table()
+    assert sorted(r.case_num for r in crime.filter(F.col("crime_id").isNull()).collect()) == ["T1", "T2"]
+    assert [r.case_num for r in crime.filter(F.col("crime_id") == "K1").collect()] == ["K1b"]
+    assert sum(f["nulls"] for f in entry["files"]) == 2
+    assert entry["rows"] == crime.count()
+
+
+def test_load_batch_lists_only_its_day(spark, tmp_path):
+    p = CrimePipeline(spark, str(tmp_path / "p"), endpoint="fake://300", pagesize=100)
+    p.ingest_window(dt.datetime(2025, 2, 27), dt.datetime(2025, 3, 2), dt.date(2025, 3, 2))
+    p.ingest_window(dt.datetime(2025, 3, 2), dt.datetime(2025, 3, 4), dt.date(2025, 3, 4))
+    day = p.load_batch(dt.date(2025, 3, 4))
+    files = day.inputFiles()
+    assert files and all("load_date=2025-03-04" in f for f in files)
+    assert day.count() == len(_fake_page(300, dt.datetime(2025, 3, 2), dt.datetime(2025, 3, 4), 0, 10**6))

@@ -151,3 +151,109 @@ def test_diff_change_data_feed(spark, tmp_path):
     # reversed diff sees the inverse operations
     rev = {r.id: r._change for r in t.diff(["id"], v_from=2, v_to=1).collect()}
     assert rev == {2: "update_postimage", 3: "insert", 4: "delete"}
+
+
+# -- file-level commits ----------------------------------------------------
+
+def _snap(t, version):
+    return os.path.join(t.root, "data", t.entry(version)["snapshot"])
+
+
+def _names(snap):
+    return sorted(f for f in os.listdir(snap) if f[0] not in "._")
+
+
+def test_commit_links_kept_files_and_survives_vacuum_and_crash(spark, tmp_path, monkeypatch):
+    t = VersionedParquetTable(spark, str(tmp_path / "t"), key="id")
+    t.commit(_df(spark, [(i, f"a{i}") for i in range(10)]).repartitionByRange(2, "id"))
+    e1 = t.entry()
+    stats = sorted(t.file_stats(e1), key=lambda f: f["min"])
+    assert [(f["min"], f["max"], f["rows"], f["nulls"]) for f in stats] == [
+        (0, 4, 5, 0), (5, 9, 5, 0)]
+    lo, hi = stats[0]["path"], stats[1]["path"]
+    batch = _df(spark, [(7, "b7"), (12, "b12")])
+    merged = merge_upsert(t.read(files=[hi]), batch, keys=["id"])
+    v2 = t.commit(merged, action="merge", base=e1, keep=[lo])
+    e2 = t.entry(v2)
+    snap1, snap2 = _snap(t, 1), _snap(t, v2)
+    # exactly the kept file plus the written ones; the kept one is a link
+    assert _names(snap2) == sorted(f["path"] for f in e2["files"])
+    assert lo in _names(snap2) and hi not in _names(snap2)
+    assert os.stat(os.path.join(snap1, lo)).st_ino == os.stat(os.path.join(snap2, lo)).st_ino
+    assert all(os.stat(os.path.join(snap2, n)).st_nlink == 1 for n in _names(snap2) if n != lo)
+    assert e2["rows"] == 11
+    want2 = {**{i: f"a{i}" for i in range(10)}, 7: "b7", 12: "b12"}
+    assert {r.id: r.v for r in t.read().collect()} == want2
+
+    # a pure append keeps every file; vacuum then drops v1's directory,
+    # whose file v2 and v3 still hold by link
+    e3 = t.entry(t.commit(_df(spark, [(20, "c20")]), base=e2,
+                          keep=[f["path"] for f in e2["files"]]))
+    assert len(t.vacuum(keep_last=2)) == 1 and not os.path.exists(snap1)
+    assert {r.id: r.v for r in t.read(version=e3["version"] - 1).collect()} == want2
+    assert t.read().count() == 12
+    # an empty write next to kept files leaves no 0-row file behind
+    e4 = t.entry(t.commit(_df(spark, []), base=e3, keep=[f["path"] for f in e3["files"]]))
+    assert _names(_snap(t, e4["version"])) == sorted(f["path"] for f in e3["files"])
+    assert e4["files"] == e3["files"] and e4["rows"] == 12
+    e3 = e4
+
+    # a crash between the data write and the log publish
+    def torn(fd):
+        raise OSError("power cut")
+
+    monkeypatch.setattr(os, "fsync", torn)
+    with pytest.raises(OSError, match="power cut"):
+        t.commit(_df(spark, [(30, "d30")]), base=e3, keep=[f["path"] for f in e3["files"]])
+    monkeypatch.undo()
+    assert t.latest_version() == 4 and t.read().count() == 12
+    orphans = t.vacuum(keep_last=2)
+    assert len(orphans) == 2 and e3["snapshot"] not in orphans  # v2's and the orphan
+    assert t.read().count() == 12 and t.read(version=3).count() == 12
+
+
+def test_key_stats_without_footer_stats_read_the_column(tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from open_crime_etl_pipeline_spark.io.table import _file_stats
+
+    tbl = pa.table({"id": ["b", None, "a", "c"], "v": [1, 2, 3, 4]})
+    pq.write_table(tbl, str(tmp_path / "s.parquet"), row_group_size=2)
+    pq.write_table(tbl, str(tmp_path / "n.parquet"), write_statistics=False)
+    want = {"rows": 4, "min": "a", "max": "c", "nulls": 1}
+    assert _file_stats(str(tmp_path / "s.parquet"), "id") == {"path": "s.parquet", **want}
+    assert _file_stats(str(tmp_path / "n.parquet"), "id") == {"path": "n.parquet", **want}
+
+
+def test_logged_watermark_is_exact_or_unknown(spark, tmp_path):
+    """The entry's MAX(ts): W with nothing kept, max(M, W) with every
+    file kept, W when files were replaced and W >= M, else unknown."""
+    import datetime as dt
+
+    from open_crime_etl_pipeline_spark.incremental.watermark import (
+        logged_watermark,
+        read_watermark,
+    )
+
+    t = VersionedParquetTable(spark, str(tmp_path / "w"), key="id", watermark="ts")
+    day = lambda d: dt.datetime(2025, 3, d)
+    rows = lambda pairs: spark.createDataFrame(pairs, "id int, ts timestamp")
+    exact = lambda: logged_watermark(t.entry(), "ts") == (True, read_watermark(t.read(), "ts"))
+
+    t.commit(rows([(1, day(1)), (2, day(5))]).repartitionByRange(2, "id"))
+    assert logged_watermark(t.entry(), "ts") == (True, day(5)) and exact()
+    e = t.entry()
+    t.commit(rows([(3, day(3))]), base=e, keep=[f["path"] for f in e["files"]])
+    assert logged_watermark(t.entry(), "ts") == (True, day(5)) and exact()
+    e = t.entry()
+    keep = [f["path"] for f in e["files"] if f["min"] != 2]
+    t.commit(rows([(2, day(9))]), base=e, keep=keep)       # replaced, newer
+    assert logged_watermark(t.entry(), "ts") == (True, day(9)) and exact()
+    e = t.entry()
+    top = [f["path"] for f in e["files"] if f["min"] == 2]
+    keep = [f["path"] for f in e["files"] if f["path"] not in top]
+    t.commit(rows([(2, day(2))]), base=e, keep=keep)       # the max row, older
+    assert logged_watermark(t.entry(), "ts") == (False, None)
+    t.commit(t.read())                                      # nothing kept
+    assert logged_watermark(t.entry(), "ts") == (True, day(3)) and exact()
