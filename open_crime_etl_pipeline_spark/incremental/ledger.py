@@ -19,7 +19,8 @@ The Arrow schema comes from ``LOGS_SCHEMA``: timestamps are
 ``timestamp[us, tz=UTC]`` instants and dates ``date32``, which Spark
 reads back as the declared types under any session timezone. Reads
 (``read``, ``last_successful_load_date``, ``successful_load_dates``)
-stay lazy Spark scans; the fact tables never take this path.
+load the same Arrow table and hand it to Spark as a local relation,
+so the file has one reader; the fact tables never take this path.
 
 A ``logs/`` written by Spark (``part-*.parquet``, ``_SUCCESS``,
 ``.crc``) is folded into the ledger file by the next edit. Its files
@@ -42,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from ..localrel import local_df
 from ..schemas import LOGS_SCHEMA
 
 LEDGER_FILE = "ledger.parquet"
@@ -77,10 +79,7 @@ class RunLedger:
                       for f in os.listdir(self.path) if _is_spark_part(f))
 
     def read(self) -> DataFrame:
-        files = self._files()
-        if not files:
-            return self.spark.createDataFrame([], LOGS_SCHEMA)
-        return self.spark.read.schema(LOGS_SCHEMA).parquet(*files)
+        return local_df(self.spark, self._load(), LOGS_SCHEMA)
 
     def _load(self) -> pa.Table:
         # Spark writes timestamps as INT96; read them at µs like LOGS_SCHEMA

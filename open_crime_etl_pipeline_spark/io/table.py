@@ -71,6 +71,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..localrel import local_df
+
 _LOG_DIR = "_txn_log"
 _DATA_DIR = "data"
 _WIDTH = 20
@@ -191,7 +193,7 @@ class VersionedParquetTable:
         if v is None or (files is not None and not files):
             if self.schema is None:
                 raise ValueError(f"table {self.root} has no commits and no schema")
-            return self.spark.createDataFrame([], self.schema)
+            return local_df(self.spark, [], self.schema)
         snap = os.path.join(self.root, _DATA_DIR, self.entry(v)["snapshot"])
         if not os.path.isdir(snap):
             raise FileNotFoundError(

@@ -1,49 +1,33 @@
-"""Driver-side row lists as TRUE LocalRelations (optimization r13).
+"""Driver-side rows as a DataFrame: the package's one way to build one.
 
-``spark.createDataFrame(rows, schema)`` on classic PySpark does NOT
-build a local relation: it pickles the rows into an
-``sc.parallelize`` RDD with defaultParallelism partitions, so every
-action (and every BROADCAST) over the result runs a whole
-32-task scan job in which each task pays a Python-worker round-trip
-to unpickle its slice — ~0.2-0.3s of pure overhead per task on this
-engine, measured as the single dominant stage of several benched
-queries (bpe merge output: 8.0s summed runtime / 0.16s CPU across 32
-tasks; the pq/ivfpq codebooks' broadcast builds; the percentile
-offsets broadcast that global_row_number ships per ranking pass).
+:func:`local_df` turns rows held on the driver (codebooks, ranking
+offsets, per-query summaries, empty typed frames, the run ledger) into
+a DataFrame of an exact schema. It guarantees:
 
-The rows these call sites materialize are tiny driver-held MODEL
-STATE (argmax winners, codebooks, per-partition offsets) — they
-should never touch a Python worker. :func:`local_df` renders them as
-a SQL ``VALUES`` inline table instead: Catalyst resolves that to a
-LocalRelation, actions against it are driver-local, and broadcasts
-build straight from driver memory with ZERO jobs (guide §4 "eliminate
-the JVM↔Python boundary", §2.4 "remove shuffles outright" — here the
-removed unit is whole jobs).
+- the values and schema of ``spark.createDataFrame(rows, schema)``.
+  The rows go through pyspark's own ``LocalDataToArrowConversion``,
+  which checks each row's width, takes tuples, ``Row`` objects and
+  dicts, and reads a naive ``datetime`` as local time, as the list
+  path does;
+- a plan on a ``LocalRelation``. Collecting or broadcasting the frame
+  starts no Spark job, for an empty list and for every column type.
+  A plain list given to ``createDataFrame`` is pickled into an RDD
+  instead, and every action over it runs a job.
 
-Value fidelity: every literal is rendered in an exact, injection-safe
-form — integers as decimal text, doubles via ``repr`` (shortest
-round-trip form, parsed back to the bit-identical IEEE double) CAST
-to DOUBLE, strings as UTF-8 hex (``X'…'`` binary literal cast to
-STRING — no quoting/escaping ambiguity for ANY character), NULLs as
-``CAST(NULL AS t)``. Every column is CAST to the schema's exact type,
-so the result schema matches ``createDataFrame``'s for the supported
-types. Unsupported element types (maps, structs, timestamps) and
-empty row lists fall back to ``createDataFrame`` — correctness
-first; the fallback is the old behavior, not an error.
+Size decides nothing here. Past Spark's own
+``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+default) Spark ships the Arrow batches as an RDD.
 """
 
 from __future__ import annotations
 
-import datetime as _dt
-import decimal as _decimal
 from typing import Any, Iterable, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-# Past this many rows the SQL text itself becomes the bottleneck and
-# the data is no longer "tiny model state" — use the RDD path.
-_MAX_LOCAL_ROWS = 20_000
+from pyspark.sql.conversion import LocalDataToArrowConversion
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def _parse_schema(schema: "str | T.StructType") -> T.StructType:
@@ -55,73 +39,17 @@ def _parse_schema(schema: "str | T.StructType") -> T.StructType:
     return parsed
 
 
-def _sql_type(dt: T.DataType) -> str:
-    return dt.simpleString()
-
-
-def _encode(v: Any, dt: T.DataType) -> str:
-    if v is None:
-        return f"CAST(NULL AS {_sql_type(dt)})"
-    if isinstance(dt, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
-        return str(int(v))
-    if isinstance(dt, (T.DoubleType, T.FloatType)):
-        # repr is the shortest exact round-trip form; the CAST parse
-        # recovers the bit-identical IEEE value
-        return f"CAST('{float(v)!r}' AS {_sql_type(dt)})"
-    if isinstance(dt, T.StringType):
-        b = str(v).encode("utf-8")
-        return f"CAST(X'{b.hex()}' AS STRING)" if b else "''"
-    if isinstance(dt, T.BooleanType):
-        return "TRUE" if v else "FALSE"
-    if isinstance(dt, T.BinaryType):
-        return f"X'{bytes(v).hex()}'"
-    if isinstance(dt, T.DecimalType):
-        return f"CAST('{_decimal.Decimal(v)}' AS {_sql_type(dt)})"
-    if isinstance(dt, T.DateType):
-        if not isinstance(v, (_dt.date,)):
-            raise _Unsupported()
-        return f"DATE'{v.isoformat()}'"
-    if isinstance(dt, T.ArrayType):
-        return "array(" + ", ".join(_encode(x, dt.elementType) for x in v) + ")"
-    raise _Unsupported()
-
-
-class _Unsupported(Exception):
-    pass
-
-
 def local_df(
     spark: SparkSession,
-    rows: Iterable[Sequence[Any]],
+    rows: "Iterable[Sequence[Any]] | pa.Table",
     schema: "str | T.StructType",
 ) -> DataFrame:
-    """``spark.createDataFrame(rows, schema)`` for SMALL driver-side
-    lists of simple-typed tuples, as a true LocalRelation (module
-    docstring). Falls back to ``createDataFrame`` for empty input,
-    very large input, or element types the literal renderer does not
-    cover — behavior-identical either way."""
+    """``spark.createDataFrame(rows, schema)`` as a LocalRelation
+    (module docstring). ``rows`` may also be a ``pyarrow.Table`` that
+    already holds the schema's Arrow types."""
     st = _parse_schema(schema)
-    rows = list(rows)
-    if not rows or len(rows) > _MAX_LOCAL_ROWS:
-        return spark.createDataFrame(rows, st)
-    try:
-        rendered = []
-        for row in rows:
-            if len(row) != len(st.fields):
-                raise ValueError(
-                    f"local_df: row width {len(row)} != schema {len(st.fields)}"
-                )
-            rendered.append(
-                "("
-                + ", ".join(
-                    f"CAST({_encode(v, f.dataType)} AS {_sql_type(f.dataType)})"
-                    for v, f in zip(row, st.fields)
-                )
-                + ")"
-            )
-    except _Unsupported:
-        return spark.createDataFrame(rows, st)
-    cols = ", ".join(
-        f"col{i + 1} AS `{f.name}`" for i, f in enumerate(st.fields)
-    )
-    return spark.sql(f"SELECT {cols} FROM (VALUES {', '.join(rendered)})")
+    if not isinstance(rows, pa.Table):
+        rows = list(rows)
+        rows = (LocalDataToArrowConversion.convert(rows, st, False) if rows
+                else to_arrow_schema(st).empty_table())
+    return spark.createDataFrame(rows, st)

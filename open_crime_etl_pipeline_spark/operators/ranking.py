@@ -150,11 +150,6 @@ def grouped_running_sum(
             F.col(value_col).cast("long").alias("__off"),
         ).schema
     )
-    # local_df, not createDataFrame: the offsets broadcast otherwise
-    # scans a 32-partition pickled RDD (a full job with one Python
-    # worker round-trip per task) on EVERY ranking pass — this helper
-    # runs once per percentile query and once per suffix-doubling
-    # round (r13).
     off_df = F.broadcast(local_df(spark, offsets, off_schema))
     w = (
         Window.partitionBy("__pid", group_col)

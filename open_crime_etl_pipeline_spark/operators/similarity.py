@@ -858,24 +858,6 @@ def collect_codebook(cb: DataFrame) -> list[tuple[int, int, list[float]]]:
     )
 
 
-def codebook_df(spark, rows: list[tuple[int, int, list[float]]]) -> DataFrame:
-    """Driver-collected codebook rows back as a (s, cid, cvec) frame —
-    a TRUE LocalRelation (SQL ``VALUES``), same schema the join-based
-    consumers (e.g. :func:`pq_adc_topk`'s distance table) expect.
-    NOT ``spark.createDataFrame(list)``: that parallelizes the rows
-    into a defaultParallelism-partition PICKLED RDD, so every
-    broadcast over it runs a whole 32-task scan job with a Python
-    worker round-trip per task (~0.2s/task of pure overhead —
-    measured as the two dominant stages of the r13 pq profile). A
-    ``VALUES`` relation constant-folds driver-side: broadcasts build
-    from driver memory with ZERO jobs. Doubles round-trip via
-    ``repr`` (shortest exact form), so distances computed from this
-    frame are bit-identical to ones from the original lineage."""
-    from ..localrel import local_df
-
-    return local_df(spark, rows, "s INT, cid BIGINT, cvec ARRAY<DOUBLE>")
-
-
 def sql_double(x: float) -> str:
     """A double as exact SQL text (repr round-trips the IEEE value)."""
     return f"CAST('{float(x)!r}' AS DOUBLE)"

@@ -68,6 +68,7 @@ from .io.writers import (
     write_partitioned_crime,
     write_partitioned_json_rows,
 )
+from .localrel import local_df
 from .operators.merge import merge_upsert
 from .schemas import CRIME_RAW_SCHEMA, CRIME_SILVER_SCHEMA
 from .sources.socrata import SocrataReader, register_socrata_source
@@ -197,7 +198,7 @@ class CrimePipeline:
             landed = (self.spark.read.schema(LANDING_SCHEMA)
                       .option("basePath", self.landing).json(days))
         else:
-            landed = self.spark.createDataFrame([], LANDING_SCHEMA)
+            landed = local_df(self.spark, [], LANDING_SCHEMA)
         return transform_crime_page(landed)  # selects only silver columns
 
     def run(self, now: dt.datetime, load_date: dt.date | None = None) -> dict:

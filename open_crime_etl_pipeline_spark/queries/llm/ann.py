@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ...localrel import local_df
 from ...operators import dedup as D
 from ...operators import multimodal as M
 from ...operators import similarity as S
@@ -244,6 +245,8 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 _PQ_M, _PQ_DSUB, _PQ_K0 = 8, 8, 16
+# collect_codebook rows as a frame: (subspace, centroid id, centroid)
+_CODEBOOK_DDL = "s INT, cid BIGINT, cvec ARRAY<DOUBLE>"
 
 _PQ_SUB_LIST = "[" + ", ".join(
     f"CAST(embedding[t.s * {_PQ_DSUB} + {i}] AS DOUBLE)" for i in range(1, _PQ_DSUB + 1)
@@ -352,8 +355,6 @@ def pq_adc_over(emb: DataFrame) -> DataFrame:
     collect-the-checkpoint job against the r12
     ``localCheckpoint()``'d frame. subs stays un-pinned (r12 revert
     kept: scan+slice is cheaper to recompute than to materialize)."""
-    from ...localrel import local_df
-
     subs = S.pq_subvectors(emb, "vec_id", "embedding", m=_PQ_M, dsub=_PQ_DSUB)
     init = subs.filter(F.col("vec_id") < _PQ_K0).select(
         "s", F.col("vec_id").alias("cid"), F.col("sub").alias("cvec")
@@ -361,12 +362,12 @@ def pq_adc_over(emb: DataFrame) -> DataFrame:
     cb_rows = S.collect_codebook(
         S.pq_train_codebook(subs, init, rounds=1, dsub=_PQ_DSUB)
     )
-    cb = S.codebook_df(emb.sparkSession, cb_rows)
+    cb = local_df(emb.sparkSession, cb_rows, _CODEBOOK_DDL)
     codes = S.pq_assign(subs, cb).select("vec_id", "s", "cid")
     # the ADC lookup table is O(|Q|·m·k) query-side model state:
     # computed driver-side (bit-equal pinned fold, S.py_sq_dist) from
-    # the collected query vectors, so its broadcast builds from a
-    # LocalRelation instead of running a scan+join+fold job (r13).
+    # the collected query vectors and handed back through local_df, so
+    # its broadcast builds from driver memory with no scan+join+fold job.
     qrows = [
         (int(r["vec_id"]), [float(x) for x in r["embedding"]])
         for r in emb.filter(F.col("vec_id") < 5)
@@ -611,7 +612,7 @@ def ivfpq_adc_over(
     rcb_rows = S.collect_codebook(
         S.pq_train_codebook(rsubs, rinit, rounds=1, dsub=_PQ_DSUB)
     )
-    rcb = S.codebook_df(emb.sparkSession, rcb_rows)
+    rcb = local_df(emb.sparkSession, rcb_rows, _CODEBOOK_DDL)
     codes = S.pq_assign(rsubs, rcb, carry_cols=("ccid",)).select(
         "vec_id", "ccid", "s", "cid"
     )
@@ -621,12 +622,10 @@ def ivfpq_adc_over(
     # from the collected query vectors with the bit-equal pinned fold
     # (S.py_sq_dist; probe order = sorted (d2, ccid) ascending, the
     # same ordering the r12 row_number window and the interim
-    # array_sort both used) and shipped back as a LocalRelation. The
+    # array_sort both used) and handed back through local_df. The
     # scan-side qcells/qres/pdist subtree and its broadcast-build job
     # are gone; the final job is one codes scan against a
     # driver-built broadcast.
-    from ...localrel import local_df
-
     qrows = [
         (int(r["vec_id"]), [float(x) for x in r["embedding"]])
         for r in emb.filter(F.col("vec_id") < 5)

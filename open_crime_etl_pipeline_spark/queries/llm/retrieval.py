@@ -586,10 +586,6 @@ def bpe_multi_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ...localrel import local_df
 
-    # local_df, not createDataFrame: the 4-row merge table otherwise
-    # materializes as a 32-partition pickled RDD whose scan was the
-    # single dominant stage of this query's profile (8.0s summed
-    # runtime / 0.16s CPU of pure Python-worker round-trips; r13).
     return local_df(
         spark, merges,
         "round int, w1 string, w2 string, merged string, pair_count long",

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..localrel import local_df
 from ..operators.merge import dedup_last_writer_wins, merge_upsert
 from .core import _t, dec2, fmt_date
 from .registry import register
@@ -290,7 +291,8 @@ def crime_pipeline_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         p = CrimePipeline(spark, root, endpoint="fake://120", pagesize=60)
         r1 = p.run(now=dt.datetime(2025, 2, 15, 12), load_date=dt.date(2025, 2, 15))
         r2 = p.run(now=dt.datetime(2025, 3, 10, 12), load_date=dt.date(2025, 3, 10))
-        runs = spark.createDataFrame(
+        runs = local_df(
+            spark,
             [
                 (1, r1["run_id"], r1["mode"], r1["status"],
                  r1["window"][0], r1["window"][1], r1["table_rows"]),
@@ -323,7 +325,7 @@ def crime_pipeline_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         # that grows the collected set past a handful of ledger rows must
         # fail here, not silently become a driver-side materialization
         assert len(rows) <= 16, f"lifecycle projection grew to {len(rows)} rows"
-        return spark.createDataFrame(rows, out.schema)
+        return local_df(spark, rows, out.schema)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -732,8 +734,8 @@ def manifest_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .collect()  # O(buckets) summary rows; lake dir dies below
         )
-        return spark.createDataFrame(
-            rows,
+        return local_df(
+            spark, rows,
             "bucket long, n_docs long, total_chars long, content_checksum long",
         )
     finally:
@@ -839,8 +841,8 @@ def manifest_stream_tail_exactly_once(spark: SparkSession, sf_dir: str) -> DataF
             )
         land(11)
         partials += drain()
-        acc = spark.createDataFrame(
-            partials,
+        acc = local_df(
+            spark, partials,
             "bucket long, n_docs long, total_chars long, content_checksum long",
         )
         rows = (
@@ -852,8 +854,8 @@ def manifest_stream_tail_exactly_once(spark: SparkSession, sf_dir: str) -> DataF
             )
             .collect()  # materialize before the temp lake dir dies below
         )
-        return spark.createDataFrame(
-            rows,
+        return local_df(
+            spark, rows,
             "bucket long, n_docs long, total_chars long, content_checksum long",
         )
     finally:
@@ -966,8 +968,8 @@ def manifest_compact_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
                         "total_chars", "content_checksum")
                 .collect()  # one summary row per snapshot
             )
-        return spark.createDataFrame(
-            rows,
+        return local_df(
+            spark, rows,
             "snapshot string, n_docs long, total_chars long, "
             "content_checksum long",
         )
@@ -1049,8 +1051,8 @@ def manifest_stats_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .collect()  # O(statuses) rows; the temp lake dir dies below
         )
-        return spark.createDataFrame(
-            rows,
+        return local_df(
+            spark, rows,
             "o_orderstatus string, n_orders long, sum_key long, "
             "key_checksum long",
         )
@@ -1129,8 +1131,8 @@ def manifest_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .collect()  # ONE summary row; the temp lake dir dies below
         )
-        return spark.createDataFrame(
-            rows, "n_orders long, sum_key long, key_checksum long"
+        return local_df(
+            spark, rows, "n_orders long, sum_key long, key_checksum long"
         )
     finally:
         shutil.rmtree(out, ignore_errors=True)
@@ -1224,8 +1226,8 @@ def manifest_pushdown_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame
             )
             .collect()  # O(statuses) rows; the temp lake dir dies below
         )
-        return spark.createDataFrame(
-            rows,
+        return local_df(
+            spark, rows,
             "o_orderstatus string, n_orders long, sum_key long, "
             "key_checksum long",
         )
@@ -1326,8 +1328,8 @@ def manifest_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .collect()  # O(buckets) rows; the temp lake dir dies below
         )
-        return spark.createDataFrame(
-            rows,
+        return local_df(
+            spark, rows,
             "bucket long, n_docs long, total_chars long, "
             "content_checksum long",
         )
@@ -1431,8 +1433,8 @@ def manifest_optimize_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .collect()  # O(statuses) rows; the temp lake dir dies below
         )
-        return spark.createDataFrame(
-            rows,
+        return local_df(
+            spark, rows,
             "o_orderstatus string, n_orders long, sum_key long, "
             "key_checksum long",
         )
@@ -1503,8 +1505,8 @@ def manifest_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
         updates = target.filter(
             F.col("o_orderkey").between(1000, 2999)
         ).withColumn("o_orderstatus", F.lit("X"))
-        inserts = spark.createDataFrame(
-            [(-1, "Z"), (-2, "Z"), (-3, "Z")],
+        inserts = local_df(
+            spark, [(-1, "Z"), (-2, "Z"), (-3, "Z")],
             "o_orderkey long, o_orderstatus string",
         )
         man2, n_up, n_ins = MS.merge_into(
@@ -1545,8 +1547,8 @@ def manifest_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .collect()  # O(statuses) rows; the temp lake dir dies below
         )
-        return spark.createDataFrame(
-            rows,
+        return local_df(
+            spark, rows,
             "o_orderstatus string, n_orders long, sum_key long, "
             "key_checksum long",
         )
@@ -1656,8 +1658,8 @@ def manifest_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .collect()  # O(buckets) rows; the temp lake dir dies below
         )
-        return spark.createDataFrame(
-            rows,
+        return local_df(
+            spark, rows,
             "bucket long, n_docs long, total_chars long, "
             "content_checksum long",
         )
@@ -1685,7 +1687,7 @@ def manifest_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         "plus its null count, are answered by table_stats() straight "
         "from the log's per-shard n_rows / min-max / nullCount — ZERO "
         "shard reads (the receipt is structural: the answer dataframe "
-        "is built with spark.createDataFrame from driver-side "
+        "is built with local_df from driver-side "
         "metadata; no Spark job ever touches shards/). This is the "
         "Delta/Iceberg 'answer aggregates from file statistics' fast "
         "path on the from-scratch format. Exactness discipline: "
@@ -1741,8 +1743,8 @@ def manifest_count_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
             str(cols["o_orderpriority"]["max"]),
             int(cols["o_orderpriority"]["null_count"]),
         )
-        return spark.createDataFrame(
-            [row],
+        return local_df(
+            spark, [row],
             "n_rows long, min_key long, max_key long, "
             "min_cust long, max_cust long, min_prio string, "
             "max_prio string, prio_nulls long",
@@ -1838,8 +1840,8 @@ def manifest_recorded_schema_read(spark: SparkSession, sf_dir: str) -> DataFrame
             )
             .collect()  # O(priorities) rows; the temp lake dies below
         )
-        return spark.createDataFrame(
-            rows,
+        return local_df(
+            spark, rows,
             "pri string, n_orders long, sum_key long, "
             "min_date string, max_date string",
         )
@@ -1951,8 +1953,8 @@ def manifest_optimize_small_files(spark: SparkSession, sf_dir: str) -> DataFrame
             )
             .collect()  # O(statuses) rows; the temp lake dies below
         )
-        return spark.createDataFrame(
-            rows,
+        return local_df(
+            spark, rows,
             "o_orderstatus string, n_orders long, sum_key long, "
             "key_checksum long",
         )
@@ -2054,8 +2056,8 @@ def manifest_txn_timestamp_travel(spark: SparkSession, sf_dir: str) -> DataFrame
         rows = (
             agg(asof, "asof_v1").unionByName(agg(final, "final")).collect()
         )
-        return spark.createDataFrame(
-            rows, "snap string, n_orders long, sum_key long"
+        return local_df(
+            spark, rows, "snap string, n_orders long, sum_key long"
         )
     finally:
         shutil.rmtree(out, ignore_errors=True)
@@ -2181,8 +2183,8 @@ def manifest_cdf_change_types(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("commit_version", "change_type")
             .collect()  # O(versions x classes) rows; temp dir dies below
         )
-        return spark.createDataFrame(
-            rows,
+        return local_df(
+            spark, rows,
             "commit_version long, change_type string, n_rows long, "
             "sum_key long, status_sum long",
         )
@@ -2283,7 +2285,8 @@ def manifest_parquet_codec_pipeline(
             .orderBy("status")
             .collect()  # O(statuses) rows; the temp lake dir dies below
         )
-        return spark.createDataFrame(
+        return local_df(
+            spark,
             rows, "status string, n_rows long, sum_key long, sum_cust long"
         )
     finally:
@@ -2381,8 +2384,8 @@ def manifest_check_constraints(
         must_refuse(
             "out-of-band MERGE",
             lambda: t.merge(
-                spark.createDataFrame(
-                    [(7, 10.0)], "k long, price double"
+                local_df(
+                    spark, [(7, 10.0)], "k long, price double"
                 ),
                 ["k"],
             ),
@@ -2404,8 +2407,8 @@ def manifest_check_constraints(
             )
             .collect()  # 1 row; the temp lake dir dies below
         )
-        return spark.createDataFrame(
-            rows, "n_rows long, sum_key long, sum_price double"
+        return local_df(
+            spark, rows, "n_rows long, sum_key long, sum_price double"
         )
     finally:
         shutil.rmtree(out, ignore_errors=True)
@@ -2507,8 +2510,8 @@ def manifest_deletion_vectors(
             )
             .collect()  # 1 row; the temp lake dir dies below
         )
-        return spark.createDataFrame(
-            rows, "n_rows long, sum_key long, sum_cust long"
+        return local_df(
+            spark, rows, "n_rows long, sum_key long, sum_cust long"
         )
     finally:
         shutil.rmtree(out, ignore_errors=True)
@@ -2605,8 +2608,8 @@ def manifest_alter_add_columns(
             .orderBy("cohort")
             .collect()  # 2 rows; the temp lake dir dies below
         )
-        return spark.createDataFrame(
-            rows,
+        return local_df(
+            spark, rows,
             "cohort string, n_rows long, sum_key long, sum_cust long",
         )
     finally:
@@ -2714,8 +2717,8 @@ def manifest_dv_update_merge(
             )
             .collect()  # 1 row; the temp lake dir dies below
         )
-        return spark.createDataFrame(
-            rows, "n_rows long, sum_key long, sum_cust long"
+        return local_df(
+            spark, rows, "n_rows long, sum_key long, sum_cust long"
         )
     finally:
         shutil.rmtree(out, ignore_errors=True)

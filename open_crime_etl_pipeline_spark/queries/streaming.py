@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..localrel import local_df
 from ..operators import textstats as TS
 from ..schemas import TESTDATA_SCHEMAS
 from ..streaming import sessionize_stateful, windowed_event_counts
@@ -611,8 +612,8 @@ def streaming_socrata_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
              cursors[r["month"]])
             for r in sorted(rows, key=lambda r: r["month"])
         ]
-        return spark.createDataFrame(
-            out,
+        return local_df(
+            spark, out,
             "month string, n_rows long, n_ids long, n_arrests long, "
             "last_page int",
         )

@@ -204,6 +204,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from ..localrel import local_df
+
 FORMAT_NAME = "shard_manifest"
 MANIFEST = "manifest.json"
 HISTORY_DIR = "manifests"  # the commit log: per-version actions + checkpoints
@@ -2787,12 +2789,14 @@ class ManifestShardDataSource(DataSource):
             self.options.get("arrow_write", "true")
         ).lower() in ("true", "1", "yes") and _arrow_write_ok(schema)
 
+    _DEFAULT_CODEC = "jsonl"
+
     def _codec(self) -> str:
         """The shard codec for this write: an explicit
         ``shard_format`` option wins; otherwise the table's RECORDED
         codec (one small log resolve — appends and DML stick to the
-        codec the table was created with); new tables default to
-        jsonl."""
+        codec the table was created with); new tables get
+        ``_DEFAULT_CODEC``."""
         fmt = str(self.options.get("shard_format", "")).lower()
         if fmt in ("jsonl", "parquet"):
             return fmt
@@ -2810,7 +2814,7 @@ class ManifestShardDataSource(DataSource):
                 man = None
             if man:
                 return _table_codec(man)
-        return "jsonl"
+        return self._DEFAULT_CODEC
 
     def writer(self, schema: StructType, overwrite: bool) -> DataSourceWriter:
         if self._codec() == "parquet":
@@ -2842,25 +2846,7 @@ class ManifestShardParquetDefaultDataSource(ManifestShardDataSource):
     existing tables keep their RECORDED codec). Also how the test
     suite proves the manifest queries are codec-blind."""
 
-    def _codec(self) -> str:
-        fmt = str(self.options.get("shard_format", "")).lower()
-        if fmt in ("jsonl", "parquet"):
-            return fmt
-        if fmt:
-            raise ValueError(
-                f"shard_format must be 'jsonl' or 'parquet', got {fmt!r}"
-            )
-        path = self.options.get("path")
-        if path:
-            try:
-                man = read_manifest_dict(path)
-            except ManifestProtocolError:
-                raise
-            except Exception:
-                man = None
-            if man:
-                return _table_codec(man)
-        return "parquet"
+    _DEFAULT_CODEC = "parquet"
 
 
 def register(spark) -> None:
@@ -3039,8 +3025,8 @@ def _dv_scan(spark, path: str, schema, touched: list[dict]):
         .withColumn("__dv_ri", F.col("_metadata.row_index"))
     )
     if existing_pairs:
-        dvdf = spark.createDataFrame(
-            existing_pairs, "__dv_file string, __dv_ri long"
+        dvdf = local_df(
+            spark, existing_pairs, "__dv_file string, __dv_ri long"
         )
         df = df.join(F.broadcast(dvdf), on=list(_DV_COLS), how="left_anti")
     return df
@@ -3194,14 +3180,13 @@ def read_manifest(
             "read_manifest: prune/prune_eq require a schema - this "
             "table's log records none (pre-round-11), skipping can "
             "legitimately drop EVERY shard, and an empty result still "
-            "needs typed columns (spark.createDataFrame with "
-            "schema=None cannot infer them)"
+            "needs typed columns (an empty frame cannot infer them)"
         )
     shards = man["shards"]
     if prune or prune_eq:
         shards, _total = prune_shards(man, prune, prune_eq)
         if not shards:  # every shard skipped: empty typed frame
-            return spark.createDataFrame([], schema)
+            return local_df(spark, [], schema)
     return _spark_read_shard_entries(spark, path, shards, schema)
 
 
@@ -4438,7 +4423,7 @@ def table_changes(
                 and s.get("data_change", True)
             ]
     if not adds:
-        out = spark.createDataFrame([], schema)
+        out = local_df(spark, [], schema)
         if with_change_type:
             out = out.withColumn(
                 "_change_type", F.lit(None).cast("string")

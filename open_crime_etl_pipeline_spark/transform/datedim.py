@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..localrel import local_df
+
 HOLIDAY_SCHEMA = T.StructType([
     T.StructField("hdate", T.DateType(), False),
     T.StructField("holiday_name", T.StringType(), False),
@@ -37,7 +39,7 @@ def default_holidays_df(spark: SparkSession) -> DataFrame:
     import datetime as dt
 
     rows = [(dt.date.fromisoformat(d), n) for d, n in _DEFAULT_HOLIDAYS_1995]
-    return spark.createDataFrame(rows, HOLIDAY_SCHEMA)
+    return local_df(spark, rows, HOLIDAY_SCHEMA)
 
 
 def build_date_dim(

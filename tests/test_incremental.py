@@ -185,6 +185,36 @@ def test_ledger_folds_spark_written_layout(spark, tmp_path):
     assert sorted(r.run_id for r in ledger.read().collect()) == sorted(by_id)
 
 
+def test_ledger_read_matches_spark_parquet_scan(spark, tmp_path):
+    """``read`` builds its frame from the Arrow table the edits load; a
+    Spark parquet scan of the same files collects the same rows, the
+    run's start and end instants included, for the ledger file and for
+    a ``logs/`` that Spark wrote as part files."""
+    t0 = dt.datetime(2025, 3, 4, 23, 0, 0, 123456, tzinfo=dt.timezone.utc)
+    old = [
+        ("r1", dt.date(2025, 3, 4), "SCHEDULED", "FULL", "SUCCESS",
+         t0, t0 + dt.timedelta(minutes=1), "{}"),
+        ("r2", dt.date(2025, 3, 5), "RECOVERY", "FULL", "RUNNING",
+         t0 + dt.timedelta(days=1), None, '{"k": 1}'),
+    ]
+    legacy = str(tmp_path / "legacy")
+    spark.createDataFrame(old, LOGS_SCHEMA).repartition(2).write.parquet(legacy)
+    single = RunLedger(spark, str(tmp_path / "logs"))
+    d = dt.date(2025, 3, 5)
+    single.finish_run(single.start_run(d), d, "SUCCESS")
+    single.start_run(d + dt.timedelta(days=1), mode="INCREMENT")
+
+    for ledger in (RunLedger(spark, legacy), single):
+        files = ledger._files()
+        assert files and all(os.path.isfile(f) for f in files)
+        got = ledger.read()
+        assert got.schema == LOGS_SCHEMA
+        want = spark.read.schema(LOGS_SCHEMA).parquet(*files).collect()
+        assert len(want) == 2
+        assert {r.end_time is None for r in want} == {True, False}
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want))
+
+
 def test_ledger_edits_run_no_spark_job(spark, tmp_path, jobs_started_by):
     ledger = RunLedger(spark, str(tmp_path / "logs"))
     d = dt.date(2025, 3, 5)
