@@ -81,25 +81,3 @@ def incremental_window(
         return full_epoch, now
     start = dt.datetime.combine(watermark.date(), dt.time.min)
     return start, now
-
-
-def month_windows(
-    start: dt.datetime, end: dt.datetime
-) -> list[tuple[dt.datetime, dt.datetime]]:
-    """Month-sized [start, end) chunks, last clamped to ``end``
-    (F4 ≡ generate_date_range, helper.py:41-65) — bounds API pages per
-    request in the reference; bounds files per ingest batch here."""
-    import calendar
-
-    def add_month(d: dt.datetime) -> dt.datetime:
-        year, month = (d.year + 1, 1) if d.month == 12 else (d.year, d.month + 1)
-        day = min(d.day, calendar.monthrange(year, month)[1])  # Jan 31 → Feb 28
-        return d.replace(year=year, month=month, day=day)
-
-    out = []
-    cur = start
-    while cur < end:
-        nxt = add_month(cur)
-        out.append((cur, min(nxt, end)))
-        cur = nxt
-    return out

@@ -514,23 +514,6 @@ def frame_sample_decoded(media: DataFrame, every_n: int = 2) -> DataFrame:
     )
 
 
-def _fake_decode(payload: bytes) -> list[float]:
-    """Deterministic stand-in for a codec: cheap byte statistics."""
-    if not payload:
-        return [0.0] * N_FEATURES
-    n = len(payload)
-    return [
-        float(n),
-        float(sum(payload) % 997),
-        float(payload[0]),
-        float(payload[-1]),
-        float(max(payload)),
-        float(min(payload)),
-        float(sum(1 for b in payload if b == 32)),  # spaces ≈ token count
-        float(n % 251),
-    ]
-
-
 def decode_and_featurize(media: DataFrame, fake: bool = True) -> DataFrame:
     """mapInPandas decode+feature stage. ``fake=False`` runs the REAL
     pure-Python raster codec (24-bit BMP / binary PPM); features are

@@ -127,9 +127,10 @@ Round 11 hardens the format's production story:
   text-heavy tables; admission is conservative by theorem and
   ``table_stats`` omits truncated columns rather than report bounds
   as values.
-- **Arrow write path** (:class:`ManifestArrowShardWriter`): write
-  tasks receive ``RecordBatch``es — byte-identical shards to the row
-  path (pinned), stats via Arrow kernels, measured ×1.43.
+- **One Arrow write path** (:class:`ManifestShardWriter`): write
+  tasks receive ``RecordBatch``es for every schema, batch or stream,
+  jsonl or parquet; stats come from Arrow kernels, and Python values
+  are built only for jsonl lines and Bloom columns (:func:`_py_converter`).
 - **UPDATE WHERE SET** (:func:`update_where`) completes the DML triad;
   **metadata-only aggregates** (:func:`table_stats`) answer
   count/min/max/nullCount with zero shard reads; the stream tail
@@ -732,38 +733,81 @@ def _string_fields(schema: StructType) -> set[str]:
     }
 
 
-def _needs_row_norm(dt) -> bool:
-    """Does this type tree contain a struct? Struct values reach the
-    ROW write path as :class:`Row` objects — a tuple subclass that
-    ``json.dumps`` would serialize as a JSON ARRAY, which every read
-    path (the custom decoders and Spark's JSON source alike) reads
-    back as NULL for a struct column. Such columns get normalized to
-    dicts per value (:func:`_norm_nested_rows`) before serialization;
-    everything else pays nothing."""
+def _json_text(v) -> str:
+    """Canonical JSON: the one line encoding of a jsonl shard row."""
+    return json.dumps(
+        v, sort_keys=True, default=_json_default, ensure_ascii=False
+    )
+
+
+def _py_converter(dt):
+    """The one Arrow-to-Python value converter, built from the Spark
+    type, for the values the shard format needs in Python (jsonl lines
+    and Bloom columns). It maps a ``to_pylist()`` value to what
+    pyspark's own row conversion (``ArrowTableToRowsConversion``)
+    yields, in JSON-ready form, at any depth:
+
+    - a struct stays a dict (a ``Row`` is a tuple and would serialize
+      as a JSON array);
+    - a map becomes a dict; keys ``json.dumps`` cannot take become
+      strings: date, timestamp, decimal and binary keys their
+      :func:`_json_default` forms, which the readers' ``key_conv``
+      parses back, array and struct keys their canonical JSON text;
+    - a tz-aware timestamp becomes naive local wall time,
+      ``astimezone().replace(tzinfo=None)``;
+    - UDT, variant and null leaves go through pyspark's converter.
+
+    Returns None for identity, so JSON-native columns pay nothing per
+    value."""
     from pyspark.sql import types as T
+    from pyspark.sql.conversion import ArrowTableToRowsConversion
 
-    if isinstance(dt, T.StructType):
-        return True
+    if isinstance(dt, T.TimestampType):
+        return lambda v: v.astimezone().replace(tzinfo=None)
     if isinstance(dt, T.ArrayType):
-        return _needs_row_norm(dt.elementType)
+        ec = _py_converter(dt.elementType)
+        if ec is None:
+            return None
+        return lambda v: [None if x is None else ec(x) for x in v]
+    if isinstance(dt, T.StructType):
+        fcs = [(f.name, _py_converter(f.dataType)) for f in dt.fields]
+        if all(fc is None for _n, fc in fcs):
+            return None
+        return lambda v: {
+            n: v[n] if fc is None or v[n] is None else fc(v[n])
+            for n, fc in fcs
+        }
     if isinstance(dt, T.MapType):
-        return _needs_row_norm(dt.keyType) or _needs_row_norm(dt.valueType)
-    return False
+        kc = _py_converter(dt.keyType) or (lambda k: k)
+        vc = _py_converter(dt.valueType) or (lambda x: x)
+        if isinstance(dt.keyType, (T.ArrayType, T.StructType)):
+            enc = _json_text
+        elif isinstance(dt.keyType, (
+            T.StringType, T.BooleanType, T.ByteType, T.ShortType,
+            T.IntegerType, T.LongType, T.FloatType, T.DoubleType,
+        )):
+            enc = None
+        else:
+            enc = _json_default
+        key = kc if enc is None else (lambda k: enc(kc(k)))
+        return lambda v: {
+            key(k): None if x is None else vc(x) for k, x in v
+        }
+    if isinstance(
+        dt, (T.BinaryType, T.TimestampNTZType)
+    ) or not ArrowTableToRowsConversion._need_converter(dt):
+        return None
+    return ArrowTableToRowsConversion._create_converter(
+        dt, none_on_identity=True
+    )
 
 
-def _norm_nested_rows(v):
-    """Row -> dict at every depth (Row.asDict(True) recurses through
-    nested Rows, lists, and dicts); lists/dicts that may HOLD Rows
-    recurse here."""
-    from pyspark.sql import Row
-
-    if isinstance(v, Row):
-        return v.asDict(True)
-    if isinstance(v, list):
-        return [_norm_nested_rows(x) for x in v]
-    if isinstance(v, dict):
-        return {k: _norm_nested_rows(x) for k, x in v.items()}
-    return v
+def _py_column(col, conv) -> list:
+    """A column's Python values through its :func:`_py_converter`."""
+    vals = col.to_pylist()
+    if conv is None:
+        return vals
+    return [None if v is None else conv(v) for v in vals]
 
 
 def _stats_fields(schema: StructType) -> list[str]:
@@ -885,7 +929,31 @@ class ShardCommit(WriterCommitMessage):
     #   (:func:`table_stats`) must skip these columns
 
 
-class ManifestShardWriter(DataSourceWriter):
+def _shard_entry(m: ShardCommit) -> dict:
+    """The log entry for one written shard, without ``added_seq`` (the
+    committer stamps that): shared by staging, batch and epoch
+    commits."""
+    return {
+        "file": m.shard,
+        "n_rows": m.n_rows,
+        "digest": m.digest,
+        **({"stats": m.stats} if m.stats else {}),
+        **({"stats_trunc": m.trunc} if m.trunc else {}),
+        **({"blooms": m.blooms} if m.blooms else {}),
+        **({"nulls": m.nulls} if m.nulls is not None else {}),
+    }
+
+
+class ManifestShardWriter(DataSourceArrowWriter):
+    """The shard writer, and the jsonl codec. Every ``shard_manifest``
+    write, batch or stream, runs :meth:`write` on the
+    ``pyarrow.RecordBatch``es the engine hands a task. The skeleton
+    (stats, Bloom bits, spool, upload, commit message) is shared; a
+    codec only encodes the payload through :meth:`_open`,
+    :meth:`_add` and :meth:`_close`. This class streams canonical JSON
+    lines into a gzip spool; :class:`ManifestParquetShardWriter`
+    writes one parquet file."""
+
     #: rows whose compressed shard stays under this many bytes never
     #: touch disk; larger partitions spill their COMPRESSED stream to a
     #: local scratch file (``tempfile.SpooledTemporaryFile`` rollover)
@@ -899,6 +967,7 @@ class ManifestShardWriter(DataSourceWriter):
     #: (explicit option, else the table's recorded codec), and the
     #: commit stamps it into the log so later appends/DML inherit it
     _CODEC = "jsonl"
+    _EXT = ".jsonl.gz"
 
     def __init__(self, options: dict, schema: StructType, overwrite: bool):
         path = options.get("path")
@@ -994,77 +1063,119 @@ class ManifestShardWriter(DataSourceWriter):
         self.txn = (str(app), int(ver)) if app is not None else None
 
     # -- executor side ---------------------------------------------------
-    def write(self, iterator) -> ShardCommit:
-        """Single streaming pass: each serialized line feeds the md5
-        (content address = hash of the UNCOMPRESSED bytes, unchanged)
-        and a gzip stream over a spooled temp file, so peak task memory
-        is O(spill_threshold), never O(partition bytes). Only once the
-        digest — and therefore the final name — is known are the
-        compressed bytes uploaded to a unique temp and atomically
-        moved. zlib's output is independent of write-chunking at a
-        fixed level, and ``mtime=0`` pins the container header, so a
-        replayed task still rewrites byte-identical files (same
-        idempotence contract as the buffered round-8 version; shard
-        names are identical too)."""
+    def write(self, iterator) -> ShardCommit:  # Iterator[pa.RecordBatch]
+        """One pass over the task's batches. Per batch: null counts
+        from validity bitmaps, min/max from the C++ ``min_max`` kernel
+        (tz-aware timestamps from their local wall-time values), Bloom
+        bits over the batch's distinct values, then
+        the codec encodes the batch into a spooled temp file, so peak
+        task memory is O(spill_threshold) for jsonl. Only once the
+        digest, and with it the final name, is known are the bytes
+        uploaded to a unique temp and atomically moved; a replayed
+        task rewrites byte-identical files under the same name.
+
+        NaN rule: a float column containing NaN records no min/max for
+        the shard. Spark sorts NaN above every double while Python
+        compares it false both ways, so any bound would prune live
+        rows; without one the shard is admitted on every probe."""
         import tempfile
 
+        import pyarrow as pa
+        from pyarrow import compute as pc
+        from pyspark.sql import types as T
+
         fields = self.schema.fieldNames()
-        stat_cols = set(_stats_fields(self.schema))
-        norm_cols = [
-            f.name for f in self.schema.fields if _needs_row_norm(f.dataType)
-        ]
+        convs = {f.name: _py_converter(f.dataType) for f in self.schema.fields}
+        stat_cols = _stats_fields(self.schema)
+        float_cols = {
+            f.name
+            for f in self.schema.fields
+            if isinstance(f.dataType, (T.FloatType, T.DoubleType))
+        }
         mins: dict = {}
         maxs: dict = {}
+        poisoned: set[str] = set()
         nulls: dict = {c: 0 for c in stat_cols}
         geoms = self._bloom_geoms()
         bloom_bits = {
             c: bytearray(geoms[c][0] >> 3) for c in self.bloom_columns
         }
-        h = hashlib.md5()
         n_rows = 0
         with tempfile.SpooledTemporaryFile(max_size=self.spill_threshold) as spool:
-            with gzip.GzipFile(fileobj=spool, mode="wb", mtime=0) as gz:
-                for row in iterator:
-                    d = dict(zip(fields, row))
-                    for c in norm_cols:  # nested Row -> dict (JSON object)
-                        v = d.get(c)
+            state = self._open(spool)
+            for batch in iterator:
+                if not batch.num_rows:
+                    continue
+                batch = batch.select(fields)
+                for c in stat_cols:
+                    col = batch.column(c)
+                    nulls[c] += col.null_count
+                    if c in poisoned or col.null_count == len(col):
+                        continue
+                    if c in float_cols and pc.any(pc.is_nan(col)).as_py():
+                        poisoned.add(c)
+                        continue
+                    if convs[c] is None:
+                        mm = pc.min_max(col)
+                        lo, hi = mm["min"].as_py(), mm["max"].as_py()
+                    else:
+                        # tz-aware timestamp: bounds in local wall time,
+                        # whose order a DST fall-back hour breaks, so
+                        # not the converted instant bounds
+                        vals = _py_column(col, convs[c])
+                        vals = [v for v in vals if v is not None]
+                        lo, hi = min(vals), max(vals)
+                    if c not in mins or lo < mins[c]:
+                        mins[c] = lo
+                    if c not in maxs or hi > maxs[c]:
+                        maxs[c] = hi
+                for c, bits in bloom_bits.items():
+                    col = batch.column(c)
+                    try:
+                        # bits are idempotent per value: hash each
+                        # DISTINCT value once per batch
+                        col = pc.unique(col)
+                    except pa.ArrowNotImplementedError:
+                        pass  # nested type: every row
+                    gm, gk = geoms[c]
+                    for v in _py_column(col, convs[c]):
                         if v is not None:
-                            d[c] = _norm_nested_rows(v)
-                    for c in stat_cols:  # shard-level min/max, nulls counted
-                        v = d.get(c)
-                        if v is None:
-                            nulls[c] += 1
-                            continue
-                        if c not in mins:
-                            mins[c] = maxs[c] = v
-                        elif v < mins[c]:
-                            mins[c] = v
-                        elif v > maxs[c]:
-                            maxs[c] = v
-                    for c, bits in bloom_bits.items():
-                        v = d.get(c)
-                        if v is not None:
-                            gm, gk = geoms[c]
                             for pos in _bloom_positions(v, gm, gk):
                                 bits[pos >> 3] |= 1 << (pos & 7)
-                    line = (
-                        json.dumps(
-                            d,
-                            sort_keys=True,
-                            default=_json_default,
-                            ensure_ascii=False,
-                        )
-                        + "\n"
-                    ).encode("utf-8")
-                    h.update(line)
-                    gz.write(line)
-                    n_rows += 1
-            digest = h.hexdigest()
-            shard = f"shard-{digest}.jsonl.gz"
+                self._add(state, batch, convs)
+                n_rows += batch.num_rows
+            digest = self._close(state, spool)
+            shard = f"shard-{digest}{self._EXT}"
             if n_rows:  # empty partitions contribute no shard
                 self._upload(spool, shard)
+        for c in poisoned:
+            mins.pop(c, None)
+            maxs.pop(c, None)
         return self._emit(shard, n_rows, digest, mins, maxs, nulls,
                           bloom_bits)
+
+    def _open(self, spool):
+        # content address = md5 of the UNCOMPRESSED lines; mtime=0 pins
+        # the gzip header
+        return hashlib.md5(), gzip.GzipFile(fileobj=spool, mode="wb", mtime=0)
+
+    def _add(self, state, batch, convs) -> None:
+        """One canonical JSON line per row; one digest update and one
+        gzip write per batch (zlib output is chunking-independent at a
+        fixed level, and md5 is a stream)."""
+        h, gz = state
+        fields = self.schema.fieldNames()
+        cols = [_py_column(batch.column(c), convs[c]) for c in fields]
+        blob = "".join(
+            _json_text(dict(zip(fields, tup))) + "\n" for tup in zip(*cols)
+        ).encode("utf-8")
+        h.update(blob)
+        gz.write(blob)
+
+    def _close(self, state, spool) -> str:
+        h, gz = state
+        gz.close()
+        return h.hexdigest()
 
     def _upload(self, spool, shard: str) -> None:
         """Stream the spooled COMPRESSED bytes to their final
@@ -1095,9 +1206,9 @@ class ManifestShardWriter(DataSourceWriter):
         self, shard: str, n_rows: int, digest: str,
         mins: dict, maxs: dict, nulls: dict, bloom_bits: dict,
     ) -> ShardCommit:
-        """Build the commit message — stats truncation and bloom
-        encoding shared by the row and Arrow write paths, so the two
-        can never diverge on manifest semantics."""
+        """Build the commit message: stats truncation and Bloom
+        encoding, shared by both codecs, so they can never diverge on
+        manifest semantics."""
         import base64
 
         geoms = self._bloom_geoms()
@@ -1147,27 +1258,7 @@ class ManifestShardWriter(DataSourceWriter):
         and the compact row-conservation guard against the NEW state."""
         if self.stage_commit_path:
             entries = sorted(
-                (
-                    {
-                        "file": m.shard,
-                        "n_rows": m.n_rows,
-                        "digest": m.digest,
-                        **({"stats": m.stats} if m.stats else {}),
-                        **(
-                            {"stats_trunc": m.trunc}
-                            if getattr(m, "trunc", None)
-                            else {}
-                        ),
-                        **({"blooms": m.blooms} if m.blooms else {}),
-                        **(
-                            {"nulls": m.nulls}
-                            if getattr(m, "nulls", None) is not None
-                            else {}
-                        ),
-                    }
-                    for m in messages
-                    if m.n_rows > 0
-                ),
+                (_shard_entry(m) for m in messages if m.n_rows > 0),
                 key=lambda s: s["file"],
             )
             sfs, spath = _fs_for(self.stage_commit_path)
@@ -1218,9 +1309,7 @@ class ManifestShardWriter(DataSourceWriter):
             for m in messages:
                 if m.n_rows > 0:  # identical partitions collapse (module doc)
                     by_file[m.shard] = {
-                        "file": m.shard,
-                        "n_rows": m.n_rows,
-                        "digest": m.digest,
+                        **_shard_entry(m),
                         # an APPEND that re-lands content the table
                         # already holds keeps the original added_seq
                         # (idempotent replay stays invisible to a
@@ -1231,26 +1320,6 @@ class ManifestShardWriter(DataSourceWriter):
                         if self.overwrite
                         else prev_entries.get(m.shard, {}).get(
                             "added_seq", seq
-                        ),
-                        **(
-                            {"stats": m.stats}
-                            if getattr(m, "stats", None)
-                            else {}
-                        ),
-                        **(
-                            {"stats_trunc": m.trunc}
-                            if getattr(m, "trunc", None)
-                            else {}
-                        ),
-                        **(
-                            {"blooms": m.blooms}
-                            if getattr(m, "blooms", None)
-                            else {}
-                        ),
-                        **(
-                            {"nulls": m.nulls}
-                            if getattr(m, "nulls", None) is not None
-                            else {}
                         ),
                     }
             if self.compact:
@@ -1355,193 +1424,7 @@ class ManifestShardWriter(DataSourceWriter):
                 pass  # best effort; unreferenced shards are vacuumable
 
 
-def _arrow_write_ok(schema: StructType) -> bool:
-    """May the Arrow write path serve this schema byte-identically to
-    the row path? Leaf allowlist = the types whose ``to_pylist()``
-    values are EXACTLY what the row-path worker conversion delivers
-    (so ``json.dumps`` emits the same bytes and the content address is
-    stable across paths). Excluded, falling back to the row writer:
-    maps anywhere (``to_pylist`` yields tuple-lists, not dicts),
-    NESTED tz-aware timestamps (their per-value local-zone conversion
-    is only special-cased at the top level — the mirror of the READ
-    plan's exclusions), and anything exotic (UDT/Variant/char)."""
-    from pyspark.sql import types as T
-
-    ntz = getattr(T, "TimestampNTZType", None)
-    # EXACT types, not isinstance: a StringType SUBCLASS (char/varchar/
-    # collated variants) may convert differently — unknown means row path
-    leaves = {
-        T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-        T.FloatType, T.DoubleType, T.BooleanType, T.StringType,
-        T.BinaryType, T.DateType, T.DecimalType,
-    } | ({ntz} if ntz else set())
-
-    def ok(dt, top: bool) -> bool:
-        if type(dt) is T.TimestampType:
-            return top
-        if type(dt) is T.ArrayType:
-            return ok(dt.elementType, False)
-        if type(dt) is T.StructType:
-            return all(ok(f.dataType, False) for f in dt.fields)
-        return type(dt) in leaves
-
-    try:
-        return all(ok(f.dataType, True) for f in schema.fields)
-    except Exception:
-        return False
-
-
-class ManifestArrowShardWriter(ManifestShardWriter, DataSourceArrowWriter):
-    """Arrow-vectorized batch write path (round-10 verdict item 2):
-    the engine hands ``write()`` ``pyarrow.RecordBatch``es directly —
-    no per-row pickling or Row construction in the worker conversion
-    layer (the write-side twin of the round-10 Arrow READ path).
-
-    What stays per-row Python is only what the FORMAT requires:
-    ``json.dumps`` per line (the shard encoding is canonical JSON
-    lines) and Bloom bit-setting per value. Everything else is
-    vectorized: null counts come from Arrow validity bitmaps, min/max
-    from the C++ ``min_max`` kernel, and tz-aware timestamp columns
-    convert per COLUMN (the two min/max scalars convert after the
-    kernel — ``astimezone`` is monotonic, so instant order equals
-    converted order).
-
-    BYTE-IDENTITY CONTRACT: shard content — and therefore the content
-    address and every idempotent-replay guarantee — is identical to
-    the row path's. ``to_pylist()`` values match the row-path worker
-    conversion for every type :func:`_arrow_write_ok` admits;
-    tz-aware timestamps are normalized with the exact same call the
-    row conversion uses (``v.astimezone().replace(tzinfo=None)`` —
-    pyspark's ArrowTableToRowsConversion). Schemas outside the
-    allowlist get the row writer (the DataSource picks per schema;
-    ``option("arrow_write", "false")`` forces the row path).
-
-    Float stats caveat: a float column CONTAINING NaN records no
-    min/max for that shard (NaN ordering differs between Python
-    comparisons and Arrow kernels, and a NaN bound would poison
-    lexicographic admission) — conservative, the shard is always
-    admitted on that column."""
-
-    def write(self, iterator) -> ShardCommit:  # Iterator[pa.RecordBatch]
-        import tempfile
-
-        from pyarrow import compute as pc
-        from pyspark.sql import types as T
-
-        fields = self.schema.fieldNames()
-        stat_cols = set(_stats_fields(self.schema))
-        ts_cols = {
-            f.name
-            for f in self.schema.fields
-            if type(f.dataType) is T.TimestampType
-        }
-        float_cols = {
-            f.name
-            for f in self.schema.fields
-            if type(f.dataType) in (T.FloatType, T.DoubleType)
-        }
-        mins: dict = {}
-        maxs: dict = {}
-        poisoned: set[str] = set()  # float cols with NaN: no min/max
-        nulls: dict = {c: 0 for c in stat_cols}
-        geoms = self._bloom_geoms()
-        bloom_bits = {
-            c: bytearray(geoms[c][0] >> 3) for c in self.bloom_columns
-        }
-        h = hashlib.md5()
-        n_rows = 0
-        with tempfile.SpooledTemporaryFile(
-            max_size=self.spill_threshold
-        ) as spool:
-            with gzip.GzipFile(fileobj=spool, mode="wb", mtime=0) as gz:
-                for batch in iterator:
-                    if batch.num_rows == 0:
-                        continue
-                    cols: list[list] = []
-                    for name in fields:
-                        col = batch.column(
-                            batch.schema.get_field_index(name)
-                        )
-                        vals = col.to_pylist()
-                        if name in ts_cols:
-                            # the EXACT row-path conversion (pyspark
-                            # ArrowTableToRowsConversion), applied per
-                            # column instead of per row
-                            vals = [
-                                None
-                                if v is None
-                                else v.astimezone().replace(tzinfo=None)
-                                for v in vals
-                            ]
-                        cols.append(vals)
-                        if name in stat_cols:
-                            nulls[name] += col.null_count
-                            if col.null_count == len(vals):
-                                continue
-                            if name in float_cols and pc.any(
-                                pc.is_nan(col)
-                            ).as_py():
-                                poisoned.add(name)
-                                continue
-                            mm = pc.min_max(col)
-                            bmn = mm["min"].as_py()
-                            bmx = mm["max"].as_py()
-                            if name in ts_cols:
-                                bmn = bmn.astimezone().replace(tzinfo=None)
-                                bmx = bmx.astimezone().replace(tzinfo=None)
-                            if name not in mins:
-                                mins[name], maxs[name] = bmn, bmx
-                            else:
-                                if bmn < mins[name]:
-                                    mins[name] = bmn
-                                if bmx > maxs[name]:
-                                    maxs[name] = bmx
-                    for c, bits in bloom_bits.items():
-                        vals = cols[fields.index(c)]
-                        try:
-                            # bloom bit-setting is idempotent per value:
-                            # hash each DISTINCT value once per batch
-                            # (identical bits, md5 calls drop from
-                            # O(rows) to O(ndv) on repetitive columns)
-                            vals = set(vals)
-                        except TypeError:
-                            pass  # unhashable (array column): every row
-                        gm, gk = geoms[c]
-                        for v in vals:
-                            if v is not None:
-                                for pos in _bloom_positions(v, gm, gk):
-                                    bits[pos >> 3] |= 1 << (pos & 7)
-                    # one digest update + one gzip write per BATCH (the
-                    # joined bytes are identical to per-line writes:
-                    # zlib output is chunking-independent at a fixed
-                    # level, and md5 is a stream)
-                    blob = (
-                        "\n".join(
-                            json.dumps(
-                                dict(zip(fields, tup)),
-                                sort_keys=True,
-                                default=_json_default,
-                                ensure_ascii=False,
-                            )
-                            for tup in zip(*cols)
-                        )
-                        + "\n"
-                    ).encode("utf-8")
-                    h.update(blob)
-                    gz.write(blob)
-                    n_rows += batch.num_rows
-            digest = h.hexdigest()
-            shard = f"shard-{digest}.jsonl.gz"
-            if n_rows:
-                self._upload(spool, shard)
-        for c in poisoned:
-            mins.pop(c, None)
-            maxs.pop(c, None)
-        return self._emit(shard, n_rows, digest, mins, maxs, nulls,
-                          bloom_bits)
-
-
-class ManifestParquetShardWriter(ManifestShardWriter, DataSourceArrowWriter):
+class ManifestParquetShardWriter(ManifestShardWriter):
     """COLUMNAR shard codec (round 12, verdict item 1):
     ``option("shard_format", "parquet")`` writes each task's partition
     as ONE parquet file — ``shards/shard-<md5-of-file-bytes>.parquet``
@@ -1568,15 +1451,11 @@ class ManifestParquetShardWriter(ManifestShardWriter, DataSourceArrowWriter):
     under a new name, which the manifest treats as a plain append —
     correct, just not deduped).
 
-    Stats/bloom parity: min/max come from Arrow ``min_max`` kernels
-    and null counts from validity bitmaps, converted into the SAME
-    stats value domain the JSON codec records (naive-local ISO
-    timestamps via ``astimezone().replace(tzinfo=None)`` — pyspark's
-    own Arrow-to-row conversion), so shard pruning, ``table_stats``,
-    and DML scoping are codec-blind. Float columns containing NaN
-    record no min/max (same conservative rule as the Arrow JSON
-    writer). Actions adding parquet shards stamp ``min_reader`` 3 — a
-    protocol-2 reader would JSON-parse the bytes and misread.
+    Stats/Bloom parity: both codecs share :meth:`write`, so stats,
+    null counts, the NaN rule and Bloom bits are recorded in one value
+    domain, and shard pruning, ``table_stats`` and DML scoping are
+    codec-blind. Actions adding parquet shards stamp ``min_reader`` 3
+    — a protocol-2 reader would JSON-parse the bytes and misread.
 
     Memory: the task's partition is held as ONE Arrow table before
     writing (columnar, dictionary-encodable — not the decoded-JSON
@@ -1602,98 +1481,31 @@ class ManifestParquetShardWriter(ManifestShardWriter, DataSourceArrowWriter):
                 f"Arrow mapping: {e}); use the default jsonl codec"
             ) from e
 
-    def write(self, iterator) -> ShardCommit:  # Iterator[pa.RecordBatch]
-        import tempfile
+    _EXT = ".parquet"
 
+    def _open(self, spool) -> list:
+        return []
+
+    def _add(self, batches, batch, convs) -> None:
+        batches.append(batch)
+
+    def _close(self, batches, spool) -> str:
+        """Combine, cast to the canonical schema, write once, and name
+        the shard by the md5 of the FILE bytes."""
         import pyarrow as pa
-        from pyarrow import compute as pc
         from pyarrow import parquet as pq
-        from pyspark.sql import types as T
 
-        target = self._target
-        fields = self.schema.fieldNames()
-        stat_cols = set(_stats_fields(self.schema))
-        ts_cols = {
-            f.name
-            for f in self.schema.fields
-            if type(f.dataType) is T.TimestampType
-        }
-        float_cols = {
-            f.name
-            for f in self.schema.fields
-            if type(f.dataType) in (T.FloatType, T.DoubleType)
-        }
-        batches = [b for b in iterator if b.num_rows]
-        n_rows = sum(b.num_rows for b in batches)
-        geoms = self._bloom_geoms()
-        bloom_bits = {
-            c: bytearray(geoms[c][0] >> 3) for c in self.bloom_columns
-        }
-        nulls: dict = {c: 0 for c in stat_cols}
-        mins: dict = {}
-        maxs: dict = {}
-        if n_rows == 0:
-            return self._emit(
-                "", 0, hashlib.md5(b"").hexdigest(), mins, maxs, nulls,
-                bloom_bits,
-            )
-        tbl = (
-            pa.Table.from_batches(batches)
-            .select(fields)
-            .cast(target)
-            .combine_chunks()
-        )
-
-        def _local(v):
-            # the row-path value conversion for tz-aware timestamps
-            # (naive local wall time) — keeps the stats/bloom domain
-            # identical across codecs
-            return v.astimezone().replace(tzinfo=None)
-
-        for name in stat_cols:
-            col = tbl.column(name)
-            nulls[name] = col.null_count
-            if col.null_count == len(col):
-                continue
-            if name in float_cols and pc.any(pc.is_nan(col)).as_py():
-                continue  # NaN poisons ordering: no min/max (admit-all)
-            mm = pc.min_max(col)
-            bmn, bmx = mm["min"].as_py(), mm["max"].as_py()
-            if name in ts_cols:
-                bmn, bmx = _local(bmn), _local(bmx)
-            mins[name], maxs[name] = bmn, bmx
-        for c, bits in bloom_bits.items():
-            col = tbl.column(c)
-            try:
-                vals = pc.unique(col).to_pylist()
-            except pa.ArrowNotImplementedError:
-                vals = col.to_pylist()  # nested type: per row
-            gm, gk = geoms[c]
-            for v in vals:
-                if v is not None:
-                    if c in ts_cols:
-                        v = _local(v)
-                    for pos in _bloom_positions(v, gm, gk):
-                        bits[pos >> 3] |= 1 << (pos & 7)
-        with tempfile.SpooledTemporaryFile(
-            max_size=self.spill_threshold
-        ) as spool:
-            pq.write_table(tbl, spool, **self._PQ_SETTINGS)
+        h = hashlib.md5()
+        if batches:
+            tbl = pa.Table.from_batches(batches).cast(self._target)
+            pq.write_table(tbl.combine_chunks(), spool, **self._PQ_SETTINGS)
             spool.seek(0)
-            h = hashlib.md5()
-            while True:
-                chunk = spool.read(1 << 20)
-                if not chunk:
-                    break
+            while chunk := spool.read(1 << 20):
                 h.update(chunk)
-            digest = h.hexdigest()
-            shard = f"shard-{digest}.parquet"
-            self._upload(spool, shard)
-        return self._emit(shard, n_rows, digest, mins, maxs, nulls,
-                          bloom_bits)
+        return h.hexdigest()
 
 
-class ManifestShardStreamWriter(DataSourceStreamWriter):
+class ManifestShardStreamWriter(DataSourceStreamArrowWriter):
     """Streaming sink twin: one committed EPOCH per micro-batch.
 
     ``commit(messages, batchId)`` records the batch's shards under
@@ -1706,13 +1518,16 @@ class ManifestShardStreamWriter(DataSourceStreamWriter):
     same bytes and the manifest converges to the same state. Commits
     go through the same optimistic claim loop as the batch writer, so
     a streaming epoch racing a concurrent batch append rebases and
-    both land."""
+    both land.
 
-    #: the per-task write engine; the Arrow stream twin overrides it
-    _INNER = ManifestShardWriter
+    Each task's write is the codec's batch writer (``writer``: the
+    jsonl :class:`ManifestShardWriter` unless the DataSource resolves
+    parquet), so stream shards are byte-identical to batch shards."""
 
-    def __init__(self, options: dict, schema: StructType):
-        self._inner = self._INNER(options, schema, overwrite=False)
+    def __init__(
+        self, options: dict, schema: StructType, writer=ManifestShardWriter
+    ):
+        self._inner = writer(options, schema, overwrite=False)
         self.path = self._inner.path
 
     def write(self, iterator) -> ShardCommit:
@@ -1729,34 +1544,12 @@ class ManifestShardStreamWriter(DataSourceStreamWriter):
             for m in messages:
                 if m is not None and m.n_rows > 0:
                     by_file[m.shard] = {
-                        "file": m.shard,
-                        "n_rows": m.n_rows,
-                        "digest": m.digest,
+                        **_shard_entry(m),
                         # a replayed batchId re-landing identical
                         # content keeps its original added_seq — a
                         # tailing stream reader sees the epoch exactly
                         # once across replays
                         "added_seq": prev_seq.get(m.shard, seq),
-                        **(
-                            {"stats": m.stats}
-                            if getattr(m, "stats", None)
-                            else {}
-                        ),
-                        **(
-                            {"stats_trunc": m.trunc}
-                            if getattr(m, "trunc", None)
-                            else {}
-                        ),
-                        **(
-                            {"blooms": m.blooms}
-                            if getattr(m, "blooms", None)
-                            else {}
-                        ),
-                        **(
-                            {"nulls": m.nulls}
-                            if getattr(m, "nulls", None) is not None
-                            else {}
-                        ),
                     }
             # a DETERMINISTIC replay (same batchId, same content) is a
             # full no-op: the epoch ledger already records exactly
@@ -1808,28 +1601,6 @@ class ManifestShardStreamWriter(DataSourceStreamWriter):
 
     def abort(self, messages, batchId: int) -> None:
         self._inner.abort([m for m in messages if m is not None])
-
-
-class ManifestShardStreamArrowWriter(
-    ManifestShardStreamWriter, DataSourceStreamArrowWriter
-):
-    """Streaming twin of :class:`ManifestArrowShardWriter`: each
-    micro-batch task receives ``RecordBatch``es (the engine dispatches
-    on ``isinstance(..., DataSourceStreamArrowWriter)``) and the epoch
-    commit logic is inherited unchanged — same shard bytes, same
-    manifest semantics, no per-row pickling."""
-
-    _INNER = ManifestArrowShardWriter
-
-
-class ManifestShardStreamParquetWriter(
-    ManifestShardStreamWriter, DataSourceStreamArrowWriter
-):
-    """Streaming twin of :class:`ManifestParquetShardWriter`: each
-    micro-batch's epochs land as parquet shards — same epoch-replay
-    exactly-once contract, columnar payload."""
-
-    _INNER = ManifestParquetShardWriter
 
 
 @dataclass
@@ -2781,14 +2552,6 @@ class ManifestShardDataSource(DataSource):
             return ManifestShardPushdownReader(schema, self.options)
         return ManifestShardReader(schema, self.options)
 
-    def _arrow_write(self, schema: StructType) -> bool:
-        # arrow_write=false forces the row path (debug/pinning knob);
-        # otherwise the Arrow path serves every schema it can serve
-        # byte-identically, and the rest falls back per schema
-        return str(
-            self.options.get("arrow_write", "true")
-        ).lower() in ("true", "1", "yes") and _arrow_write_ok(schema)
-
     _DEFAULT_CODEC = "jsonl"
 
     def _codec(self) -> str:
@@ -2816,21 +2579,22 @@ class ManifestShardDataSource(DataSource):
                 return _table_codec(man)
         return self._DEFAULT_CODEC
 
-    def writer(self, schema: StructType, overwrite: bool) -> DataSourceWriter:
+    def _shard_writer(self) -> type:
+        """The writer class of the resolved codec: one per codec, for
+        every schema."""
         if self._codec() == "parquet":
-            return ManifestParquetShardWriter(self.options, schema, overwrite)
-        if self._arrow_write(schema):
-            return ManifestArrowShardWriter(self.options, schema, overwrite)
-        return ManifestShardWriter(self.options, schema, overwrite)
+            return ManifestParquetShardWriter
+        return ManifestShardWriter
+
+    def writer(self, schema: StructType, overwrite: bool) -> DataSourceWriter:
+        return self._shard_writer()(self.options, schema, overwrite)
 
     def streamWriter(
         self, schema: StructType, overwrite: bool
     ) -> DataSourceStreamWriter:
-        if self._codec() == "parquet":
-            return ManifestShardStreamParquetWriter(self.options, schema)
-        if self._arrow_write(schema):
-            return ManifestShardStreamArrowWriter(self.options, schema)
-        return ManifestShardStreamWriter(self.options, schema)
+        return ManifestShardStreamWriter(
+            self.options, schema, self._shard_writer()
+        )
 
     def streamReader(self, schema: StructType) -> DataSourceStreamReader:
         return ManifestShardStreamReader(schema, self.options)

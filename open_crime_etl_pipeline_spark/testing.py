@@ -85,21 +85,3 @@ def compare_frames(name: str, spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame)
         sample = neq.head(5).to_string() if neq is not None and not neq.empty else "(shape diff)"
         return DiffResult(name, False, f"value mismatch:\n{sample}")
     return DiffResult(name, True)
-
-
-def run_differential(spark, sf_dir: str, names: list[str] | None = None) -> list[DiffResult]:
-    """Run every registered query with an oracle and compare."""
-    from .queries import all_specs
-
-    con = duckdb_connection(sf_dir)
-    results = []
-    for spec_name, spec in sorted(all_specs().items()):
-        if names is not None and spec_name not in names:
-            continue
-        if spec.oracle is None:
-            continue
-        spark_pdf = spec.fn(spark, sf_dir).toPandas()
-        oracle_pdf = con.execute(spec.oracle).fetchdf()
-        results.append(compare_frames(spec_name, spark_pdf, oracle_pdf))
-    con.close()
-    return results

@@ -24,6 +24,23 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+@pytest.fixture(scope="session")
+def arrow_batches():
+    """``arrow_batches(schema, rows)`` turns tuple ``rows`` into what a
+    Spark write task hands a ``DataSourceArrowWriter``: an iterator
+    over one ``pyarrow.RecordBatch`` typed by ``to_arrow_schema``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    def build(schema, rows):
+        names = schema.fieldNames()
+        return iter([pa.RecordBatch.from_pylist(
+            [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
+        )])
+
+    return build
+
+
 @pytest.fixture
 def jobs_started_by(spark):
     """``jobs_started_by(fn)`` calls ``fn()`` under a fresh job group and

@@ -19,11 +19,9 @@ from open_crime_etl_pipeline_spark.incremental import (
     read_watermark,
     reconcile_replicas,
 )
-from open_crime_etl_pipeline_spark.incremental.watermark import (
-    FULL_LOAD_EPOCH,
-    month_windows,
-)
+from open_crime_etl_pipeline_spark.incremental.watermark import FULL_LOAD_EPOCH
 from open_crime_etl_pipeline_spark.schemas import LOGS_SCHEMA
+from open_crime_etl_pipeline_spark.sources.socrata import month_windows
 
 
 def test_watermark_null_on_empty(spark):

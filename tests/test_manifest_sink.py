@@ -86,7 +86,7 @@ def test_overwrite_snapshot_isolation_and_vacuum(registered, tmp_path):
     assert MS.read_manifest(spark, p, schema="id long, s string").count() == 20
 
 
-def test_abort_preserves_previous_version(registered, tmp_path):
+def test_abort_preserves_previous_version(registered, tmp_path, arrow_batches):
     spark, p = registered, str(tmp_path / "t5")
     _write(_df(spark, 10).coalesce(1), p)
     man_before = MS.read_manifest_dict(p)
@@ -94,7 +94,7 @@ def test_abort_preserves_previous_version(registered, tmp_path):
     # failure); the manifest must stay at the committed version and the
     # aborted shard must be cleaned up
     w = MS.ManifestShardWriter({"path": p}, _df(spark, 1).schema, overwrite=True)
-    msg = w.write(iter([(99, "zz")]))
+    msg = w.write(arrow_batches(w.schema, [(99, "zz")]))
     assert msg.n_rows == 1
     assert os.path.exists(os.path.join(p, "shards", msg.shard))
     w.abort([msg])
@@ -107,20 +107,22 @@ def test_abort_preserves_previous_version(registered, tmp_path):
     assert os.path.exists(os.path.join(p, "shards", live["file"]))
 
 
-def test_gzip_shards_are_byte_identical_across_retries(registered, tmp_path):
+def test_gzip_shards_are_byte_identical_across_retries(
+    registered, tmp_path, arrow_batches
+):
     spark, p = registered, str(tmp_path / "t6")
     w = MS.ManifestShardWriter({"path": p}, _df(spark, 1).schema, overwrite=True)
-    m1 = w.write(iter([(1, "x"), (2, "y")]))
+    m1 = w.write(arrow_batches(w.schema, [(1, "x"), (2, "y")]))
     with open(os.path.join(p, "shards", m1.shard), "rb") as fh:
         b1 = fh.read()
-    m2 = w.write(iter([(1, "x"), (2, "y")]))  # the retry
+    m2 = w.write(arrow_batches(w.schema, [(1, "x"), (2, "y")]))  # the retry
     with open(os.path.join(p, "shards", m2.shard), "rb") as fh:
         b2 = fh.read()
     assert m1.shard == m2.shard and b1 == b2  # mtime=0 gzip: bit-stable
 
 
 def test_write_spills_large_partitions_instead_of_buffering(
-    registered, tmp_path, monkeypatch
+    registered, tmp_path, monkeypatch, arrow_batches
 ):
     """A partition larger than spill_threshold_bytes must stream
     through a ROLLED-OVER temp file (peak task memory = the threshold,
@@ -148,7 +150,7 @@ def test_write_spills_large_partitions_instead_of_buffering(
         _df(spark, 1).schema,
         overwrite=True,
     )
-    msg = w.write(iter(rows))
+    msg = w.write(arrow_batches(w.schema, rows))
     assert len(spools) == 1 and spools[0]._rolled  # it actually spilled
     # same bytes/name the buffered implementation would have produced
     content = b"".join(
@@ -165,12 +167,12 @@ def test_write_spills_large_partitions_instead_of_buffering(
     # idempotence contract; the gzip OS header byte differs from the
     # one-shot gzip.compress API, which is irrelevant — names hash the
     # UNCOMPRESSED bytes and replays share this code path)
-    msg2 = w.write(iter(rows))
+    msg2 = w.write(arrow_batches(w.schema, rows))
     with open(os.path.join(p, "shards", msg2.shard), "rb") as fh:
         assert fh.read() == b1 and msg2.shard == msg.shard
     # a small partition stays in memory (no rollover)
     spools.clear()
-    small = w.write(iter([(1, "x")]))
+    small = w.write(arrow_batches(w.schema, [(1, "x")]))
     assert len(spools) == 1 and not spools[0]._rolled
     assert small.n_rows == 1
 
@@ -241,17 +243,20 @@ def test_streaming_sink_epochs_and_replay(registered, tmp_path):
     }
 
 
-def test_streaming_epoch_replacement_on_batch_replay(registered, tmp_path):
+def test_streaming_epoch_replacement_on_batch_replay(
+    registered, tmp_path, arrow_batches
+):
     """A replayed batchId REPLACES its epoch (at-least-once delivery
     cannot double-count), even if the replay produced different
     partitioning; superseded shards become vacuumable garbage."""
     spark, p = registered, str(tmp_path / "s2")
-    w = MS.ManifestShardStreamWriter({"path": p}, _df(spark, 1).schema)
-    m_a = w.write(iter([(1, "x"), (2, "y")]))
+    schema = _df(spark, 1).schema
+    w = MS.ManifestShardStreamWriter({"path": p}, schema)
+    m_a = w.write(arrow_batches(schema, [(1, "x"), (2, "y")]))
     w.commit([m_a], batchId=0)
     assert MS.read_manifest_dict(p)["n_rows"] == 2
     # replay of batch 0 with different content (non-deterministic batch)
-    m_b = w.write(iter([(1, "x"), (2, "y"), (3, "z")]))
+    m_b = w.write(arrow_batches(schema, [(1, "x"), (2, "y"), (3, "z")]))
     w.commit([m_b], batchId=0)
     man = MS.read_manifest_dict(p)
     assert man["n_rows"] == 3  # replaced, not 5
@@ -260,11 +265,14 @@ def test_streaming_epoch_replacement_on_batch_replay(registered, tmp_path):
     assert MS.vacuum_unreferenced(p) == [m_a.shard]
 
 
-def test_streaming_commit_preserves_batch_written_shards(registered, tmp_path):
+def test_streaming_commit_preserves_batch_written_shards(
+    registered, tmp_path, arrow_batches
+):
     spark, p = registered, str(tmp_path / "s3")
     _write(_df(spark, 10, tag="batch").coalesce(1), p)  # batch write first
-    w = MS.ManifestShardStreamWriter({"path": p}, _df(spark, 1).schema)
-    m = w.write(iter([(500, "stream0")]))
+    schema = _df(spark, 1).schema
+    w = MS.ManifestShardStreamWriter({"path": p}, schema)
+    m = w.write(arrow_batches(schema, [(500, "stream0")]))
     w.commit([m], batchId=0)
     man = MS.read_manifest_dict(p)
     assert man["n_rows"] == 11  # batch shards survive streaming commits
@@ -291,30 +299,33 @@ def _drain_stream(spark, p, ckpt, schema="id long, s string"):
     return sorted(got)
 
 
-def test_stream_reader_roundtrip_and_exactly_once_tail(registered, tmp_path):
+def test_stream_reader_roundtrip_and_exactly_once_tail(
+    registered, tmp_path, arrow_batches
+):
     """The lakehouse loop (round-8 verdict item 5): write-stream ->
     manifest -> read-stream. A replayed epoch re-landing identical
     content keeps its original added_seq, so a tailing reader sees it
     EXACTLY ONCE; later commits are delivered incrementally."""
     spark, p = registered, str(tmp_path / "tail1")
     ckpt = str(tmp_path / "tail1_ck")
-    w = MS.ManifestShardStreamWriter({"path": p}, _df(spark, 1).schema)
+    schema = _df(spark, 1).schema
+    w = MS.ManifestShardStreamWriter({"path": p}, schema)
 
     # epoch 0 committed, then drained
-    m0 = w.write(iter([(1, "x"), (2, "y")]))
+    m0 = w.write(arrow_batches(schema, [(1, "x"), (2, "y")]))
     w.commit([m0], batchId=0)
     assert _drain_stream(spark, p, ckpt) == [(1, "x"), (2, "y")]
 
     # REPLAYED epoch 0, identical content: a full manifest no-op (the
     # epoch ledger already records exactly these shards), so the
     # resumed tail sees NOTHING
-    m0r = w.write(iter([(1, "x"), (2, "y")]))
+    m0r = w.write(arrow_batches(schema, [(1, "x"), (2, "y")]))
     w.commit([m0r], batchId=0)
     assert MS.read_manifest_dict(p)["commit_seq"] == 1
     assert _drain_stream(spark, p, ckpt) == []
 
     # a genuinely new epoch is delivered incrementally (only its rows)
-    m1 = w.write(iter([(3, "z")]))
+    m1 = w.write(arrow_batches(schema, [(3, "z")]))
     w.commit([m1], batchId=1)
     assert _drain_stream(spark, p, ckpt) == [(3, "z")]
 
@@ -382,19 +393,22 @@ def test_stream_reader_empty_table_delivers_nothing(registered, tmp_path):
     assert _drain_stream(spark, p, str(tmp_path / "empty_ck")) == []
 
 
-def test_batch_append_preserves_streaming_epochs(registered, tmp_path):
+def test_batch_append_preserves_streaming_epochs(
+    registered, tmp_path, arrow_batches
+):
     """A batch append between streaming commits must not erase epoch
     attribution — otherwise a later replayed batchId with CHANGED
     content would append instead of replacing its epoch."""
     spark, p = registered, str(tmp_path / "s4")
-    w = MS.ManifestShardStreamWriter({"path": p}, _df(spark, 1).schema)
-    m0 = w.write(iter([(1, "x")]))
+    schema = _df(spark, 1).schema
+    w = MS.ManifestShardStreamWriter({"path": p}, schema)
+    m0 = w.write(arrow_batches(schema, [(1, "x")]))
     w.commit([m0], batchId=0)
     _write(_df(spark, 5, tag="mid").coalesce(1), p, mode="append")
     man = MS.read_manifest_dict(p)
     assert man["n_rows"] == 6 and "epochs" in man  # attribution survives
     # replay batch 0 with different content: epoch replaced, not added
-    m0b = w.write(iter([(1, "x"), (2, "y")]))
+    m0b = w.write(arrow_batches(schema, [(1, "x"), (2, "y")]))
     w.commit([m0b], batchId=0)
     man2 = MS.read_manifest_dict(p)
     assert man2["n_rows"] == 7  # 5 batch + 2 replaced-epoch (not 8)
@@ -566,29 +580,71 @@ def test_bloom_rewrite_geometry_independent_max(registered, tmp_path):
 
 # -- Arrow write path ------------------------------------------------------
 
-def _land(spark, df, path, arrow, **opts):
-    w = (
-        df.write.format(MS.FORMAT_NAME)
-        .option("path", path)
-        .option("arrow_write", "true" if arrow else "false")
-    )
+def _land(spark, df, path, **opts):
+    w = df.write.format(MS.FORMAT_NAME).option("path", path)
     for k, v in opts.items():
         w = w.option(k, v)
     w.mode("append").save()
     return MS.read_manifest_dict(path)
 
 
+def _reference_entry(rows, stat_cols, str_cols, bloom_cols):
+    """The manifest entry a jsonl shard of ``rows`` (collected Rows, in
+    write order) must carry, computed without the writer: canonical
+    JSON lines, Python min/max over non-null values, null counts and
+    Bloom bits at the default geometry."""
+    import base64
+    import hashlib
+
+    lines = "".join(
+        json.dumps(r.asDict(recursive=True), sort_keys=True,
+                   default=MS._json_default, ensure_ascii=False) + "\n"
+        for r in rows
+    ).encode("utf-8")
+    digest = hashlib.md5(lines).hexdigest()
+    stats, trunc, nulls, blooms = {}, [], {}, {}
+    for c in stat_cols:
+        vals = [r[c] for r in rows if r[c] is not None]
+        nulls[c] = len(rows) - len(vals)
+        if vals:
+            lo, hi = MS._stat_val(min(vals)), MS._stat_val(max(vals))
+            if c in str_cols:
+                lo, hi, t = MS._truncate_string_bounds(
+                    lo, hi, MS._STATS_TRUNC_LEN
+                )
+                if t:
+                    trunc.append(c)
+            stats[c] = [lo, hi]
+    for c in bloom_cols:
+        bits = bytearray(MS._BLOOM_M >> 3)
+        for r in rows:
+            if r[c] is not None:
+                for pos in MS._bloom_positions(r[c]):
+                    bits[pos >> 3] |= 1 << (pos & 7)
+        blooms[c] = {"m": MS._BLOOM_M, "k": MS._BLOOM_K,
+                     "bits": base64.b64encode(bytes(bits)).decode("ascii")}
+    entry = {"file": f"shard-{digest}.jsonl.gz", "n_rows": len(rows),
+             "digest": digest, "added_seq": 1, "stats": stats,
+             "nulls": nulls, "blooms": blooms}
+    if trunc:
+        entry["stats_trunc"] = trunc
+    return entry, lines
+
+
 def test_arrow_write_byte_identical_to_row_path(registered, tmp_path):
-    """THE content-address contract across write engines: the Arrow
-    path must produce byte-identical shard FILES (same names, same
-    bytes) and identical manifest entries (stats, truncation markers,
-    blooms, null counts) as the row path, over every admitted type —
-    including tz-aware timestamps (converted with the exact row-path
-    call), decimals, binary, arrays, structs, nulls, and long strings
-    (truncation applies identically)."""
+    """THE content-address contract of the one Arrow writer: each shard
+    holds exactly the canonical JSON lines of its partition's rows as
+    pyspark's row conversion delivers them
+    (``json.dumps(r.asDict(recursive=True), ...)``, what the retired
+    row writer wrote), and its manifest entry (stats, truncation
+    markers, blooms, null counts, added_seq) equals a reference built
+    from those rows — over tz-aware and NTZ timestamps, decimals,
+    binary, arrays, structs, nulls, and long strings (truncation)."""
     import datetime
     import decimal
-    import hashlib
+    import gzip
+
+    from pyspark.sql.datasource import DataSourceArrowWriter
 
     spark = registered
     df = spark.createDataFrame(
@@ -608,68 +664,221 @@ def test_arrow_write_byte_identical_to_row_path(registered, tmp_path):
         "tsn timestamp_ntz, dec decimal(10,2), bin binary, "
         "arr array<int>, st struct<a:long,b:string>, bl boolean",
     )
-    pa_dir, pr_dir = str(tmp_path / "aw"), str(tmp_path / "rw")
-    man_a = _land(spark, df.repartition(3, "i"), pa_dir, True,
-                  bloom_columns="i,s")
-    man_r = _land(spark, df.repartition(3, "i"), pr_dir, False,
-                  bloom_columns="i,s")
+    parts = df.repartition(3, "i").sortWithinPartitions("i")
+    pa_dir = str(tmp_path / "aw")
+    man_a = _land(spark, parts, pa_dir, bloom_columns="i,s")
     ea = {s["file"]: s for s in man_a["shards"]}
-    er = {s["file"]: s for s in man_r["shards"]}
+    ref = [
+        _reference_entry(rows, MS._stats_fields(df.schema), ["s"], ["i", "s"])
+        for rows in parts.rdd.glom().collect()
+        if rows
+    ]
+    er = {e["file"]: (e, lines) for e, lines in ref}
     assert sorted(ea) == sorted(er)  # same content addresses
     for f in ea:
-        da = hashlib.md5(
-            open(os.path.join(pa_dir, "shards", f), "rb").read()
-        ).hexdigest()
-        dr = hashlib.md5(
-            open(os.path.join(pr_dir, "shards", f), "rb").read()
-        ).hexdigest()
-        assert da == dr  # same bytes on disk
-        assert ea[f] == er[f]  # same stats/trunc/blooms/nulls/added_seq
-    # and the engine actually USED the arrow writer for this schema
+        with open(os.path.join(pa_dir, "shards", f), "rb") as fh:
+            assert gzip.decompress(fh.read()) == er[f][1]  # same bytes
+        assert ea[f] == er[f][0]  # same stats/trunc/blooms/nulls/added_seq
+    # and the engine used the one Arrow writer for this schema
     ds = MS.ManifestShardDataSource(options={"path": pa_dir})
-    assert isinstance(
-        ds.writer(df.schema, False), MS.ManifestArrowShardWriter
+    w = ds.writer(df.schema, False)
+    assert type(w) is MS.ManifestShardWriter
+    assert isinstance(w, DataSourceArrowWriter)
+
+
+def test_shard_names_pinned_for_maps_and_nested_timestamps(
+    registered, tmp_path
+):
+    """Maps, ``array<timestamp>``, ``struct<timestamp, map<int,binary>>``,
+    ``array<array<binary>>`` and ``array<struct<..timestamp>>`` go
+    through the one Arrow writer and land the jsonl shard (name, stats,
+    nulls, blooms) the retired row writer produced for the same
+    batches, pinned as literals, in two local time zones (tz-aware
+    values are written as local wall time)."""
+    import datetime as dt
+    import hashlib
+    import time
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import (
+        ArrayType, BinaryType, DoubleType, IntegerType, LongType, MapType,
+        StringType, StructField, StructType, TimestampType,
     )
+
+    ts = TimestampType()
+    schema = StructType([
+        StructField("i", LongType()),
+        StructField("m", MapType(StringType(), LongType())),
+        StructField("ats", ArrayType(ts)),
+        StructField("st", StructType([
+            StructField("t", ts),
+            StructField("mb", MapType(IntegerType(), BinaryType())),
+        ])),
+        StructField("aab", ArrayType(ArrayType(BinaryType()))),
+        StructField("ast", ArrayType(StructType([
+            StructField("k", StringType()), StructField("t", ts),
+        ]))),
+        StructField("ts", ts),
+        StructField("d", DoubleType()),
+    ])
+
+    def row(i):
+        t = dt.datetime(2024, 3, 1, 12, tzinfo=dt.timezone.utc) + dt.timedelta(
+            hours=7 * i, microseconds=i
+        )
+        return {
+            "i": i,
+            "m": None if i % 6 == 5
+            else [(f"k{j}", i * 10 + j) for j in range(i % 3)],
+            "ats": None if i % 7 == 6 else [t, None, t + dt.timedelta(days=1)],
+            "st": None if i % 5 == 4 else {
+                "t": t, "mb": [(i, bytes([i % 256, 0, 255])), (i + 1, None)],
+            },
+            "aab": [[bytes([i % 256]), None], []] if i % 4 else None,
+            "ast": [{"k": f"s{i}", "t": None if i % 3 == 0 else t}],
+            "ts": None if i % 8 == 3 else t,
+            "d": None if i % 9 == 2 else i * 0.5,
+        }
+
+    target = to_arrow_schema(schema)
+    batches = [
+        pa.RecordBatch.from_pylist(
+            [row(i) for i in range(lo, hi)], schema=target
+        )
+        for lo, hi in ((0, 11), (11, 25))
+    ]
+    pins = {  # zone: (shard digest, ts bounds, md5 of the bloom bits)
+        "UTC": ("97e39a853e5c43e3d57cb0b6006ba212",
+                ["2024-03-01 12:00:00", "2024-03-08 12:00:00.000024"],
+                "306d4e74a427b584701bbf940ea0f22b"),
+        "America/Chicago": (
+            "d6672b4d074638aa9ecad5abfe2a6fe0",
+            ["2024-03-01 06:00:00", "2024-03-08 06:00:00.000024"],
+            "a54a35c6e4759d2d4e7c2730dad5f2e4",
+        ),
+    }
+    old_tz = os.environ.get("TZ")
+    try:
+        for tz, (digest, ts_bounds, bloom_md5) in pins.items():
+            os.environ["TZ"] = tz
+            time.tzset()
+            p = str(tmp_path / tz.replace("/", "_"))
+            w = MS.ManifestShardWriter(
+                {"path": p, "bloom_columns": "i,ts,m"}, schema, overwrite=False
+            )
+            msg = w.write(iter(batches))
+            assert msg.shard == f"shard-{digest}.jsonl.gz"
+            assert msg.n_rows == 25 and msg.trunc is None
+            assert msg.stats == {
+                "d": [0.0, 12.0], "i": [0, 24], "ts": ts_bounds,
+            }
+            assert msg.nulls == {"d": 3, "i": 0, "ts": 3}
+            bits = {c: b["bits"] for c, b in msg.blooms.items()}
+            assert sorted(bits) == ["i", "m", "ts"]
+            assert hashlib.md5(
+                json.dumps(bits, sort_keys=True).encode()
+            ).hexdigest() == bloom_md5
+            w.commit([msg])
+            got = (
+                registered.read.format(MS.FORMAT_NAME).option("path", p)
+                .load().orderBy("i").collect()
+            )
+            assert [r["i"] for r in got] == list(range(25))
+            assert got[1]["m"] == {"k0": 10} and got[5]["m"] is None
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+
+
+def test_tz_timestamp_bounds_hold_across_dst_fall_back(
+    tmp_path, arrow_batches
+):
+    """tz-aware timestamps are recorded as local wall time, and in a
+    DST fall-back hour the later instant can read earlier: 06:30Z is
+    01:30 CDT and 07:10Z is 01:10 CST. The bounds must be the min and
+    max of the wall-time values, or an equality probe for a row the
+    shard holds (01:10) is refuted, in both codecs."""
+    import datetime as dt
+    import time
+
+    from pyspark.sql.types import StructField, StructType, TimestampType
+
+    schema = StructType([StructField("ts", TimestampType())])
+    utc = dt.timezone.utc
+    rows = [(dt.datetime(2024, 11, 3, 6, 30, tzinfo=utc),),
+            (dt.datetime(2024, 11, 3, 7, 10, tzinfo=utc),)]
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/Chicago"
+    time.tzset()
+    try:
+        for cls in (MS.ManifestShardWriter, MS.ManifestParquetShardWriter):
+            w = cls({"path": str(tmp_path / cls.__name__)}, schema, False)
+            msg = w.write(arrow_batches(schema, rows))
+            assert msg.stats["ts"] == [
+                "2024-11-03 01:10:00", "2024-11-03 01:30:00",
+            ]
+            entry = {"stats": msg.stats, "nulls": msg.nulls, "n_rows": 2}
+            held = dt.datetime(2024, 11, 3, 1, 10)
+            assert MS._shard_admits_eq(entry, "ts", held)
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
 
 
 def test_arrow_write_fallback_selection(registered, tmp_path):
-    """Schemas outside the byte-identity allowlist take the row path:
-    maps anywhere, NESTED tz-aware timestamps; arrow_write=false forces
-    it."""
+    """There is no fallback: every schema, maps and nested tz-aware
+    timestamps included, gets the one Arrow writer class of its codec,
+    in batch and in stream."""
+    from pyspark.sql.datasource import (
+        DataSourceArrowWriter, DataSourceStreamArrowWriter,
+    )
     from pyspark.sql.types import (
-        ArrayType, LongType, MapType, StringType, StructField, StructType,
-        TimestampType,
+        ArrayType, BinaryType, DateType, DecimalType, LongType, MapType,
+        StringType, StructField, StructType, TimestampType,
     )
 
-    ds = MS.ManifestShardDataSource(options={"path": str(tmp_path)})
-    ok = StructType([StructField("i", LongType())])
-    assert isinstance(ds.writer(ok, False), MS.ManifestArrowShardWriter)
-    m = StructType([StructField("m", MapType(StringType(), LongType()))])
-    w = ds.writer(m, False)
-    assert type(w) is MS.ManifestShardWriter
-    nested_ts = StructType(
-        [StructField("a", ArrayType(TimestampType()))]
+    schemas = [
+        StructType([StructField("i", LongType())]),
+        StructType([StructField("m", MapType(StringType(), LongType()))]),
+        StructType([StructField("a", ArrayType(TimestampType()))]),
+        StructType([StructField("ts", TimestampType())]),
+        StructType([StructField("st", StructType([
+            StructField("t", TimestampType()),
+            StructField("mb", MapType(LongType(), BinaryType())),
+        ]))]),
+        StructType(
+            [StructField("md", MapType(DateType(), DecimalType(5, 2)))]
+        ),
+    ]
+    jsonl = MS.ManifestShardDataSource(options={"path": str(tmp_path)})
+    parquet = MS.ManifestShardDataSource(
+        options={"path": str(tmp_path), "shard_format": "parquet"}
     )
-    assert type(ds.writer(nested_ts, False)) is MS.ManifestShardWriter
-    top_ts = StructType([StructField("ts", TimestampType())])
-    assert isinstance(
-        ds.writer(top_ts, False), MS.ManifestArrowShardWriter
-    )
-    forced = MS.ManifestShardDataSource(
-        options={"path": str(tmp_path), "arrow_write": "false"}
-    )
-    assert type(forced.writer(ok, False)) is MS.ManifestShardWriter
-    # streaming twin dispatches the same way
-    assert isinstance(
-        ds.streamWriter(ok, False), MS.ManifestShardStreamArrowWriter
-    )
-    assert type(forced.streamWriter(ok, False)) is MS.ManifestShardStreamWriter
+    for sch in schemas:
+        for ds, cls in ((jsonl, MS.ManifestShardWriter),
+                        (parquet, MS.ManifestParquetShardWriter)):
+            w = ds.writer(sch, False)
+            assert type(w) is cls and isinstance(w, DataSourceArrowWriter)
+            sw = ds.streamWriter(sch, False)
+            assert type(sw) is MS.ManifestShardStreamWriter
+            assert isinstance(sw, DataSourceStreamArrowWriter)
+            assert type(sw._inner) is cls
 
 
-def test_struct_columns_roundtrip_as_json_objects(registered, tmp_path):
-    """Nested struct values must serialize as JSON OBJECTS on BOTH
-    write paths (a Row is a tuple subclass — unnormalized it became a
-    JSON array, which every read path decoded as NULL; round-11 fix)."""
+def test_struct_columns_roundtrip_as_json_objects(
+    registered, tmp_path, arrow_batches
+):
+    """Nested struct values must serialize as JSON OBJECTS whether the
+    engine or a direct caller drives the writer (a Row is a tuple
+    subclass — serialized as-is it became a JSON array, which every
+    read path decoded as NULL)."""
     import gzip as _gzip
     import glob
     import json as _json
@@ -677,9 +886,14 @@ def test_struct_columns_roundtrip_as_json_objects(registered, tmp_path):
     spark = registered
     schema = "i long, st struct<a:long,b:string>, arr array<struct<c:long>>"
     df = spark.createDataFrame([(1, (7, "x"), [(9,)])], schema)
-    for arrow, sub in ((True, "a"), (False, "r")):
+    for engine, sub in ((True, "a"), (False, "r")):
         p = str(tmp_path / sub)
-        _land(spark, df.coalesce(1), p, arrow)
+        if engine:
+            _land(spark, df.coalesce(1), p)
+        else:
+            w = MS.ManifestShardWriter({"path": p}, df.schema, overwrite=False)
+            rows = [(1, {"a": 7, "b": "x"}, [{"c": 9}])]
+            w.commit([w.write(arrow_batches(df.schema, rows))])
         (f,) = glob.glob(p + "/shards/*.gz")
         line = _json.loads(_gzip.open(f, "rt").read())
         assert line["st"] == {"a": 7, "b": "x"}  # object, not array
@@ -695,12 +909,13 @@ def test_struct_columns_roundtrip_as_json_objects(registered, tmp_path):
 
 
 def test_streaming_sink_uses_arrow_writer(registered, tmp_path):
-    """The writeStream epoch path through the Arrow stream writer:
+    """The writeStream epoch path through the one Arrow stream writer:
     same manifest semantics, same replay no-op."""
+    from pyspark.sql.datasource import DataSourceStreamArrowWriter
+
     spark, p = registered, str(tmp_path / "saw")
-    w = MS.ManifestShardStreamArrowWriter(
-        {"path": p}, _df(spark, 1).schema
-    )
+    w = MS.ManifestShardStreamWriter({"path": p}, _df(spark, 1).schema)
+    assert isinstance(w, DataSourceStreamArrowWriter)
     import pyarrow as pa
 
     batch = pa.record_batch(
@@ -723,18 +938,62 @@ def test_streaming_sink_uses_arrow_writer(registered, tmp_path):
 
 
 def test_arrow_write_nan_floats_keep_shard_admitted(registered, tmp_path):
-    """A float column containing NaN records NO min/max on the Arrow
-    path (NaN ordering is engine-specific) — the shard must stay
-    admitted on every probe of that column."""
+    """A float column containing NaN records NO min/max (Spark sorts
+    NaN above every double, Python compares it false both ways) — the
+    shard must stay admitted on every probe of that column, whatever
+    else the schema holds (here a map): a [1.0, 9.0] bound would make
+    a pushdown read of ``d > 100`` drop the NaN row."""
     spark, p = registered, str(tmp_path / "nan1")
     df = spark.createDataFrame(
-        [(1, 1.0), (2, float("nan")), (3, 9.0)], "i long, d double"
+        [(1, 1.0, {"a": 1}), (2, float("nan"), None), (3, 9.0, {})],
+        "i long, d double, m map<string,int>",
     )
-    _land(spark, df.coalesce(1), p, True)
+    _land(spark, df.coalesce(1), p)
     (shard,) = MS.read_manifest_dict(p)["shards"]
     assert "d" not in (shard.get("stats") or {})  # poisoned: no bounds
     assert shard["stats"]["i"] == [1, 3]          # others unaffected
     assert MS._shard_admits_range(shard, "d", 100.0, 200.0)  # conservative
+    # the pushdown reader returns what plain Spark and read_manifest do
+    want = df.filter("d > 100").count()
+    assert want == 1
+    assert MS.read_manifest(spark, p).filter("d > 100").count() == want
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    try:
+        got = (
+            spark.read.format(MS.FORMAT_NAME).option("path", p)
+            .option("pushdown", "true").load().filter("d > 100").count()
+        )
+    finally:
+        spark.conf.unset("spark.sql.python.filterPushdown.enabled")
+    assert got == want
+
+
+def test_map_keys_of_non_json_types_roundtrip(registered, tmp_path):
+    """Map keys json.dumps cannot take (date, timestamp, decimal,
+    binary) are written as their ``_json_default`` strings and parsed
+    back to the declared key type by the DataSource reader."""
+    import datetime as dt
+    from decimal import Decimal
+
+    spark, p = registered, str(tmp_path / "mk1")
+    schema = (
+        "id long, md map<date,decimal(5,2)>, mt map<timestamp,int>, "
+        "mc map<decimal(5,2),string>, mb map<binary,long>"
+    )
+    rows = [
+        (1, {dt.date(2024, 2, 29): Decimal("1.25")},
+         {dt.datetime(2024, 1, 2, 3, 4, 5, 6): 7},
+         {Decimal("3.50"): "x"}, {bytes([0, 255]): 9}),
+        (2, {dt.date(2023, 1, 1): None}, None, {}, None),
+    ]
+    df = spark.createDataFrame(rows, schema)
+    _land(spark, df.coalesce(1), p)
+    got = sorted(
+        tuple(r)
+        for r in spark.read.format(MS.FORMAT_NAME).option("path", p)
+        .load().collect()
+    )
+    assert got == sorted(tuple(r) for r in df.collect())
 
 
 # -- recorded table schema (Delta metaData shape) --------------------------
@@ -816,10 +1075,11 @@ def test_schema_stamp_is_o_delta(registered, tmp_path):
     assert MS.table_schema(p, version=2) is not None
 
 
-def test_streaming_epochs_record_schema(registered, tmp_path):
+def test_streaming_epochs_record_schema(registered, tmp_path, arrow_batches):
     spark, p = registered, str(tmp_path / "rs4")
-    w = MS.ManifestShardStreamWriter({"path": p}, _df(spark, 1).schema)
-    m = w.write(iter([(1, "x")]))
+    schema = _df(spark, 1).schema
+    w = MS.ManifestShardStreamWriter({"path": p}, schema)
+    m = w.write(arrow_batches(schema, [(1, "x")]))
     w.commit([m], batchId=0)
     assert [f.name for f in MS.table_schema(p).fields] == ["id", "s"]
     # table_changes without a schema rides the recorded one
