@@ -32,6 +32,10 @@ from .textstats import HASH_MOD, tokens, word_shingles
 # mixes are safe under ANSI arithmetic (no silent/throwing overflow).
 _P31 = 2_147_483_647
 _MIX_SEED = 0xC0FFEE5EED
+#: largest batch-batch edge count near_dedup_incremental clusters with
+#: the exact driver union-find; larger graphs take the exact
+#: distributed star contraction (neither path under-merges)
+_DRIVER_CLUSTER_MAX_EDGES = 1_000_000
 
 
 def normalized_text(col, lower: bool = True):
@@ -801,9 +805,13 @@ def near_dedup_incremental(
     )
     bb_edges = pairs.filter(~F.col("b_is_corpus")).select("id_a", "id_b")
     # Exact driver union-find only when the RESIDUAL graph is provably
-    # small; otherwise the scale-safe min-propagation (no collect).
-    n_bb = bb_edges.count()
-    members = cluster_representatives(bb_edges, small_graph=n_bb <= 1_000_000)
+    # small; otherwise exact star contraction (no collect). Bounded
+    # min-propagation would under-merge a duplicate chain longer than
+    # its rounds.
+    if bb_edges.count() <= _DRIVER_CLUSTER_MAX_EDGES:
+        members = cluster_representatives(bb_edges, small_graph=True)
+    else:
+        members = cluster_representatives(bb_edges, diameter_unknown=True)
     # Transitive corpus poisoning: a batch doc connected to the corpus
     # only THROUGH other batch docs is still dropped (its component
     # contains a corpus doc), matching the global near_dedup rule.

@@ -26,7 +26,7 @@ celebrity-vertex skew from exploding the intermediate at 100 TB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..checkpointing import pin
@@ -419,17 +419,60 @@ def connected_components_converged(
     return labels, rounds
 
 
+def _star_round(e: DataFrame, obs) -> DataFrame:
+    """One large-star + small-star round over canonical edges
+    ``e(a, b)`` (a < b; duplicates allowed), as the node-keyed frame
+    ``(node, parent)`` the round pins: one ``(b, a)`` row per distinct
+    output edge and one ``(a, NULL)`` marker per parent, with ``obs``
+    counting the rows of nodes that hold more than one row. Shared by
+    :func:`connected_components_star` and ``tools/gen_plans.py``."""
+    # large-star: m = min(Γ(u) ∪ {u}) from ONE partitioning of the
+    # neighbour list on u; (m, v) for v > u leaves the same partition
+    nbrs = e.select("a", "b").union(e.select("b", "a")).toDF("u", "v")
+    u_min = F.least(F.min("v").over(Window.partitionBy("u")), F.col("u"))
+    large = (
+        nbrs.withColumn("m", u_min)
+        .filter(F.col("v") > F.col("u"))
+        # m <= u < v: already canonical; duplicates are left to the
+        # node-keyed dedup below
+        .select(F.col("m").alias("a"), F.col("v").alias("b"))
+    )
+    # small-star on b: m = min of b's smaller neighbours. A row with
+    # a != m emits (m, a); the row(s) holding m itself emit (m, b) and
+    # m's marker — as node-keyed rows, one per edge endpoint below
+    m = F.col("m")
+
+    def at(node, parent):
+        return F.struct(node.alias("node"), parent.alias("parent"))
+
+    rows = (
+        large.withColumn("m", F.min("a").over(Window.partitionBy("b")))
+        .select(F.inline(
+            F.when(F.col("a") != m, F.array(at(F.col("a"), m))).otherwise(F.array(
+                at(F.col("b"), m), at(m, F.lit(None).cast(e.schema["a"].dataType))
+            ))
+        ))
+        # ONE exchange keyed by node: the distinct and the per-node
+        # row count both run inside its partitions
+        .repartition("node")
+        .distinct()
+        .withColumn("n_rows", F.count(F.lit(1)).over(Window.partitionBy("node")))
+    )
+    n_split = F.count(F.when(F.col("n_rows") > 1, 1)).alias("n_split")
+    return rows.observe(obs, n_split).select("node", "parent")
+
+
 def connected_components_star(
     edges: DataFrame, max_iters: int = 50, assume_canonical: bool = False
 ) -> tuple:
     """Connected components by alternating large-star/small-star
     contraction (Kiveris et al., "Connected Components in MapReduce
     and Beyond", SoCC 2014). Returns (labels, rounds_used) where one
-    round = one large-star + one small-star phase; at the fixpoint the
-    edge set is a star forest with every node attached directly to its
-    component's minimum id — the same labels min-label propagation
-    converges to, reached in O(log² n) rounds (O(log d) in practice)
-    instead of O(diameter).
+    round = one large-star + one small-star phase; the operator stops
+    on the first round whose output is a star forest with every node
+    attached directly to its component's minimum id — the same labels
+    min-label propagation converges to, reached in O(log² n) rounds
+    (O(log d) in practice) instead of O(diameter).
 
     This is the adversarial-diameter answer the min-propagation
     variants (:func:`connected_components`, the 100-TB caveat in its
@@ -439,26 +482,43 @@ def connected_components_star(
     the MINIMUM of its current neighborhood, halving distances-to-min
     rather than walking them.
 
-    Phase semantics on the canonical edge set E (a < b, deduplicated):
+    Phase semantics on the canonical edge set E (a < b):
 
     - large-star: for each node u, with m = min(Γ(u) ∪ {u}), emit
-      (v, m) for every neighbor v > u. Each canonical edge is seen
+      (m, v) for every neighbor v > u. Each canonical edge is seen
       from its smaller endpoint, so |E| never grows.
     - small-star: for each node u over its smaller neighbors
-      S = {v ∈ Γ(u), v < u}, with m = min(S), emit (v, m) for v ∈ S
-      and (u, m). Self-loops are dropped after canonicalization.
+      S = {v ∈ Γ(u), v < u}, with m = min(S), emit (m, v) for v ∈ S
+      and (m, u). Self-loops are dropped.
 
-    Scale shape: each phase is ONE groupBy(node).min + one
-    co-partitioned join back to the neighbor list — O(E) shuffle per
-    phase, no per-node neighbor collection (hot vertices aggregate,
-    never materialize adjacency arrays). Each round's edge set is
-    eagerly checkpointed (lineage truncation) and the fixpoint test is
-    exact: equal cardinality + empty anti-join against the previous
-    round's set, one small job per round.
+    Scale shape: each phase is ONE exchange — a window min over the
+    neighbor list partitioned by the grouping node, emitting from the
+    same partition, with no join back and no ``distinct`` between the
+    phases (duplicate edges only make the next phase emit duplicates).
+    Hot vertices are never held as adjacency arrays: a hub's rows sit
+    in the window's spillable partition buffer. The round's dedup is
+    the third exchange, keyed by node: one ``(node=b, parent=a)`` row
+    per edge plus a ``(node=a, parent=NULL)`` marker, deduplicated
+    inside the node partitions, and eagerly checkpointed (lineage
+    truncation; ``_star_round`` builds the round).
 
-    Contract: labels are returned ONLY from a verified fixpoint — if
-    ``max_iters`` rounds pass without one, the call raises rather than
-    returning a partial contraction (whose labels would not be
+    Stopping rule: an Observation on that frame counts rows of nodes
+    holding more than one row — a node with two parents, or one that
+    is both a parent and a child. Zero means every node is either a
+    root (its marker only) or a leaf under exactly one root: the edge
+    set is a star forest whose roots sit below their leaves. Such
+    a set is a fixpoint of both phases (large-star re-emits each
+    root's leaves from the root, small-star each leaf's root edge),
+    and since contraction preserves components, each star's root is
+    its component's minimum. The test rides the round's own
+    checkpoint, so there is no count, no comparison against the
+    previous round and no confirming round: the operator returns one
+    round earlier than a compare-with-previous fixpoint test would
+    (in the same round when the input already is such a star forest).
+
+    Contract: labels are returned ONLY from a verified star forest —
+    if ``max_iters`` rounds pass without one, the call raises rather
+    than returning a partial contraction (whose labels would not be
     component minima). ``rounds_used == max_iters`` in a successful
     return therefore means "converged on the final round", never
     "budget exhausted".
@@ -482,51 +542,14 @@ def connected_components_star(
         .distinct()
         .transform(pin)
     )
-    # memoized across rounds: each round compares |small| against the
-    # PREVIOUS round's cardinality; the cardinality itself rides the
-    # round's eager checkpoint via an Observation (the kcore pattern),
-    # so NO count job runs per round — r12: the separate count() job
-    # after each pin was pure scheduling overhead on an already-
-    # materialized frame.
-    n_prev = e.count()
-    rounds = 0
-    for _round_i in range(max_iters):
-        # large-star: group full neighborhoods (both directions)
-        nbrs = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-            e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        mins = nbrs.groupBy("u").agg(F.least(F.min("v"), F.col("u")).alias("m"))
-        large = (
-            nbrs.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            # m = min(Γ(u) ∪ {u}) ≤ u < v, so (m, v) is already canonical
-            .select(F.col("m").alias("a"), F.col("v").alias("b"))
-            .distinct()
-        )
-        # small-star: group each node's smaller neighbors (canonical
-        # edges seen from their larger endpoint)
-        lo = large.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        smins = lo.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            lo.join(smins, "u")
-            .select(F.col("m").alias("a"), F.col("v").alias("b"))
-            .unionByName(
-                smins.select(F.col("m").alias("a"), F.col("u").alias("b"))
-            )
-            .filter(F.col("a") != F.col("b"))
-            .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-            .distinct()
-        )
-        obs = Observation(f"star_round_{_round_i}")
-        small = small.observe(obs, F.count(F.lit(1)).alias("n")).transform(pin)
-        rounds += 1
-        n_small = obs.get["n"]
-        same_size = n_small == n_prev
-        n_prev = n_small
-        if same_size and small.join(e, ["a", "b"], "left_anti").isEmpty():
-            e = small
+    for rounds in range(1, max_iters + 1):
+        obs = Observation(f"star_round_{rounds}")
+        forest = _star_round(e, obs).transform(pin)
+        if obs.get["n_split"] == 0:
             break
-        e = small
+        e = forest.filter(F.col("parent").isNotNull()).select(
+            F.col("parent").alias("a"), F.col("node").alias("b")
+        )
     else:
         # Exhausting the budget is an ERROR, not a result: a partial
         # contraction is NOT a star forest, so the label read-out below
@@ -534,18 +557,16 @@ def connected_components_star(
         # to guess non-convergence from rounds == max_iters — ambiguous,
         # because legitimate convergence ON the final round returns the
         # same count. The operator now owns the contract: labels are
-        # returned only from a verified fixpoint.
+        # returned only from a verified star forest.
         raise RuntimeError(
             f"star contraction did not reach a fixpoint in {max_iters} "
             "rounds — raise max_iters (convergence is O(log d) rounds, "
             "so this means a pathologically deep graph or a budget far "
             "below log2(diameter))"
         )
-    # fixpoint edge set is a star forest: (component_min, member)
-    labels = (
-        e.select(F.col("b").alias("node"), F.col("a").alias("label"))
-        .unionByName(e.select(F.col("a").alias("node"), F.col("a").alias("label")))
-        .distinct()
+    # star forest: one row per node — a leaf under its root, or a root
+    labels = forest.select(
+        "node", F.coalesce("parent", "node").alias("label")
     )
     return labels, rounds
 

@@ -357,7 +357,7 @@ def near_dedup_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         "large-star/small-star contraction (Kiveris et al. SoCC'14, "
         "operators/graph.py::connected_components_star) instead of the "
         "guarded driver union-find or O(diameter) min-propagation — "
-        "O(log d) rounds of O(E)-shuffle groupBy+join, no driver "
+        "O(log d) rounds of three O(E) exchanges each, no driver "
         "collection, no round-count tuning, so a filament-shaped "
         "duplicate cluster (chained paraphrases A~B~C~…) can't blow "
         "the round budget. Output is the full component map (member, "
@@ -393,8 +393,7 @@ def near_dedup_star_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels, _rounds = G.connected_components_star(edges, assume_canonical=True)
     # component size via count() OVER (PARTITION BY label): one pass
     # over the labels instead of groupBy + join-back — the same device
-    # as duplicate_ngram_fraction's dfreq (r12 wave 1); also avoids
-    # re-running the label read-out union+distinct once per consumer.
+    # as duplicate_ngram_fraction's dfreq (r12 wave 1).
     return labels.select(
         F.col("node").alias("doc_id"),
         F.col("label").alias("rep_id"),

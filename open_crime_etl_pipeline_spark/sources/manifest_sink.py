@@ -2653,6 +2653,59 @@ def _table_codec(man: dict | None) -> str:
     return "jsonl"
 
 
+def _json_readable(dt):
+    """``dt`` with every map key typed string, at any depth: the only
+    key type Spark's JSON source reads. :func:`_json_restored` parses
+    the keys back."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.MapType):
+        return T.MapType(
+            T.StringType(), _json_readable(dt.valueType), dt.valueContainsNull
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_json_readable(dt.elementType), dt.containsNull)
+    if isinstance(dt, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _json_readable(f.dataType), f.nullable, f.metadata)
+            for f in dt.fields
+        ])
+    return dt
+
+
+def _json_restored(c, dt):
+    """Column ``c``, read from jsonl shards as ``_json_readable(dt)``,
+    back at ``dt``: map keys parse from the strings
+    :func:`_py_converter` writes — base64 for binary, canonical JSON
+    text for array and struct keys, the ISO or number text for the
+    rest."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    if _json_readable(dt) == dt:
+        return c
+    if isinstance(dt, T.ArrayType):
+        return F.transform(c, lambda x: _json_restored(x, dt.elementType))
+    if isinstance(dt, T.StructType):
+        return F.when(c.isNotNull(), F.struct(*[
+            _json_restored(c[f.name], f.dataType).alias(f.name)
+            for f in dt.fields
+        ]))
+    kt = dt.keyType
+
+    def key(k):
+        if isinstance(kt, T.BinaryType):
+            return F.unbase64(k)
+        if isinstance(kt, (T.ArrayType, T.StructType)):
+            return F.from_json(k, kt)
+        return k.cast(kt)
+
+    return F.transform_values(
+        F.transform_keys(c, lambda k, _v: key(k)),
+        lambda _k, v: _json_restored(v, dt.valueType),
+    )
+
+
 def _spark_read_shard_files(spark, files: list[str], schema,
                             with_file: bool = False):
     """ONE DataFrame over a shard file list, dispatching per-shard by
@@ -2676,13 +2729,18 @@ def _spark_read_shard_files(spark, files: list[str], schema,
     if js_files:
         r = spark.read
         if schema is not None:
-            r = r.schema(schema)
+            r = r.schema(_json_readable(schema))
         frames.append(r.json(js_files))
     if with_file:
         frames = [
             f.withColumn("__dv_file", F.col("_metadata.file_name"))
             for f in frames
         ]
+    if js_files and schema is not None and _json_readable(schema) != schema:
+        frames[-1] = frames[-1].withColumns({
+            f.name: _json_restored(F.col(f.name), f.dataType)
+            for f in schema.fields
+        })
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f)

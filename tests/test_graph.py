@@ -226,7 +226,7 @@ def test_star_cc_logarithmic_rounds_on_path(spark):
     rows = labels.collect()
     assert len(rows) == 64
     assert all(r.label == 0 for r in rows)
-    assert rounds <= 10  # log2(63) ≈ 6; measured 7 incl. detection
+    assert rounds <= 10  # log2(63) ≈ 6; measured 6 (stops on the star forest)
 
 
 def test_star_cc_raises_on_budget_exhaustion(spark):
@@ -260,6 +260,101 @@ def test_star_cc_handles_duplicates_selfloops_orientation(spark):
     assert sorted((r.node, r.label) for r in labels.collect()) == [
         (2, 2), (3, 2), (4, 2), (5, 5), (9, 5)
     ]
+
+
+def _union_find_labels(edges):
+    """Per-node component minimum, by a driver union-find."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+def test_star_cc_three_node_path_converges_in_one_round(spark):
+    """Round 1 turns 1-2-3 into the star {1: 2, 3}; the operator sees
+    the star forest on that round's own checkpoint and stops, with no
+    round spent confirming that nothing changes."""
+    df = spark.createDataFrame([(1, 2), (2, 3)], "a long, b long")
+    labels, rounds = G.connected_components_star(df)
+    assert rounds == 1
+    assert sorted(map(tuple, labels.collect())) == [(1, 1), (2, 1), (3, 1)]
+
+
+def test_star_cc_jobs_start_only_inside_round_pins(spark, jobs_started_by, monkeypatch):
+    """With canonical input every Spark job of the operator runs inside
+    a round's pin — the fixpoint test is an Observation on the pinned
+    frame, not a count or an anti-join — and a round is its three
+    exchanges plus the checkpoint: at most 4 jobs."""
+    import uuid
+
+    from open_crime_etl_pipeline_spark.checkpointing import pin
+
+    sc = spark.sparkContext
+    groups = []
+
+    def pin_in_own_group(df, eager=True):
+        outer = sc.getLocalProperty("spark.jobGroup.id")
+        groups.append(f"pin-{uuid.uuid4().hex}")
+        sc.setJobGroup(groups[-1], groups[-1])
+        try:
+            return pin(df, eager)
+        finally:
+            sc.setJobGroup(outer, outer)
+
+    edges = pin(spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "a long, b long"
+    ))
+    monkeypatch.setattr(G, "pin", pin_in_own_group)
+    out = []
+    outside = jobs_started_by(lambda: out.append(
+        G.connected_components_star(edges, assume_canonical=True)
+    ))
+    labels, rounds = out[0]
+    assert outside == []
+    tracker = sc.statusTracker()
+    per_round = [len(tracker.getJobIdsForGroup(g)) for g in groups]
+    assert len(per_round) == rounds >= 2
+    assert all(1 <= n <= 4 for n in per_round), per_round
+    assert {r.label for r in labels.collect()} == {0}
+
+
+def test_near_dedup_star_components_builds_in_few_jobs(spark, sf_dir, jobs_started_by):
+    """Building the query (LSH pairs, verify, star contraction) starts
+    at most 12 Spark jobs; the per-round count + anti-join fixpoint
+    test and its confirming round took 28."""
+    from open_crime_etl_pipeline_spark.queries.registry import all_specs
+
+    fn = all_specs()["near_dedup_star_components"].fn
+    out = []
+    jobs = jobs_started_by(lambda: out.append(fn(spark, sf_dir)))
+    assert len(jobs) <= 12, len(jobs)
+    assert out[0].count() > 0
+
+
+def test_star_cc_hub_star_with_hanging_path_matches_union_find(spark):
+    """A 5,000-leaf star whose hub has the LARGEST id, with a 10-node
+    path hung off one leaf: round 1 gives the hub 5,000 parents (the
+    hot vertex in small-star's partition, and a node the stopping rule
+    must see as split) and the path needs further rounds."""
+    hub = 20_000
+    edges = [(leaf, hub) for leaf in range(5_000)]
+    path = [2_500] + list(range(hub + 1, hub + 11))
+    edges += list(zip(path, path[1:]))
+    df = spark.createDataFrame(edges, "a long, b long")
+    labels, rounds = G.connected_components_star(df)
+    got = {r.node: r.label for r in labels.collect()}
+    assert got == _union_find_labels(edges)
+    assert set(got.values()) == {0} and len(got) == 5_011
+    assert rounds >= 2
 
 
 class TestTriangleOrientedPin:

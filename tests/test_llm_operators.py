@@ -646,6 +646,36 @@ def test_incremental_near_dedup_collect_bounded_by_batch_edges(spark, monkeypatc
     assert seen_edge_counts and all(n <= 1 for n in seen_edge_counts), seen_edge_counts
 
 
+def test_incremental_near_dedup_large_residual_merges_whole_chain(spark, monkeypatch):
+    """Past the driver union-find's edge limit the batch-batch graph is
+    clustered by exact star contraction. A filament batch: 40-word
+    windows shifted 5 words along one run of distinct words, so
+    neighbours share 33 of 43 shingles (Jaccard 0.77) and documents two
+    apart 28 of 48 (0.58, below the threshold). The chain
+    0-100-101-102-103-104-105-50 has diameter 7, past the 5 rounds of
+    bounded min-propagation, which would keep both 0 and 50."""
+    words = [f"w{i}" for i in range(75)]
+    ids = [0, 100, 101, 102, 103, 104, 105, 50]
+    batch = spark.createDataFrame(
+        [(d, " ".join(words[5 * k:5 * k + 40])) for k, d in enumerate(ids)],
+        "doc_id long, text string",
+    )
+    corpus = spark.createDataFrame(
+        [(900, "an unrelated corpus document about rivers and mountains")],
+        "doc_id long, text string",
+    )
+    idx = D.build_near_dup_index(corpus, "doc_id", "text", num_hashes=32)
+
+    def kept():
+        return sorted(r.doc_id for r in D.near_dedup_incremental(
+            idx, batch, "doc_id", "text", num_hashes=32, bands=16, threshold=0.7
+        ).select("doc_id").collect())
+
+    assert kept() == [0]  # driver union-find
+    monkeypatch.setattr(D, "_DRIVER_CLUSTER_MAX_EDGES", 0)
+    assert kept() == [0]  # star contraction
+
+
 def test_duplicate_ngram_fraction_hand_computed(spark):
     """Planted corpus with known shared 3-grams: a twin pair shares ALL
     shingles (dup_frac 1.0); a unique doc shares none (0.0); a doc

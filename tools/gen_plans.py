@@ -63,11 +63,11 @@ NOTES = {
     "jl_random_projection": "zero-shuffle scan-side projection: 8 fixed-order HOF folds against literal sign arrays; single parquet scan, 2-column ReadSchema",
     "exact_substring_dedup": "phase-1 gram hashing is pure HOF projection (no gram strings materialized); hash-frequency prefilter with partial_count below its exchange; gram strings built ONLY for surviving candidates; covered-span lag-window partitions by doc_id; reassembly = left-anti join on (doc, pos)",
     "bpe_multi_merge_rounds": "per-round pair groupBy has partial_count (shuffle bounded by distinct pairs, not corpus); argmax = TakeOrderedAndProject(limit=1); eager per-round checkpoint keeps round-4's plan equal to round-1's (no O(k^2) replay)",
-    "connected_components_star": "each star phase = ONE groupBy(node) min + a co-partitioned join back to the neighbor list — no collect_list of neighborhoods anywhere; eager checkpoint per round; exact fixpoint test via count + left-anti join",
+    "connected_components_star": "one round = three exchanges: large-star and small-star are each ONE window min over a node-partitioned neighbor list, emitting from the same partition (no join back, no distinct between phases, no collect_list of neighborhoods); the node-keyed dedup (edge rows + parent markers) is the third; the star-forest test is an Observation (CollectMetrics) on the frame the round checkpoints — no count, no anti-join, no confirming round",
     "gram_contamination_traintest": "both-sides hash prefilter (partial agg under one gh exchange) before any gram STRING exists; exact verify joins only candidate grams; per-test-doc rollup is the final small aggregate",
     "pca_top_component_projection": "gram partials reduce to ONE d^2-row exchange independent of N; trained component + mean re-enter as 64-double array literals; the projection itself is a zero-shuffle HOF fold over the scan (no Python, no join)",
     "quality_classifier_train_apply": "train = two partial-agg gradient reduces of 4 decimal sums each; the APPLY plan is shuffle-free — trained weights are plan literals, sigmoid scoring rides the token-count projection scan-side",
-    "near_dedup_star_components": "verified pair graph (LSH band equi-join + exact verify) is orders smaller than the corpus; each star round = groupBy-min + co-partitioned join with eager checkpoint; component sizes join O(components) rows",
+    "near_dedup_star_components": "verified pair graph (LSH band equi-join + exact verify) is orders smaller than the corpus; star contraction runs during the build (each round three exchanges into one eager checkpoint, stopping on the round that yields a star forest), so the plan reads the final round's checkpoint: labels are one projection of it, component sizes one count window over the label",
     "pq_adc_topk": "codebook (m*k rows) BROADCAST into every distance join; argmin = map-side struct-min partial agg (shuffle O(N*m) best-code rows, never the N*m*k candidate product); Lloyd means reduce in long (s,cid,pos) form; ADC scans CODES with a broadcast |Q|*m*k lookup table — corpus never shuffles on the query",
     "pca_whitening_top2": "same one-pass Gram reduce as the PCA projection (d^2-row exchange independent of N); TWO shuffle-free literal-array HOF folds project both whitened coordinates in a single scan; eigensolve + deflation are driver-local O(k*d^2)",
     "ivfpq_residual_adc_topk": "two-level index: coarse cells + residual PQ both train via broadcast-codebook struct-min partial aggs; the cell id rides the encode group key (functionally dependent on vec_id — no codes x assignment rejoin); the search join keys on (ccid,s,cid) — the ccid equi-join prunes 1-nprobe/kc of the code table BEFORE any distance arithmetic; per-(query,cell) ADC table broadcast; corpus never shuffles on the query",
@@ -201,7 +201,11 @@ def main() -> None:
                 .orderBy("e", "f", "t", "s")
                 .limit(1)
             )
-        # connected_components_star: one large-star + small-star phase
+        # connected_components_star: one round, built by the operator's
+        # own round builder
+        from pyspark.sql import Observation
+
+        from open_crime_etl_pipeline_spark.operators import graph as G
         from open_crime_etl_pipeline_spark.queries.graph import _copurchase_edges
 
         edges = _copurchase_edges(spark, sf)
@@ -210,26 +214,7 @@ def main() -> None:
             .filter(F.col("a") != F.col("b"))
             .distinct()
         )
-        nbrs = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-            e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        mins = nbrs.groupBy("u").agg(F.least(F.min("v"), F.col("u")).alias("m"))
-        large = (
-            nbrs.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("m").alias("a"), F.col("v").alias("b"))
-            .distinct()
-        )
-        lo = large.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        smins = lo.groupBy("u").agg(F.min("v").alias("m"))
-        return (
-            lo.join(smins, "u")
-            .select(F.col("m").alias("a"), F.col("v").alias("b"))
-            .unionByName(smins.select(F.col("m").alias("a"), F.col("u").alias("b")))
-            .filter(F.col("a") != F.col("b"))
-            .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-            .distinct()
-        )
+        return G._star_round(e, Observation("star_round"))
 
     PHASE = {
         "bpe_multi_merge_rounds",
